@@ -32,16 +32,10 @@ __version__ = "0.1.0"
 _PUBLIC = {
     "get_spark": ("basicocr_spark.session", "get_spark"),
     "extract_documents_sql": ("basicocr_spark.operators.extraction", "extract_documents_sql"),
-    "extract_documents_fused": ("basicocr_spark.operators.extraction", "extract_documents_fused"),
     "extract_documents_fused_arrow": (
         "basicocr_spark.operators.extraction",
         "extract_documents_fused_arrow",
     ),
-    "extract_documents_with_pdf_sql": (
-        "basicocr_spark.operators.extraction",
-        "extract_documents_with_pdf_sql",
-    ),
-    "extract_spans_flat": ("basicocr_spark.operators.extraction", "extract_spans_flat"),
     "flatten_extracted": ("basicocr_spark.operators.extraction", "flatten_extracted"),
     "ctc_greedy_decode": ("basicocr_spark.functions.ctc", "ctc_greedy_decode"),
     "correct_tokens": ("basicocr_spark.operators.correction", "correct_tokens"),

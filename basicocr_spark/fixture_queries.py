@@ -393,8 +393,6 @@ def _triad_fixture():
 
 def triad_extraction_fixture(spark, sf_dir):
     """The full north-rule triad in one pipeline: text + media + pdf spans extracted and stitched, span-for-span vs the reference."""
-    from .operators.extraction import extract_documents_with_pdf_sql, flatten_extracted
-
     docs, _ = _triad_fixture()
     docs_df = spark.createDataFrame(
         [(d, [(k, t, m, o) for k, t, m, o in spans]) for d, spans in docs],
@@ -409,8 +407,8 @@ def triad_extraction_fixture(spark, sf_dir):
         [(ref, content) for ref, _, content in _pdf_fixture()],
         "media_ref string, content binary",
     )
-    out = extract_documents_with_pdf_sql(
-        docs_df, logits_df, dict_df, FX.STOP_TERMS, pdf_blobs
+    out = extract_documents_sql(
+        docs_df, logits_df, dict_df, FX.STOP_TERMS, pdf_blobs=pdf_blobs
     )
     return flatten_extracted(out).select(
         "doc_id", "kind", "text", F.coalesce("media_ref", F.lit("")).alias("media_ref"), "order"

@@ -22,14 +22,6 @@ _WS_RE = R._WS_RE
 _NEG_CLASS_RE = R._NEG_CLASS_RE
 
 
-def _clean(series: pd.Series) -> pd.Series:
-    return (
-        series.str.replace(_TAG_RE, "", regex=True)
-        .str.replace(_WS_RE, " ", regex=True)
-        .str.strip()
-    )
-
-
 def make_vectorized_extractor(stop_terms: list[str]):
     stop_re = re.compile(R.stop_term_pattern(stop_terms)) if stop_terms else None
 

@@ -13,25 +13,24 @@ stitch      -> spans re-emitted in (doc_id, offset-rank) order; output
                tuple (kind, text, media_ref, order) is the north-rule
                equality surface.
 
-Three implementations, cross-checked span-for-span in tests:
+One production kernel plus two independent oracles, cross-checked
+span-for-span in tests:
 
-1. `extract_documents_sql` — the declarative Catalyst pipeline:
-   posexplode -> route by kind -> broadcast-join logits -> pure-SQL CTC
+1. `extract_documents_fused_arrow` — the production kernel: one
+   zero-shuffle mapInArrow pass. The list<struct> span column is
+   processed as flat Arrow child arrays (numpy repeat/lexsort/cumcount,
+   no per-span Python dicts); recognition + correction happen inside the
+   batch, as they would with a real model forward. Docs never straddle
+   partitions, so scaling efficiency is ~1 by construction.
+
+2. `extract_documents_sql` — the declarative Catalyst oracle:
+   explode -> route by kind -> broadcast-join logits -> pure-SQL CTC
    decode -> broadcast levenshtein correction -> re-aggregate with
    array_sort. Every dictionary-sized side is broadcast; the only
-   shuffle is the final groupBy(doc_id) re-aggregation.
+   shuffle is the final groupBy(doc_id) re-aggregation. With `pdf_blobs`
+   it adds the kind='pdf' layout-parse leg.
 
-2. `extract_documents_fused` — the zero-shuffle production shape: one
-   mapInPandas pass; recognition + correction happen inside the Arrow
-   batch (as they would with a real model forward), the span array never
-   leaves its row, docs never straddle partitions. Linear scan =>
-   scaling efficiency ~1 by construction.
-
-3. `extract_documents_fused_arrow` — same single-pass shape via
-   mapInArrow: the list<struct> span column is processed as flat Arrow
-   child arrays (numpy repeat/lexsort/cumcount, no per-span Python
-   dicts). ~2x the pandas kernel's steady-state throughput; this is the
-   flagship path benched for the N vs 4N criterion.
+3. `reference.extract_document` — the pure-Python oracle.
 """
 
 from __future__ import annotations
@@ -70,20 +69,6 @@ def _job_cache(token: str, builder):
     return cache
 
 
-def _broadcast_sides(df: DataFrame, logits_rows, dict_lines, stop_terms):
-    """Broadcast the dictionary-sized sides once + mint the per-job
-    worker-cache token. Shared by all three fused kernels."""
-    import uuid
-
-    sc = df.sparkSession.sparkContext
-    return (
-        sc.broadcast({ref: lg for ref, lg, *_ in logits_rows}),
-        sc.broadcast(dict_lines),
-        sc.broadcast(list(stop_terms)),
-        uuid.uuid4().hex,
-    )
-
-
 def resolve_recognizer(recognizer=None):
     """Recognizer-forward resolution — the model seam mirroring
     multimodal.resolve_decoder (reference: models/crnn.py:23-79 forward,
@@ -96,8 +81,8 @@ def resolve_recognizer(recognizer=None):
     downstream of the seam, so a production model supplies ONLY the
     forward pass.
 
-    An explicitly injected callable wins; else None, meaning the fused
-    kernels fall back to the broadcast fixture-logits lookup (the
+    An explicitly injected callable wins; else None, meaning the Arrow
+    kernel falls back to the broadcast fixture-logits lookup (the
     default implementation — it rides a Spark broadcast rather than
     being captured here, so the corpus-sized side is shipped once per
     executor, not pickled per task). Unlike resolve_decoder there is no
@@ -123,7 +108,7 @@ def crnn_forward_from_torchscript(model_path: str, fetch_decode=None):
     load at construction). Gated on torch being importable; this
     container ships no torch, so the factory raises at call time there —
     the protocol contract itself is tested with a fake forward
-    (test_extraction_e2e.py)."""
+    (test_recognizer_protocol.py)."""
     state: dict = {}
 
     def forward(refs):
@@ -176,11 +161,9 @@ def _worker_recognizer(
     b_logits, b_dict, b_stop, job_token, alphabet, max_cost, forward=None
 ):
     """Executor-side: (vectorized text extractor, memoized batched
-    recognize_batch). One definition for all three fused kernels
-    — the decode+correct memo semantics are part of the
-    cross-implementation equality surface, so they must not drift
-    between kernels. `forward` is the resolve_recognizer seam; None
-    means the broadcast fixture-logits lookup."""
+    recognize_batch) for the Arrow kernel. `forward` is the
+    resolve_recognizer seam; None means the broadcast fixture-logits
+    lookup."""
     from .boilerplate_vec import make_vectorized_extractor
 
     cache = _job_cache(
@@ -239,77 +222,14 @@ def _worker_recognizer(
     return cache["extract"], recognize_batch
 
 
-def recognizer_from_batch_fn(batch_fn):
-    """Lift a plain model-forward callable `list[media_ref] -> list[str]`
-    into the recognize_media recognizer protocol: the engine wraps it in
-    an Arrow-batched scalar pandas UDF (the Spark side — batching,
-    schema, column wiring — is handled here; the user writes ONLY the
-    forward pass, e.g. a torch CRNN batch inference keyed by ref or by
-    fetched bytes). Contract-tested against the logits-join path with
-    the fixture codec (test_multimodal.py)."""
-
-    def apply(media_spans: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        udf = pandas_udf(
-            lambda refs: pd.Series(batch_fn(refs.tolist()), dtype="object"),
-            "string",
-        )
-        return media_spans.withColumn("raw_text", udf(F.col("media_ref")))
-
-    return apply
-
-
-def recognize_media(
-    media_spans: DataFrame,
-    logits_df: DataFrame = None,
-    alphabet: str = R.DEFAULT_ALPHABET,
-    recognizer=None,
-) -> DataFrame:
-    """(.., media_ref) join broadcast logits -> raw recognized text via the
-    pure-JVM CTC decode expression. Refs missing from the logits table
-    decode to '' (the reference skips undecodable samples,
-    dataset.py:51-55 — here: empty recognition, row preserved).
-
-    `recognizer` is the real-model seam (reference: models/crnn.py:23-79
-    forward + demo.py:26-41): any callable `DataFrame -> DataFrame`
-    that appends `raw_text`; when given it REPLACES the logits join, so
-    a production CRNN plugs in with zero engine edits (see
-    recognizer_from_batch_fn for the convenience lift from a plain
-    batch-forward function)."""
-    if recognizer is not None:
-        return recognizer(media_spans)
-    if logits_df is None:
-        raise ValueError(
-            "recognize_media needs either a logits_df (fixture-logit CTC "
-            "path) or a recognizer= callable (real-model path)"
-        )
-    return (
-        media_spans.join(
-            F.broadcast(logits_df.select("media_ref", "logits")), "media_ref", "left"
-        )
-        .withColumn(
-            "raw_text",
-            F.when(F.col("logits").isNull(), F.lit("")).otherwise(
-                ctc_greedy_decode(F.col("logits"), alphabet)
-            ),
-        )
-        .drop("logits")
-    )
-
-
 def _stitch_spans(unioned: DataFrame, docs: DataFrame) -> DataFrame:
-    """Shared re-aggregation stitch for the SQL pipelines: array_sort on
-    the composite key (offset, kind, media_ref-or-'', text-or-'')
-    restores in-doc order deterministically regardless of shuffle
-    arrival order (order is carried by data, not partition layout, so
-    the plan stays correct under AQE re-planning); the rank-index
-    becomes `order`; zero-span docs dropped by the explode are restored
-    with empty arrays (fused pipelines and the oracle preserve them).
-    This is the cross-implementation equality surface — single source
-    of truth so the sort key cannot silently diverge between the SQL
-    variants."""
+    """Re-aggregation stitch for the SQL oracle: array_sort on the
+    composite key (offset, kind, media_ref-or-'', text-or-'') restores
+    in-doc order deterministically regardless of shuffle arrival order
+    (order is carried by data, not partition layout, so the plan stays
+    correct under AQE re-planning); the rank-index becomes `order`;
+    zero-span docs dropped by the explode are restored with empty arrays
+    (the Arrow kernel and the reference preserve them)."""
     agg = unioned.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(
@@ -317,13 +237,13 @@ def _stitch_spans(unioned: DataFrame, docs: DataFrame) -> DataFrame:
                     F.col("offset"),
                     # null-kind contract: out-of-contract null kind sorts
                     # as '' (data passes through untouched below) — same
-                    # `p[1] or ""` key as the reference and both kernels.
+                    # `p[1] or ""` key as the reference and the Arrow kernel.
                     # The isNotNull flags then break null-vs-'' ties
                     # (null first, False < True) so the struct comparison
                     # never reaches the raw data fields and the order is
-                    # identical to the kernels' explicit flag keys —
+                    # identical to the kernel's explicit flag keys —
                     # without them, Spark's nulls-first raw-field
-                    # comparison diverged from the kernels' stable sorts
+                    # comparison diverged from the kernel's stable sort
                     # on pathological same-key/different-nullness ties
                     F.coalesce("kind", F.lit("")).alias("kind_key"),
                     F.coalesce("media_ref", F.lit("")).alias("mref_key"),
@@ -372,8 +292,17 @@ def extract_documents_sql(
     stop_terms: list[str],
     alphabet: str = R.DEFAULT_ALPHABET,
     max_cost: int = 3,
+    pdf_blobs: DataFrame | None = None,
 ) -> DataFrame:
-    """Declarative Catalyst implementation. Returns EXTRACTED schema."""
+    """Declarative Catalyst implementation. Returns EXTRACTED schema.
+
+    `pdf_blobs` (media_ref, content binary) adds the north-rule triad's
+    third leg: kind='pdf' spans join the blob table -> Arrow layout
+    parse -> reading-order text, and leave the media route. pdf
+    spans whose ref is missing from the blob table (or whose blob doesn't
+    parse) emit '' like unknown media refs do (dataset.py:51-55
+    skip-semantics analog). Without it, kind='pdf' is just another
+    non-text kind and takes the media leg, as in the Arrow kernel."""
     spans = docs.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),
@@ -381,177 +310,63 @@ def extract_documents_sql(
         F.col("s.media_ref").alias("media_ref"),
         F.col("s.offset").alias("offset"),
     )
+    cols = ["doc_id", "kind", "out_text", "media_ref", "offset"]
 
     # null text normalizes to '' (oracle: `sp["text"] or ""`)
     text_done = spans.filter(F.col("kind") == "text").withColumn(
         "out_text", extract_main_text(F.coalesce(F.col("text"), F.lit("")), stop_terms)
     )
+    legs = [text_done]
 
     # routing is text vs non-text; out-of-contract kinds take the media
     # leg with their kind preserved (matches reference.extract_document).
     # eqNullSafe: schema declares kind non-null but parquet reads don't
     # enforce it — a null kind must route to the media leg like the
-    # fused kernels and the reference do, not vanish (plain != is null)
-    media = spans.filter(~F.col("kind").eqNullSafe("text"))
-    recognized = recognize_media(media, logits_df, alphabet)
+    # Arrow kernel and the reference do, not vanish (plain != is null)
+    not_media = F.col("kind").eqNullSafe("text")
+    if pdf_blobs is not None:
+        from .pdfparse import pdf_documents_text
+
+        pdf_texts = pdf_documents_text(pdf_blobs)  # (media_ref, text)
+        # no broadcast hint: unlike the dictionary/logits sides, a PDF blob
+        # corpus has no dictionary-size contract — forcing it past the
+        # broadcast limit is a driver OOM at scale. AQE picks broadcast when
+        # the parsed table is actually small.
+        legs.append(
+            spans.filter(F.col("kind") == "pdf")
+            .join(pdf_texts.withColumnRenamed("text", "parsed"), "media_ref", "left")
+            .withColumn("out_text", F.coalesce("parsed", F.lit("")))
+        )
+        not_media = not_media | F.col("kind").eqNullSafe("pdf")
+
+    # refs missing from the logits table decode to '' (the reference
+    # skips undecodable samples, dataset.py:51-55 — here: empty
+    # recognition, row preserved)
+    recognized = (
+        spans.filter(~not_media)
+        .join(F.broadcast(logits_df.select("media_ref", "logits")), "media_ref", "left")
+        .withColumn(
+            "raw_text",
+            F.when(F.col("logits").isNull(), F.lit("")).otherwise(
+                ctc_greedy_decode(F.col("logits"), alphabet)
+            ),
+        )
+    )
     # Correction operates on the distinct recognized vocabulary, then a
     # broadcast map-join rehydrates occurrences. Decoded text over this
     # alphabet is a single token (no whitespace in the alphabet).
     vocab = recognized.select(F.col("raw_text").alias("token")).filter(F.col("token") != "")
     corrections = correct_tokens(vocab, dict_df, max_cost=max_cost)
-    media_done = (
+    legs.append(
         recognized.withColumn("token", uniform(F.col("raw_text")))
         .join(F.broadcast(corrections), "token", "left")
         .withColumn("out_text", F.coalesce("corrected", F.col("token")))
-        .drop("token", "corrected", "raw_text")
     )
 
-    unioned = text_done.select("doc_id", "kind", "out_text", "media_ref", "offset").unionByName(
-        media_done.select("doc_id", "kind", "out_text", "media_ref", "offset")
-    )
-
+    unioned = legs[0].select(*cols)
+    for leg in legs[1:]:
+        unioned = unioned.unionByName(leg.select(*cols))
     return _stitch_spans(unioned, docs)
-
-
-def extract_documents_with_pdf_sql(
-    docs: DataFrame,
-    logits_df: DataFrame,
-    dict_df: DataFrame,
-    stop_terms: list[str],
-    pdf_blobs: DataFrame,
-    alphabet: str = R.DEFAULT_ALPHABET,
-    max_cost: int = 3,
-) -> DataFrame:
-    """The full north-rule triad in one extraction: text spans ->
-    boilerplate strip, media spans -> CTC recognition + correction,
-    kind='pdf' spans -> broadcast-join the blob table -> Arrow layout
-    parse -> reading-order text. Same composite-key array_sort stitch
-    as extract_documents_sql; pdf spans whose ref is missing from the
-    blob table (or whose blob doesn't parse) emit '' like unknown media
-    refs do (dataset.py:51-55 skip-semantics analog)."""
-    from .pdfparse import pdf_documents_text
-
-    spans = docs.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
-
-    text_done = spans.filter(F.col("kind") == "text").withColumn(
-        "out_text", extract_main_text(F.coalesce(F.col("text"), F.lit("")), stop_terms)
-    )
-
-    pdf_spans = spans.filter(F.col("kind") == "pdf")
-    pdf_texts = pdf_documents_text(pdf_blobs)  # (media_ref, text)
-    # no broadcast hint: unlike the dictionary/logits sides, a PDF blob
-    # corpus has no dictionary-size contract — forcing it past the
-    # broadcast limit is a driver OOM at scale. AQE picks broadcast when
-    # the parsed table is actually small.
-    pdf_done = pdf_spans.drop("text").join(
-        pdf_texts.withColumnRenamed("text", "parsed"), "media_ref", "left"
-    ).withColumn("out_text", F.coalesce("parsed", F.lit(""))).drop("parsed")
-
-    # null-safe routing: null/unknown kinds take the media leg (see
-    # extract_documents_sql)
-    media = spans.filter(
-        ~(F.col("kind").eqNullSafe("text") | F.col("kind").eqNullSafe("pdf"))
-    )
-    recognized = recognize_media(media, logits_df, alphabet)
-    vocab = recognized.select(F.col("raw_text").alias("token")).filter(F.col("token") != "")
-    corrections = correct_tokens(vocab, dict_df, max_cost=max_cost)
-    media_done = (
-        recognized.withColumn("token", uniform(F.col("raw_text")))
-        .join(F.broadcast(corrections), "token", "left")
-        .withColumn("out_text", F.coalesce("corrected", F.col("token")))
-        .drop("token", "corrected", "raw_text")
-    )
-
-    cols = ["doc_id", "kind", "out_text", "media_ref", "offset"]
-    unioned = (
-        text_done.select(*cols)
-        .unionByName(pdf_done.select(*cols))
-        .unionByName(media_done.select(*cols))
-    )
-    return _stitch_spans(unioned, docs)
-
-
-def extract_documents_fused(
-    docs: DataFrame,
-    logits_rows: list[tuple],
-    dict_lines: list[str],
-    stop_terms: list[str],
-    alphabet: str = R.DEFAULT_ALPHABET,
-    max_cost: int = 3,
-    recognizer=None,
-) -> DataFrame:
-    """Zero-shuffle fused pipeline: one mapInPandas over the documents
-    scan. The logits/dictionary fixtures ride a Spark broadcast (in
-    production the recognition model plugs in via `recognizer=`, the
-    resolve_recognizer forward protocol — one batched ref->logits call
-    per pandas batch's memo misses); per-batch memoization makes
-    correction cost proportional to the batch's distinct vocabulary."""
-    sides = _broadcast_sides(docs, logits_rows, dict_lines, stop_terms)
-    fwd = resolve_recognizer(recognizer)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extract_text_vec, recognize_batch = _worker_recognizer(
-            *sides, alphabet, max_cost, forward=fwd
-        )
-
-        for pdf in batches:
-            # flatten the batch's spans; the text side runs through the
-            # vectorized pandas kernel, media through the memoized decode
-            doc_ix: list[int] = []
-            offs: list[int] = []
-            kinds: list[str] = []
-            raw_texts: list[str | None] = []
-            refs: list[str | None] = []
-            for i, spans in enumerate(pdf["spans"]):
-                for sp in spans:
-                    doc_ix.append(i)
-                    offs.append(sp["offset"])
-                    kinds.append(sp["kind"])
-                    raw_texts.append(sp["text"])
-                    refs.append(sp["media_ref"])
-
-            n = len(doc_ix)
-            out_text: list[str | None] = [None] * n
-            kinds_arr = kinds
-            text_pos = [k for k in range(n) if kinds_arr[k] == "text"]
-            if text_pos:
-                series = pd.Series([raw_texts[k] for k in text_pos], dtype=object)
-                extracted = extract_text_vec(series)
-                for k, v in zip(text_pos, extracted.to_numpy()):
-                    out_text[k] = v
-            media_pos = [k for k in range(n) if kinds_arr[k] != "text"]
-            if media_pos:  # non-text -> media leg, ONE forward per batch
-                lookup = recognize_batch([refs[k] for k in media_pos])
-                for k in media_pos:
-                    out_text[k] = lookup[refs[k]]
-
-            # group back per doc; same composite order as the SQL
-            # pipeline's array_sort: (offset, kind, media_ref-or-'', text-or-'')
-            per_doc: list[list] = [[] for _ in range(len(pdf))]
-            for k in range(n):
-                per_doc[doc_ix[k]].append(
-                    (offs[k], kinds_arr[k], out_text[k], refs[k])
-                )
-            out_spans = []
-            for processed in per_doc:
-                processed.sort(key=lambda p: (p[0], p[1] or "", p[3] or "", p[2] or "",
-                                  p[1] is not None, p[3] is not None,
-                                  p[2] is not None))
-                out_spans.append(
-                    [
-                        {"kind": kind, "text": txt, "media_ref": mref, "order": rank}
-                        for rank, (_, kind, txt, mref) in enumerate(processed)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": out_spans})
-
-    return docs.mapInPandas(kernel, EXTRACTED_SPAN_SCHEMA)
 
 
 def extract_documents_fused_arrow(
@@ -563,18 +378,30 @@ def extract_documents_fused_arrow(
     max_cost: int = 3,
     recognizer=None,
 ) -> DataFrame:
-    """mapInArrow twin of extract_documents_fused (same output, pinned
-    by tests/test_extraction_e2e.py): the nested list<struct> span
-    column is decomposed into flat Arrow child arrays — no Python dicts
-    are ever materialized for the spans, the per-span flatten/regroup
-    loops of the pandas kernel become numpy repeat/lexsort/cumcount, and
-    the output list<struct> is rebuilt from offsets. Same zero-shuffle
-    single-pass shape; this exists because the nested-struct dict
-    marshalling is the pandas kernel's dominant cost at scale."""
+    """Zero-shuffle production kernel: one mapInArrow pass over the
+    documents scan. The nested list<struct> span column is decomposed
+    into flat Arrow child arrays — no Python dicts are ever materialized
+    for the spans, flatten/regroup are numpy repeat/lexsort/cumcount, and
+    the output list<struct> is rebuilt from offsets. The logits and
+    dictionary fixtures ride a Spark broadcast; in production the
+    recognition model plugs in via `recognizer=` (the resolve_recognizer
+    forward protocol — one batched ref->logits call per Arrow batch's
+    memo misses). Per-worker memoization makes correction cost
+    proportional to the distinct recognized vocabulary."""
+    import uuid
+
     import numpy as np
     import pyarrow as pa
 
-    sides = _broadcast_sides(docs, logits_rows, dict_lines, stop_terms)
+    sc = docs.sparkSession.sparkContext
+    # dictionary-sized sides broadcast once; the token keys the
+    # per-worker memo store to this job
+    sides = (
+        sc.broadcast({ref: lg for ref, lg, *_ in logits_rows}),
+        sc.broadcast(dict_lines),
+        sc.broadcast(list(stop_terms)),
+        uuid.uuid4().hex,
+    )
     fwd = resolve_recognizer(recognizer)
 
     out_type = pa.struct(
@@ -623,10 +450,10 @@ def extract_documents_fused_arrow(
                 lookup = recognize_batch(list(pd.unique(refs)))
                 out_text[media_mask] = refs.map(lookup).to_numpy()
 
-            # same composite order as the pandas kernel / SQL array_sort:
+            # same composite order as the SQL array_sort and the reference:
             # (doc, offset, kind-or-'', media_ref-or-'', text-or-'',
             #  then null-presence flags breaking null-vs-'' ties, null
-            #  first — keeps all four implementations in lockstep on
+            #  first — keeps the kernel and both oracles in lockstep on
             #  pathological same-key ties)
             text_key = out_text.fillna("").to_numpy()
             mref_key = mref.fillna("").to_numpy()
@@ -666,80 +493,3 @@ def flatten_extracted(extracted: DataFrame) -> DataFrame:
         F.col("s.order").alias("order"),
     )
 
-
-FLAT_SCHEMA = "doc_id string, kind string, text string, media_ref string, order int"
-
-
-def extract_spans_flat(
-    spans_flat: DataFrame,
-    logits_rows: list[tuple],
-    dict_lines: list[str],
-    stop_terms: list[str],
-    alphabet: str = R.DEFAULT_ALPHABET,
-    max_cost: int = 3,
-    n_partitions: int | None = None,
-    recognizer=None,
-) -> DataFrame:
-    """Flat-layout twin of the fused pipeline for corpora stored with one
-    row PER SPAN (doc_id, offset, kind, text, media_ref) instead of the
-    nested array shape. This is the W4 stitch exactly as surveyed:
-    repartitionByRange(doc_id) so no document straddles a partition,
-    sortWithinPartitions(doc_id, offset) so each partition arrives
-    doc-contiguous and offset-ordered, then one mapInPandas computes
-    `order` as a vectorized per-doc cumcount and processes every span
-    through the same vectorized kernels. No nested Arrow structs cross
-    the Python boundary, which is the nested variant's main marshalling
-    cost. Requires the input contract (offsets unique per doc).
-    """
-    sides = _broadcast_sides(spans_flat, logits_rows, dict_lines, stop_terms)
-    fwd = resolve_recognizer(recognizer)
-    n = n_partitions or spans_flat.sparkSession.sparkContext.defaultParallelism * 2
-
-    arranged = spans_flat.repartitionByRange(n, "doc_id").sortWithinPartitions(
-        "doc_id", "offset"
-    )
-
-    def kernel(batches):
-        extract_text_vec, recognize_batch = _worker_recognizer(
-            *sides, alphabet, max_cost, forward=fwd
-        )
-
-        prev_doc = None  # doc spanning the batch boundary within a partition
-        prev_count = 0
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.reset_index(drop=True)
-            # order = cumcount per doc; batches arrive doc-contiguous and
-            # offset-sorted, so carry the running count across batches
-            order = pdf.groupby("doc_id", sort=False).cumcount()
-            first_doc = pdf["doc_id"].iat[0]
-            last_doc = pdf["doc_id"].iat[-1]
-            n_last = int((pdf["doc_id"] == last_doc).sum())
-            if prev_doc == first_doc:
-                order.loc[pdf["doc_id"] == first_doc] += prev_count
-                if last_doc == first_doc:
-                    n_last += prev_count
-            prev_doc, prev_count = last_doc, n_last
-
-            text_mask = pdf["kind"] == "text"
-            out_text = pd.Series([""] * len(pdf), dtype=object)
-            if text_mask.any():
-                out_text[text_mask] = extract_text_vec(pdf.loc[text_mask, "text"]).to_numpy()
-            media_mask = ~text_mask
-            if media_mask.any():  # ONE forward per pandas batch
-                refs = pdf.loc[media_mask, "media_ref"]
-                lookup = recognize_batch(list(pd.unique(refs)))
-                out_text[media_mask] = refs.map(lookup).to_numpy()
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "text": out_text,
-                    "media_ref": pdf["media_ref"],
-                    "order": order.astype("int32"),
-                }
-            )
-
-    return arranged.mapInPandas(kernel, FLAT_SCHEMA)

@@ -96,6 +96,17 @@ def _duck_poly(s: str) -> str:
 # Relational core (TPC-H-style; SURVEY.md §2.3/§2.4/§2.5 operator families)
 # ===========================================================================
 
+def _disc_revenue_cents():
+    """round(sum(l_extendedprice * (1 - l_discount)), 2) summed exactly
+    over DECIMAL(18,2) inputs, then cast back to DOUBLE. A DOUBLE sum
+    leaves a half-cent total to float error (2.01 * (1 - 0.50) is
+    1.00499... as a double), so Spark and the DuckDB oracle could round
+    it apart by 0.01. The *_SQL oracles use the same decimal form."""
+    price = F.col("l_extendedprice").cast("decimal(18,2)")
+    disc = F.col("l_discount").cast("decimal(18,2)")
+    return F.round(F.sum(price * (1 - disc)), 2).cast("double")
+
+
 def q1_pricing_summary(spark, sf_dir):
     """A1/A2-family partial+final hash agg (reference analog: averager,
     utils.py:104-129; Counter, readData.py:30-33)."""
@@ -106,9 +117,7 @@ def q1_pricing_summary(spark, sf_dir):
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "sum_disc_price"
-            ),
+            _disc_revenue_cents().alias("sum_disc_price"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
@@ -120,7 +129,9 @@ Q1_SQL = """
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 2)                                AS sum_qty,
        round(sum(l_extendedprice), 2)                           AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)        AS sum_disc_price,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18, 2))
+                      * (1 - CAST(l_discount AS DECIMAL(18, 2)))), 2) AS DOUBLE)
+                                                                AS sum_disc_price,
        round(avg(l_quantity), 4)                                AS avg_qty,
        round(avg(l_discount), 6)                                AS avg_disc,
        count(*)                                                 AS count_order
@@ -171,7 +182,7 @@ def q3_top_orders(spark, sf_dir):
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(_disc_revenue_cents().alias("revenue"))
     )
     top = rev.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc()).limit(10)
     w = Window.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
@@ -190,7 +201,8 @@ def q3_top_orders(spark, sf_dir):
 Q3_SQL = """
 WITH rev AS (
   SELECT o_orderkey, o_orderdate, o_orderpriority,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18, 2))
+                        * (1 - CAST(l_discount AS DECIMAL(18, 2)))), 2) AS DOUBLE) AS revenue
   FROM customer
   JOIN orders   ON c_custkey = o_custkey
   JOIN lineitem ON o_orderkey = l_orderkey
@@ -225,7 +237,7 @@ def q5_region_revenue(spark, sf_dir):
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            _disc_revenue_cents().alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -233,7 +245,8 @@ def q5_region_revenue(spark, sf_dir):
 
 Q5_SQL = """
 SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18, 2))
+                      * (1 - CAST(l_discount AS DECIMAL(18, 2)))), 2) AS DOUBLE) AS revenue,
        count(*) AS n_items
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
@@ -6223,7 +6236,14 @@ def docs_dedup_recall_eval(spark, sf_dir):
     corpus shingle sets are never shuffled or materialized. The
     candidate side reuses the production LSH pair query. All final
     joins/aggs are truth-sized. Vacuous recall (no true pairs in the
-    sample) reports 1.0 in both engines."""
+    sample) reports 1.0 in both engines.
+
+    Cap caveat: the candidates come from docs_minhash_lsh_pairs, so any
+    band bucket above LSH_BUCKET_CAP (64) contributes only its star pairs
+    here, while the DuckDB oracle (_duck_minhash_sql) uses the uncapped
+    band join. The two agree only while no bucket exceeds the cap; past
+    it, n_cand, n_hits and recall measure the capped generator and the
+    oracle diverges."""
     d = _t_wide(spark, sf_dir, "documents")
     is_samp = F.col("doc_id") % DEDUP_EVAL_MOD == 0
     samp = HK.shingle_hash_sets_df(d.filter(is_samp), k=2).select(

@@ -308,24 +308,6 @@ def extract_main_text(raw: str, stop_terms: list[str]) -> str:
     return _WS_RE.sub(" ", strip_stop_content(joined, stop_terms)).strip()
 
 
-def make_main_text_extractor(stop_terms: list[str]):
-    """Hot-path twin of extract_main_text with the stop-term alternation
-    compiled once (the per-call pattern build dominates otherwise).
-    Semantics identical; kernels call this, tests pin both agree."""
-    stop_re = re.compile(stop_term_pattern(stop_terms)) if stop_terms else None
-
-    def extract(raw: str) -> str:
-        kept = [
-            block_tagless(b) for b in raw.split("\n") if boilerplate_keep_score(b) > 0
-        ]
-        joined = " ".join(k for k in kept if k)
-        if stop_re is not None:
-            joined = stop_re.sub("", joined)
-        return _WS_RE.sub(" ", joined).strip()
-
-    return extract
-
-
 # ---------------------------------------------------------------------------
 # Detection grouping (SegLink Alg.1 — docs/nizhan/SegLink/SegLink_t.md:97-103)
 # ---------------------------------------------------------------------------
@@ -489,7 +471,7 @@ def extract_document(
             )
             # kind is data and passes through; ROUTING is text vs non-text
             # (out-of-contract kinds take the media/recognition leg, and
-            # all four implementations agree — see edge-case tests)
+            # the Arrow kernel and the SQL oracle agree — see edge-case tests)
             processed.append((sp["offset"], sp["kind"], corrected, sp["media_ref"]))
     processed.sort(key=lambda p: (p[0], p[1] or "", p[3] or "", p[2] or "",
                                   p[1] is not None, p[3] is not None,

@@ -43,7 +43,7 @@ def load_recognizer(spec: str | None, model_path: str | None):
     a ZERO-ARG FACTORY returning the forward callable (list[media_ref]
     -> list[logits|None]); a factory (not the callable itself) so user
     config rides module state instead of CLI plumbing. Neither: None —
-    the fused kernels use the broadcast fixture-logits default."""
+    the Arrow kernel uses the broadcast fixture-logits default."""
     if model_path and spec:
         raise SystemExit("--recognizer and --recognizer-model are exclusive")
     if model_path:

@@ -3,7 +3,7 @@
 import os
 
 from basicocr_spark.fixtures import STOP_TERMS
-from basicocr_spark.operators.extraction import extract_documents_fused
+from basicocr_spark.operators.extraction import extract_documents_fused_arrow
 from basicocr_spark.plans.checkpoint import SnapshotWriter, committed_snapshots
 
 
@@ -12,7 +12,7 @@ def _extract(fx, docs):
         (r.media_ref, [list(x) for x in r.logits], r.gold_text)
         for r in fx["media_logits"].collect()
     ]
-    return extract_documents_fused(docs, logits_rows, fx["dict_lines"], STOP_TERMS)
+    return extract_documents_fused_arrow(docs, logits_rows, fx["dict_lines"], STOP_TERMS)
 
 
 def test_resume_processes_only_pending(spark, fx, tmp_path):

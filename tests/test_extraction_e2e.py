@@ -1,15 +1,14 @@
 """End-to-end span-sequence equality — the north-rule correctness gate.
 
-Both implementations (declarative Catalyst pipeline and fused
-zero-shuffle mapInPandas) must reproduce the pure-Python reference
-extractor exactly: per-doc span tuples (kind, text, media_ref, order).
+The production kernel (zero-shuffle mapInArrow) and the declarative
+Catalyst oracle must both reproduce the pure-Python reference extractor
+exactly: per-doc span tuples (kind, text, media_ref, order).
 """
 
 from pyspark.sql import functions as F
 
 from basicocr_spark.fixtures import STOP_TERMS, gen_dictionary, gen_media_logits
 from basicocr_spark.operators.extraction import (
-    extract_documents_fused,
     extract_documents_fused_arrow,
     extract_documents_sql,
     flatten_extracted,
@@ -38,17 +37,6 @@ def test_sql_pipeline_span_equality(fx):
         assert got[doc_id] == want[doc_id], doc_id
 
 
-def test_fused_pipeline_span_equality(fx):
-    logits_rows = [(r.media_ref, [list(x) for x in r.logits], r.gold_text) for r in fx["media_logits"].collect()]
-    out = extract_documents_fused(
-        fx["documents"], logits_rows, fx["dict_lines"], STOP_TERMS
-    )
-    got, want = _as_map(out), _gold_map(fx)
-    assert set(got) == set(want)
-    for doc_id in want:
-        assert got[doc_id] == want[doc_id], doc_id
-
-
 def test_fused_arrow_pipeline_span_equality(fx):
     logits_rows = [(r.media_ref, [list(x) for x in r.logits], r.gold_text) for r in fx["media_logits"].collect()]
     out = extract_documents_fused_arrow(
@@ -63,12 +51,5 @@ def test_fused_arrow_pipeline_span_equality(fx):
 def test_fused_arrow_plan_has_no_shuffle(fx):
     logits_rows = [(r.media_ref, [list(x) for x in r.logits], r.gold_text) for r in fx["media_logits"].collect()]
     out = extract_documents_fused_arrow(fx["documents"], logits_rows, fx["dict_lines"], STOP_TERMS)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_fused_plan_has_no_shuffle(fx):
-    logits_rows = [(r.media_ref, [list(x) for x in r.logits], r.gold_text) for r in fx["media_logits"].collect()]
-    out = extract_documents_fused(fx["documents"], logits_rows, fx["dict_lines"], STOP_TERMS)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # linear scan: zero shuffle by construction

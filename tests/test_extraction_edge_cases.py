@@ -1,6 +1,6 @@
 """Adversarial inputs: empty span arrays, unknown media_refs, null text,
-duplicate offsets. All three implementations (SQL, fused, pure-Python
-oracle) must agree span-for-span."""
+duplicate offsets, out-of-contract kinds. The Arrow kernel and both
+oracles (SQL pipeline, pure-Python reference) must agree span-for-span."""
 
 import pytest
 
@@ -8,7 +8,6 @@ from basicocr_spark import reference as R
 from basicocr_spark import schemas as S
 from basicocr_spark.fixtures import STOP_TERMS
 from basicocr_spark.operators.extraction import (
-    extract_documents_fused,
     extract_documents_fused_arrow,
     extract_documents_sql,
 )
@@ -30,6 +29,10 @@ ADVERSARIAL = [
     # text vs non-text -> the media/recognition leg handles it
     ("unknown_kind", [("figure", None, "m000001", 1),
                       ("text", "<p>hello world one two three</p>", None, 2)]),
+    # kind='pdf' without a blob table: just another non-text kind, so it
+    # takes the media leg and is recognized like any media span
+    ("pdf_kind", [("pdf", None, "m000002", 1),
+                  ("text", "<p>a pdf sits beside this text span</p>", None, 2)]),
 ]
 
 
@@ -73,23 +76,22 @@ def test_all_three_agree_on_edges(spark, fx, adv_docs):
         (r.media_ref, [list(x) for x in r.logits], r.gold_text)
         for r in fx["media_logits"].collect()
     ]
-    fused_map = _spans_map(
-        extract_documents_fused(adv_docs, logits_rows, fx["dict_lines"], STOP_TERMS)
-    )
     arrow_map = _spans_map(
         extract_documents_fused_arrow(adv_docs, logits_rows, fx["dict_lines"], STOP_TERMS)
     )
-    assert set(sql_map) == set(fused_map) == set(arrow_map) == set(want)
+    assert set(sql_map) == set(arrow_map) == set(want)
     for doc_id in want:
         assert sql_map[doc_id] == want[doc_id], ("sql", doc_id)
-        assert fused_map[doc_id] == want[doc_id], ("fused", doc_id)
         assert arrow_map[doc_id] == want[doc_id], ("arrow", doc_id)
+    # the pdf span was recognized (media leg), not blanked by the text leg
+    pdf_span = want["pdf_kind"][0]
+    assert pdf_span[0] == "pdf" and pdf_span[1]
 
 
 def test_null_kind_routes_to_media_leg_everywhere(spark, fx):
     """Out-of-contract NULL kind (schema says non-null, parquet doesn't
-    enforce it): the SQL pipelines must route it to the media leg via
-    null-safe comparison, exactly like the fused kernels and the Python
+    enforce it): the SQL pipeline must route it to the media leg via
+    null-safe comparison, exactly like the Arrow kernel and the Python
     oracle — not silently drop the span (kind != 'text' is null-valued
     and filters it out)."""
     from pyspark.sql import types as T
@@ -146,8 +148,8 @@ def test_null_kind_routes_to_media_leg_everywhere(spark, fx):
 def test_null_vs_empty_kind_tie_orders_identically(spark, fx):
     """Pathological tie: two spans at the same offset, same media_ref,
     same recognized text, one kind=NULL and one kind='' — they tie on
-    every coalesced sort key and differ only in nullness. All four
-    implementations must order them identically (null first, via the
+    every coalesced sort key and differ only in nullness. The kernel and
+    both oracles must order them identically (null first, via the
     explicit null-presence flag keys); before the flags, Spark's struct
     comparison fell through to raw fields (nulls first) while the
     kernels' stable sorts kept arrival order."""
@@ -178,9 +180,6 @@ def test_null_vs_empty_kind_tie_orders_identically(spark, fx):
     sql_map = _spans_map(
         extract_documents_sql(docs, fx["media_logits"], fx["dictionary"], STOP_TERMS)
     )
-    fused_map = _spans_map(
-        extract_documents_fused(docs, logits_rows, fx["dict_lines"], STOP_TERMS)
-    )
     arrow_map = _spans_map(
         extract_documents_fused_arrow(docs, logits_rows, fx["dict_lines"], STOP_TERMS)
     )
@@ -195,7 +194,7 @@ def test_null_vs_empty_kind_tie_orders_identically(spark, fx):
             STOP_TERMS,
         )
     ]
-    assert sql_map["tie"] == fused_map["tie"] == arrow_map["tie"] == ref_out
+    assert sql_map["tie"] == arrow_map["tie"] == ref_out
     assert sql_map["tie"][0][0] is None and sql_map["tie"][1][0] == ""  # null first
 
 

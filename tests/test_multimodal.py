@@ -86,39 +86,6 @@ def test_injected_frame_iter_drives_sampling(spark):
     assert {bytes(r.content) for r in out} == {b"frame-a", b"frame-b"}
 
 
-def test_recognizer_seam_matches_logits_join(spark, fx):
-    """recognize_media(recognizer=...) must be able to reproduce the
-    logits-join path exactly when the injected forward function encodes
-    the same fixture knowledge — proving a real CRNN drop-in needs no
-    engine edits."""
-    from basicocr_spark.operators.extraction import (
-        recognize_media,
-        recognizer_from_batch_fn,
-    )
-
-    media = fx["documents"].select(
-        "doc_id", F.explode("spans").alias("s")
-    ).filter(F.col("s.kind") == "media").select(
-        "doc_id", F.col("s.media_ref").alias("media_ref")
-    )
-    want = {
-        (r.doc_id, r.media_ref): r.raw_text
-        for r in recognize_media(media, fx["media_logits"]).collect()
-    }
-    # build the 'model': ref -> decoded text, from the logits-join truth
-    by_ref = {}
-    for (doc_id, ref), txt in want.items():
-        by_ref[ref] = txt
-    fake_forward = lambda refs: [by_ref.get(r, "") for r in refs]
-    got = {
-        (r.doc_id, r.media_ref): r.raw_text
-        for r in recognize_media(
-            media, recognizer=recognizer_from_batch_fn(fake_forward)
-        ).collect()
-    }
-    assert got == want
-
-
 def test_roundtrip_encoding():
     buf = MM.encode_fake_image("m000001", 80, 32)
     w, h, payload = MM.decode_fake_image(buf)

@@ -1,9 +1,9 @@
 """resolve_recognizer contract: the media_ref -> logits forward seam
 (reference: models/crnn.py:23-79 forward, demo.py:26-41) must flow
-through all three fused extraction kernels — fixture parity when the
-injected forward replays fixture logits, visibly custom output when it
-doesn't, batched invocation (one forward per kernel batch, misses only),
-and zero engine edits either way."""
+through the production Arrow kernel — fixture parity when the injected
+forward replays fixture logits, visibly custom output when it doesn't,
+batched invocation (one forward per kernel batch, misses only), and
+zero engine edits either way."""
 
 import numpy as np
 import pytest
@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 
 from basicocr_spark.fixtures import STOP_TERMS
 from basicocr_spark.operators.extraction import (
-    extract_documents_fused,
     extract_documents_fused_arrow,
-    extract_spans_flat,
     flatten_extracted,
     resolve_recognizer,
 )
@@ -24,16 +22,6 @@ def _logits_rows(fx):
         (r.media_ref, [list(x) for x in r.logits], r.gold_text)
         for r in fx["media_logits"].collect()
     ]
-
-
-def _flat_input(fx):
-    return fx["documents"].select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
 
 
 def _replay_forward(logits_rows, calls_acc=None):
@@ -51,54 +39,43 @@ def _replay_forward(logits_rows, calls_acc=None):
     return forward
 
 
-def _runs(fx, logits_rows, recognizer):
-    """(name, flat extracted DataFrame) for all three fused kernels."""
-    yield "fused", flatten_extracted(
-        extract_documents_fused(
-            fx["documents"], [], fx["dict_lines"], STOP_TERMS, recognizer=recognizer
-        )
-    )
-    yield "arrow", flatten_extracted(
+def _run(fx, recognizer):
+    """Flat extracted DataFrame from the Arrow kernel. Note logits_rows
+    is EMPTY on the engine side: all logits come through the seam."""
+    return flatten_extracted(
         extract_documents_fused_arrow(
             fx["documents"], [], fx["dict_lines"], STOP_TERMS, recognizer=recognizer
         )
     )
-    yield "flat", extract_spans_flat(
-        _flat_input(fx), [], fx["dict_lines"], STOP_TERMS,
-        n_partitions=3, recognizer=recognizer,
-    ).select("doc_id", "kind", "text", "media_ref", "order")
 
 
 def test_custom_forward_matches_fixture_path_in_all_kernels(fx):
     """Injecting a forward that reproduces the fixture logits must yield
-    EXACTLY the golden extraction in every kernel — the engine's CTC
-    decode + correction stay downstream of the seam. Note logits_rows
-    is EMPTY on the engine side: all logits come through the seam."""
+    EXACTLY the golden extraction — the engine's CTC decode + correction
+    stay downstream of the seam."""
     rows = _logits_rows(fx)
     gold = flatten_extracted(fx["golden"])
-    for name, out in _runs(fx, rows, _replay_forward(rows)):
-        assert out.exceptAll(gold.select(*out.columns)).count() == 0, name
-        assert gold.select(*out.columns).exceptAll(out).count() == 0, name
+    out = _run(fx, _replay_forward(rows))
+    assert out.exceptAll(gold.select(*out.columns)).count() == 0
+    assert gold.select(*out.columns).exceptAll(out).count() == 0
 
 
 def test_custom_forward_output_actually_routes(fx):
     """A forward that recognizes nothing (all None -> '') must blank
-    every media span in every kernel — proving the injected callable is
-    the one running, not a silent fixture fallback."""
-    rows = _logits_rows(fx)
+    every media span — proving the injected callable is the one running,
+    not a silent fixture fallback."""
 
     def blind(refs):
         return [None for _ in refs]
 
-    for name, out in _runs(fx, rows, blind):
-        got = out.filter(F.col("kind") != "text")
-        n_media = got.count()
-        assert n_media > 0, name
-        assert got.filter(F.col("text") == "").count() == n_media, name
+    got = _run(fx, blind).filter(F.col("kind") != "text")
+    n_media = got.count()
+    assert n_media > 0
+    assert got.filter(F.col("text") == "").count() == n_media
 
 
 def test_forward_is_batched_not_per_ref(spark, fx):
-    """The kernels must call the forward ONCE per batch over memo
+    """The kernel must call the forward ONCE per batch over memo
     misses, never per ref: total invocations stay at or below the
     partition count (one batch per partition at fixture scale), far
     below the media-span count."""
@@ -108,7 +85,7 @@ def test_forward_is_batched_not_per_ref(spark, fx):
         .filter(F.col("s.kind") != "text").count()
     )
     acc = spark.sparkContext.accumulator(0)
-    out = extract_documents_fused(
+    out = extract_documents_fused_arrow(
         fx["documents"].repartition(2), [], fx["dict_lines"], STOP_TERMS,
         recognizer=_replay_forward(rows, acc),
     )
@@ -132,7 +109,7 @@ def test_short_forward_return_fails_at_the_seam(fx):
     def broken(refs):
         return [None for _ in refs][:-1]  # off-by-one short
 
-    out = extract_documents_fused(
+    out = extract_documents_fused_arrow(
         fx["documents"], [], fx["dict_lines"], STOP_TERMS, recognizer=broken
     )
     with pytest.raises(Exception, match="recognizer forward returned"):

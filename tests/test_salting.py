@@ -4,7 +4,7 @@ end-to-end equality of salted extraction vs the unsalted golden."""
 from pyspark.sql import functions as F
 
 from basicocr_spark.fixtures import STOP_TERMS
-from basicocr_spark.operators.extraction import extract_documents_fused, flatten_extracted
+from basicocr_spark.operators.extraction import extract_documents_fused_arrow, flatten_extracted
 from basicocr_spark.operators.salting import (
     DEFAULT_MAX_SPANS,
     merge_salted_extraction,
@@ -37,7 +37,7 @@ def test_salted_extraction_matches_golden(spark, fx):
         for r in fx["media_logits"].collect()
     ]
     salted = salt_heavy_docs(fx["documents"], max_spans=8)
-    extracted = extract_documents_fused(
+    extracted = extract_documents_fused_arrow(
         salted.select(F.concat_ws("#", "doc_id", "salt").alias("doc_id"), "spans"),
         logits_rows,
         fx["dict_lines"],

@@ -250,16 +250,6 @@ def test_centroid_kernel_matches_explode_form_on_nulls_and_ragged(spark):
     assert not any(lbl == "c" for (lbl, _) in got)
 
 
-def test_recognize_media_requires_a_path(spark, fx):
-    import pytest
-
-    from basicocr_spark.operators.extraction import recognize_media
-
-    media = fx["documents"].limit(1).select(F.lit("m000001").alias("media_ref"))
-    with pytest.raises(ValueError, match="logits_df .*or a recognizer"):
-        recognize_media(media)
-
-
 def test_simhash_near_dup_bands_are_exact_for_ball_3(spark):
     """4 byte-bands over 32 bits: any pair at hamming distance <= 3
     shares an intact byte (pigeonhole), so the banded candidate join
