@@ -56,9 +56,19 @@ EXTRACTED_SPAN_SCHEMA = (
 # so decode+correct memos (and the compiled boilerplate extractor)
 # survive partition boundaries — rebuilding them per partition costs
 # ~0.23 s x n_partitions of pure recompute at 128 partitions. Bounded:
-# entries are per distinct media_ref / decoded token; cleared when a new
-# job token first appears (previous job's cache is then dead weight).
+# the whole store is cleared when a new job token first appears (the
+# previous job's cache is then dead weight), and each recognition memo
+# (one entry per distinct media_ref / decoded token) is cleared when it
+# reaches _MEMO_CAP entries.
 _WORKER_CACHE: dict[str, dict] = {}
+_MEMO_CAP = 2**16
+
+
+def _remember(memo: dict, key, value):
+    if len(memo) >= _MEMO_CAP:
+        memo.clear()
+    memo[key] = value
+    return value
 
 
 def _job_cache(token: str, builder):
@@ -160,7 +170,7 @@ def crnn_forward_from_torchscript(model_path: str, fetch_decode=None):
 def _worker_recognizer(
     b_logits, b_dict, b_stop, job_token, alphabet, max_cost, forward=None
 ):
-    """Executor-side: (vectorized text extractor, memoized batched
+    """Executor-side: (batch text extractor, memoized batched
     recognize_batch) for the Arrow kernel. `forward` is the
     resolve_recognizer seam; None means the broadcast fixture-logits
     lookup."""
@@ -191,33 +201,29 @@ def _worker_recognizer(
             return ""
         txt = corr_memo.get(raw)
         if txt is None:
-            txt = corr_memo[raw] = R.correct_word(raw, entries, max_cost)
+            txt = _remember(corr_memo, raw, R.correct_word(raw, entries, max_cost))
         return txt
 
     def recognize_batch(refs) -> dict:
         """One model forward per kernel batch over the memo MISSES only
         (deduped, order-preserving) — the north rule's batch-decoded,
         batch-recognized shape. Returns {ref: text} covering `refs`."""
-        seen: set = set()
-        misses = [
-            r
-            for r in refs
-            if r not in media_memo and not (r in seen or seen.add(r))
-        ]
+        got = {r: media_memo[r] for r in refs if r in media_memo}
+        misses = [r for r in dict.fromkeys(refs) if r not in got]
         if misses:
-            got = list(forward(misses))
-            if len(got) != len(misses):
+            logits = list(forward(misses))
+            if len(logits) != len(misses):
                 # fail AT the seam with the contract named — zip would
                 # silently truncate and surface later as a bare KeyError
                 raise ValueError(
                     "recognizer forward returned "
-                    f"{len(got)} results for {len(misses)} refs; the "
+                    f"{len(logits)} results for {len(misses)} refs; the "
                     "protocol is list[ref] -> list[logits|None], "
                     "same length, same order"
                 )
-            for r, lg in zip(misses, got):
-                media_memo[r] = _decode_correct(lg)
-        return {r: media_memo[r] for r in refs}
+            for r, lg in zip(misses, logits):
+                got[r] = _remember(media_memo, r, _decode_correct(lg))
+        return got
 
     return cache["extract"], recognize_batch
 

@@ -1,8 +1,13 @@
-"""Vectorized pandas boilerplate kernel vs the pure-Python reference."""
+"""The batch text-leg kernel (boilerplate_vec) vs the pure-Python
+reference: fixed cases, the fixture corpus, Hypothesis-generated spans
+over tags, every str.isspace code point and stop-term fragments, and
+batches whose rows share blocks through the per-call block memo."""
 
 import random
 
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from basicocr_spark import reference as R
 from basicocr_spark.fixtures import STOP_TERMS, gen_text_span
@@ -20,6 +25,20 @@ CASES = [
     "<p>aa</p>\n<p>paragraph two has plenty of words to stay above the threshold</p>",
     None,
 ]
+
+WHITESPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+FRAGMENTS = [
+    "<a href=x>", "</a>", "<p>", "</p>", "<li>", 'class="nav"', 'class="content"',
+    "<", ">", "\n", "word", "two words", "a", "ab", "click", " here", "click here",
+    "all rights reserved", "　",
+] + WHITESPACE
+# overlapping terms: which one wins is decided by the longest-first order
+STOP_LISTS = [[], STOP_TERMS, ["a", " ", "ab", "　"]]
+spans = st.one_of(st.none(), st.lists(st.sampled_from(FRAGMENTS), max_size=30).map("".join))
+
+
+def _reference(data, terms):
+    return [R.extract_main_text(x or "", terms) for x in data]
 
 
 def test_vectorized_matches_reference():
@@ -41,3 +60,36 @@ def test_fast_scalar_extractor_matches_reference():
     for raw in data:
         (out,) = extract(pd.Series([raw], dtype=object)).to_numpy()
         assert out == R.extract_main_text(raw, STOP_TERMS)
+
+
+@given(st.lists(spans, max_size=8), st.sampled_from(STOP_LISTS))
+@settings(max_examples=400, deadline=None)
+def test_extract_matches_reference_property(data, terms):
+    index = pd.RangeIndex(7, 7 + len(data))
+    got = make_vectorized_extractor(terms)(pd.Series(data, index=index, dtype=object))
+    assert got.index.equals(index)
+    assert got.tolist() == _reference(data, terms)
+
+
+def test_repeated_blocks_do_not_leak_between_rows():
+    """Rows that share a nav, footer or body block but differ elsewhere:
+    a stop term spanning two kept blocks, or a block kept in one row and
+    joined with different neighbours in another, must come out as the
+    reference says, batched and one row per call."""
+    nav = '<div class="nav"><a href="/home">home</a> <a href="/about">about</a></div>'
+    footer = '<div class="footer">all rights reserved</div>'
+    shared = "<p>shared paragraph with plenty of words to keep it click</p>"
+    bodies = [
+        "<p>here the second block completes a stop term across the join</p>",
+        "<p>there is no stop term here at all in this body block</p>",
+        "",
+        "<li>here list chrome that the scorer drops</li>",
+        shared,
+    ]
+    data = [f"{nav}\n{shared}\n{b}\n{footer}" for b in bodies]
+    data += [f"{b}\n{nav}" for b in bodies] + [nav, footer, shared]
+    for terms in STOP_LISTS:
+        extract = make_vectorized_extractor(terms)
+        want = _reference(data, terms)
+        assert extract(pd.Series(data, dtype=object)).tolist() == want
+        assert [extract(pd.Series([x], dtype=object)).iloc[0] for x in data] == want

@@ -9,7 +9,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from basicocr_spark.fixtures import STOP_TERMS
+from basicocr_spark import reference as R
+from basicocr_spark.fixtures import STOP_TERMS, gen_dictionary, gen_media_logits
+from basicocr_spark.operators import extraction as X
 from basicocr_spark.operators.extraction import (
     extract_documents_fused_arrow,
     flatten_extracted,
@@ -114,3 +116,47 @@ def test_short_forward_return_fails_at_the_seam(fx):
     )
     with pytest.raises(Exception, match="recognizer forward returned"):
         flatten_extracted(out).count()
+
+
+class _Broadcast:
+    """Stands in for a Spark broadcast: the worker only reads `.value`."""
+
+    def __init__(self, value):
+        self.value = value
+
+
+def test_recognition_memos_stay_under_the_cap(monkeypatch):
+    """More distinct refs than the memo cap through one worker: the
+    media and correction memos never exceed the cap, and every batch's
+    output equals the uncapped worker's and reference.correct_word."""
+    logits_by_ref = {ref: lg for ref, lg, _ in gen_media_logits(24)}
+    dict_lines = gen_dictionary(n_words=40)
+    refs = list(logits_by_ref)
+    # overlapping batches, twice over: hits, misses and evicted refs
+    batches = [refs[i : i + 5] + refs[:2] for i in range(0, len(refs), 5)] * 2
+    monkeypatch.setattr(X, "_WORKER_CACHE", {})
+
+    def run(token):
+        _, recognize = X._worker_recognizer(
+            _Broadcast(logits_by_ref), _Broadcast(dict_lines), _Broadcast(STOP_TERMS),
+            token, R.DEFAULT_ALPHABET, 3,
+        )
+        outs, sizes = [], []
+        for batch in batches:
+            outs.append(recognize(batch))
+            cache = X._WORKER_CACHE[token]
+            sizes.append(max(len(cache["media"]), len(cache["corr"])))
+        return outs, sizes
+
+    uncapped, sizes = run("uncapped")
+    assert max(sizes) == len(refs)
+    monkeypatch.setattr(X, "_MEMO_CAP", 4)
+    capped, sizes = run("capped")
+    assert max(sizes) <= 4
+    assert capped == uncapped
+    entries = R.load_dictionary(dict_lines)
+    for batch, out in zip(batches, capped):
+        assert set(out) == set(batch)
+        for r in batch:
+            raw = R.ctc_greedy_decode(logits_by_ref[r], R.DEFAULT_ALPHABET)
+            assert out[r] == (R.correct_word(raw, entries, 3) if raw else "")
