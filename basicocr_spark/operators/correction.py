@@ -1,4 +1,5 @@
-"""Dictionary correction as a broadcast levenshtein theta-join.
+"""Dictionary correction: a broadcast levenshtein theta-join, plus one
+exact in-memory index for the callers that hold the dictionary.
 
 Reference: contrib/trietree/src/trietree_correct.py. The trie's
 branch-and-bound DP walk (searchRecursive, :168-199) is an *index*; the
@@ -8,6 +9,15 @@ scale the idiomatic equivalent is a broadcast nested-loop join with a
 band predicate on Catalyst's built-in `levenshtein`, so the dictionary is
 shipped once per executor and the probe side streams — no shuffle of the
 (big) token side at all; only the final dedup-by-token is a hash agg.
+That band join stays correct_tokens' default route.
+
+`DictionaryIndex` is the same semantics as a numpy index: one
+vectorized Levenshtein DP per token against every dictionary word. It
+is the ONE index behind both callers that hold the dictionary in
+memory: the production Arrow kernel's media leg
+(operators/extraction.py, one index per worker per job) and the
+>= CORRECTION_INDEX_THRESHOLD route of correct_tokens. Both are
+checked against reference.correct_word, which stays the oracle.
 
 Tie-break pinning (SURVEY.md §7 hard part #1): candidate order is
 dictionary file order (`line_id`). The rule, reproduced exactly from
@@ -22,15 +32,17 @@ postProcessing including its first-iteration-return quirk:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import reference as R
 from ..functions.textnorm import uniform
 
 # At/above this many dictionary entries the broadcast band join's
 # O(vocab x dict) levenshtein grid stops being acceptable (the
 # reference's published lexicon config is 50k words with a BK-tree,
-# docs/yangmiao/CRNN/crnn.md:148) and the driver-built BK-tree kernel
+# docs/yangmiao/CRNN/crnn.md:148) and the driver-built DictionaryIndex
 # route is taken instead — the same size-thresholded routing pattern as
 # boilerplate.AC_TERM_THRESHOLD.
 CORRECTION_INDEX_THRESHOLD = 10_000
@@ -82,81 +94,73 @@ def correction_candidates(
     )
 
 
-class BKTree:
-    """BK-tree over levenshtein — the Spark-side analog of the
-    reference's branch-and-bound trie walk (trietree_correct.py:153-199;
-    its published lexicon config is 50k words, crnn.md:148). Built once
-    on the driver, shipped to executors via closure capture; a query at
-    radius r visits only subtrees whose edge distance lies within
-    [d - r, d + r] (triangle inequality), turning the O(dict) scan into
-    a small fraction of the lexicon per token.
+class DictionaryIndex:
+    """Exact in-memory correction index: the job of the trie's
+    branch-and-bound walk (trietree_correct.py:153-199), done as ONE
+    numpy Levenshtein DP per token, vectorized across dictionary words.
+    Built once (a worker builds one per job; the indexed Spark route
+    builds one on the driver and ships it in the mapInPandas closure).
 
-    Robustness (both found by review, both with tests):
-    - Nodes live in ONE flat list with integer child references, not
-      nested lists — a nested representation pickles recursively and a
-      chain-shaped tree (see below) blows the interpreter recursion
-      limit exactly when Spark cloudpickles the mapInPandas closure.
-    - Tiny-diameter lexicons (e.g. a single-character OCR charset: all
-      pairwise distances 1) degenerate a BK-tree into a chain, making
-      build O(n^2). Inserts whose walk exceeds _MAX_DEPTH divert to a
-      linear overflow bucket instead (scanned exhaustively at query
-      time — for such lexicons nearly everything is within radius
-      anyway, so the scan IS the answer, and build cost stays
-      O(n * _MAX_DEPTH))."""
+    entries: reference.DictEntry list, words already uniform()-normalized
+    (what load_dictionary yields). Their list order is the dictionary
+    order the tie-break reads (line_id order for load_dictionary).
 
-    __slots__ = ("nodes", "overflow")
+    Layout: the words sorted by length (stable, so equal lengths keep
+    dictionary order) as a column-major int32 code-point array padded to
+    the longest word with -1, plus their lengths. A query reads only the
+    length band |len(word) - len(term)| <= radius (edit distance is at
+    least the length difference, the same band correction_candidates
+    filters on) and only the columns up to the band's longest word.
 
-    _MAX_DEPTH = 256
+    DP: in the shifted space y[j] = D[j] - j the Levenshtein row
+    recurrence's left-neighbour term becomes a prefix minimum, so one
+    term character is four array ops plus one np.minimum.accumulate
+    over the whole band — len(term) such steps per query."""
 
-    def __init__(self, entries: list[tuple]):
-        """entries: (word, freq, line_id) tuples (dictionary file order
-        preserved in line_id — the tie-break key downstream)."""
-        # node: [word, [entries...], {dist: child_index}]
-        self.nodes: list[list] = []
-        self.overflow: list[tuple] = []
-        for e in entries:
-            self._add(e)
+    __slots__ = ("entries", "_order", "_lens", "_codes")
 
-    def _add(self, e: tuple) -> None:
-        from ..reference import levenshtein
+    def __init__(self, entries):
+        self.entries = list(entries)
+        lens = np.array([len(e.word) for e in self.entries], dtype=np.int32)
+        self._order = np.argsort(lens, kind="stable")
+        self._lens = lens[self._order]
+        self._codes = np.full((int(lens.max(initial=0)), len(lens)), -1, dtype=np.int32)
+        for col, i in enumerate(self._order):
+            word = self.entries[i].word
+            self._codes[: len(word), col] = [ord(c) for c in word]
 
-        if not self.nodes:
-            self.nodes.append([e[0], [e], {}])
-            return
-        idx = 0
-        for _ in range(self._MAX_DEPTH):
-            node = self.nodes[idx]
-            d = levenshtein(e[0], node[0])
-            if d == 0:
-                node[1].append(e)  # duplicate words share one node
-                return
-            child = node[2].get(d)
-            if child is None:
-                self.nodes.append([e[0], [e], {}])
-                node[2][d] = len(self.nodes) - 1
-                return
-            idx = child
-        self.overflow.append(e)  # degenerate chain: cap the walk
+    def within(self, term: str, radius: int) -> tuple[np.ndarray, np.ndarray]:
+        """(positions, distances) of every entry within `radius` edits of
+        `term`, positions ascending — i.e. in dictionary order."""
+        lo, hi = np.searchsorted(self._lens, [len(term) - radius, len(term) + radius + 1])
+        lens = self._lens[lo:hi]
+        if not len(lens):
+            return self._order[:0], lens
+        codes = self._codes[: lens[-1], lo:hi]
+        y = np.zeros((len(codes) + 1, len(lens)), dtype=np.int32)  # D(0, j) = j
+        for i, ch in enumerate(term, 1):
+            z = np.empty_like(y)
+            z[0] = i
+            np.minimum(y[1:] + 1, y[:-1] - (codes == ord(ch)), out=z[1:])
+            y = np.minimum.accumulate(z, axis=0, out=z)
+        dist = y[lens, np.arange(len(lens))] + lens
+        keep = np.flatnonzero(dist <= radius)
+        pos = self._order[lo:hi][keep]
+        by_pos = np.argsort(pos)
+        return pos[by_pos], dist[keep][by_pos]
 
-    def query(self, term: str, radius: int) -> list[tuple]:
-        """All (entry, dist) with levenshtein(term, word) <= radius."""
-        from ..reference import levenshtein
-
-        out: list[tuple] = []
-        if self.nodes:
-            stack = [0]
-            while stack:
-                word, payload, children = self.nodes[stack.pop()]
-                d = levenshtein(term, word)
-                if d <= radius:
-                    out.extend((e, d) for e in payload)
-                lo, hi = d - radius, d + radius
-                stack.extend(c for dist, c in children.items() if lo <= dist <= hi)
-        for e in self.overflow:
-            d = levenshtein(term, e[0])
-            if d <= radius:
-                out.append((e, d))
-        return out
+    def correct(self, token: str, max_cost: int = 3) -> str:
+        """reference.correct_word(token, entries, max_cost), exactly."""
+        t = R.uniform(token)
+        # the reference searches at k and, only when nothing is within k,
+        # again at k+3 (trietree_correct.py:255-258). The tie-break reads
+        # only the min-distance set, which is the same for the first
+        # non-empty radius and for k+3, so one probe at k+3 decides both
+        pos, dist = self.within(t, max_cost + 3)
+        if not len(pos):
+            return t
+        best = dist.min()
+        return R.post_processing(t, [(self.entries[p], best) for p in pos[dist == best]])
 
 
 def correction_candidates_indexed(
@@ -166,21 +170,21 @@ def correction_candidates_indexed(
     max_cost: int = 3,
     retry_extra: int = 3,
 ) -> DataFrame:
-    """BK-tree route of correction_candidates for lexicon-scale
+    """Indexed route of correction_candidates for lexicon-scale
     dictionaries (>= CORRECTION_INDEX_THRESHOLD): identical output
     contract — (token, word, dist, freq, line_id) at the per-token
     effective radius — but candidate generation is a driver-built
-    BK-tree probed per distinct token inside one mapInPandas pass,
-    instead of an O(vocab x dict) broadcast levenshtein grid. The
+    DictionaryIndex probed per distinct token inside one mapInPandas
+    pass, instead of an O(vocab x dict) broadcast levenshtein grid. The
     per-token eff_cost choice (escalate to max_cost + retry_extra only
-    when nothing sits within max_cost) is applied in-kernel: the tree
-    query returns the token's FULL candidate set, so no window is
-    needed. tokens_df must be the single-column distinct-token frame
-    (what correct_tokens probes with)."""
+    when nothing sits within max_cost) is applied in-kernel on the one
+    distance vector the index returns at max_cost + retry_extra, so no
+    window is needed. tokens_df must be the single-column distinct-token
+    frame (what correct_tokens probes with)."""
     import pandas as pd
     from pyspark.sql import types as T
 
-    tree = BKTree(dict_entries)
+    index = DictionaryIndex(R.DictEntry(lid, w, fr) for w, fr, lid in dict_entries)
     radius = max_cost + retry_extra
     schema = T.StructType(
         [
@@ -198,18 +202,17 @@ def correction_candidates_indexed(
             for tok in pdf[token_col]:
                 if tok is None:
                     continue
-                cands = tree.query(tok, radius)
-                if not cands:
+                pos, dist = index.within(tok, radius)
+                if not len(pos):
                     continue
-                min_d = min(d for _, d in cands)
-                eff = max_cost if min_d <= max_cost else radius
-                for (word, freq, line_id), d in cands:
-                    if d <= eff:
-                        toks.append(tok)
-                        words.append(word)
-                        dists.append(d)
-                        freqs.append(freq)
-                        lids.append(line_id)
+                keep = dist <= (max_cost if dist.min() <= max_cost else radius)
+                for p, d in zip(pos[keep], dist[keep].tolist()):
+                    e = index.entries[p]
+                    toks.append(tok)
+                    words.append(e.word)
+                    dists.append(d)
+                    freqs.append(e.freq)
+                    lids.append(e.line_id)
             if toks:
                 yield pd.DataFrame(
                     {
@@ -274,7 +277,7 @@ def correct_tokens(
     (JVM-side, zero Python — right at dict.txt scale). When the caller
     holds the dictionary driver-side (it is broadcast-sized by
     definition), pass `dict_entries` as (word, freq, line_id) tuples:
-    at >= CORRECTION_INDEX_THRESHOLD entries the BK-tree kernel route is
+    at >= CORRECTION_INDEX_THRESHOLD entries the DictionaryIndex route is
     taken (the reference's own 50k-lexicon configuration, crnn.md:148),
     below it the entries are ignored in favor of the band join.
     """

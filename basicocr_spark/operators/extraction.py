@@ -8,7 +8,9 @@ text spans  -> boilerplate strip + stop-content removal
 media spans -> recognition (CTC greedy decode of per-ref logits — the
                deterministic stand-in for the CRNN forward,
                reference: contrib/crnn/demo.py:26-41) -> per-token
-               dictionary correction (trietree semantics)
+               dictionary correction (trietree semantics; the kernel
+               runs it through correction.DictionaryIndex, and
+               reference.correct_word is the oracle only)
 stitch      -> spans re-emitted in (doc_id, offset-rank) order; output
                tuple (kind, text, media_ref, order) is the north-rule
                equality surface.
@@ -20,8 +22,9 @@ span-for-span in tests:
    zero-shuffle mapInArrow pass. The list<struct> span column is
    processed as flat Arrow child arrays (numpy repeat/lexsort/cumcount,
    no per-span Python dicts); recognition + correction happen inside the
-   batch, as they would with a real model forward. Docs never straddle
-   partitions, so scaling efficiency is ~1 by construction.
+   batch, as they would with a real model forward, and correction is a
+   numpy DictionaryIndex probe per distinct decoded token. Docs never
+   straddle partitions, so scaling efficiency is ~1 by construction.
 
 2. `extract_documents_sql` — the declarative Catalyst oracle:
    explode -> route by kind -> broadcast-join logits -> pure-SQL CTC
@@ -45,7 +48,7 @@ from .. import reference as R
 from ..functions.ctc import ctc_greedy_decode, decode_ctc_numpy
 from ..functions.textnorm import uniform
 from .boilerplate import extract_main_text
-from .correction import correct_tokens
+from .correction import DictionaryIndex, correct_tokens
 
 EXTRACTED_SPAN_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,order:int>>"
@@ -173,19 +176,21 @@ def _worker_recognizer(
     """Executor-side: (batch text extractor, memoized batched
     recognize_batch) for the Arrow kernel. `forward` is the
     resolve_recognizer seam; None means the broadcast fixture-logits
-    lookup."""
+    lookup. Correction runs through a correction.DictionaryIndex built
+    once per worker per job (one vectorized Levenshtein DP per distinct
+    decoded token); reference.correct_word is only its oracle."""
     from .boilerplate_vec import make_vectorized_extractor
 
     cache = _job_cache(
         job_token,
         lambda: {
-            "entries": R.load_dictionary(b_dict.value),
+            "index": DictionaryIndex(R.load_dictionary(b_dict.value)),
             "extract": make_vectorized_extractor(b_stop.value),
             "corr": {},
             "media": {},
         },
     )
-    entries = cache["entries"]
+    index = cache["index"]
     corr_memo: dict[str, str] = cache["corr"]
     media_memo: dict = cache["media"]
 
@@ -201,7 +206,7 @@ def _worker_recognizer(
             return ""
         txt = corr_memo.get(raw)
         if txt is None:
-            txt = _remember(corr_memo, raw, R.correct_word(raw, entries, max_cost))
+            txt = _remember(corr_memo, raw, index.correct(raw, max_cost))
         return txt
 
     def recognize_batch(refs) -> dict:

@@ -8,8 +8,14 @@
 Runs the full north-rule job: ingest -> range-partition by doc_id ->
 salt heavy docs -> fused zero-shuffle extraction -> merge salted slices
 -> snapshot-commit (data + per-partition lineage manifest, atomic
-marker) in doc_id-batched snapshots, resuming idempotently: on restart
+marker) in doc_id-bounded snapshots, resuming idempotently: on restart
 only doc_ids absent from committed snapshots are processed.
+
+Each snapshot is the --batch-size smallest pending doc_ids, selected by
+an upper doc_id bound (from a doc_id-only ordered take) that filters
+the pending docs before the range repartition, so every snapshot runs
+in parallel. When nothing is pending the run stops before committing:
+a re-run over a fully committed output commits nothing.
 """
 
 from __future__ import annotations
@@ -73,7 +79,6 @@ def run(
     n_parts = n_partitions or spark.sparkContext.defaultParallelism * 2
     docs = spark.read.schema(S.DOCUMENTS).parquet(input_dir)
     writer = SnapshotWriter(spark, output_root, catalog_table=catalog_table)
-    pending = writer.pending(docs).repartitionByRange(n_parts, "doc_id")
 
     # recognition + dictionary sides (fixture-driven in this build; a real
     # deployment broadcasts model weights the same way)
@@ -83,7 +88,24 @@ def run(
     stats = {"snapshots": [], "docs": 0, "spans": 0, "wall_sec": 0.0}
     t_start = time.perf_counter()
     while True:
-        batch = pending.limit(batch_size)
+        # the batch is the batch_size smallest pending doc_ids: a
+        # doc_id-only ordered take yields its count and upper bound, and
+        # the bound filters BEFORE the range repartition, so every
+        # snapshot runs n_parts tasks (a limit() here would force a
+        # single-partition GlobalLimit)
+        pending = writer.pending(docs)
+        n_batch, last_id = (
+            pending.select("doc_id")
+            .orderBy("doc_id")
+            .limit(batch_size)
+            .agg(F.count(F.lit(1)), F.max("doc_id"))
+            .first()
+        )
+        if n_batch == 0:
+            break  # nothing pending: a re-run commits nothing
+        batch = pending.filter(F.col("doc_id") <= last_id).repartitionByRange(
+            n_parts, "doc_id"
+        )
         salted = salt_heavy_docs(batch, max_spans=max_spans)
         keyed = salted.select(
             salt_key(F.col("doc_id"), F.col("salt")).alias("doc_id"), "spans"
@@ -96,15 +118,10 @@ def run(
             extracted.select(did.alias("doc_id"), salt.alias("salt"), "spans")
         )
         info = writer.commit(merged)
-        n_docs = sum(d for d, _ in info["partitions"].values())
-        n_spans = sum(sp for _, sp in info["partitions"].values())
-        if n_docs == 0:
-            break
         stats["snapshots"].append(info["snapshot_id"])
-        stats["docs"] += n_docs
-        stats["spans"] += n_spans
-        pending = writer.pending(docs).repartitionByRange(n_parts, "doc_id")
-        if n_docs < batch_size:
+        stats["docs"] += sum(d for d, _ in info["partitions"].values())
+        stats["spans"] += sum(sp for _, sp in info["partitions"].values())
+        if n_batch < batch_size:
             break
     stats["wall_sec"] = round(time.perf_counter() - t_start, 3)
     stats["docs_per_sec"] = round(stats["docs"] / stats["wall_sec"], 1) if stats["wall_sec"] else 0.0

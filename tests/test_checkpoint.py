@@ -108,6 +108,19 @@ def test_stale_tmp_marker_is_not_a_committed_snapshot(spark, tmp_path, fx):
     assert out["snapshot_id"] == "s000001"
 
 
+def _cli_input(spark, tmp_path, ids):
+    """One text span per doc, written in the given (storage) order."""
+    from basicocr_spark import schemas as S
+
+    docs = spark.createDataFrame(
+        [(d, [("text", f"<p>hello world number {d} content</p>", None, 1)]) for d in ids],
+        schema=S.DOCUMENTS,
+    )
+    inp = str(tmp_path / "cli_in")
+    docs.write.mode("overwrite").parquet(inp)
+    return inp
+
+
 def test_cli_run_preserves_multichar_doc_ids(spark, tmp_path):
     """End-to-end CLI run(): composite doc_id#salt keys must round-trip
     multi-character doc ids exactly (the SALT_SEP constant exists
@@ -115,21 +128,42 @@ def test_cli_run_preserves_multichar_doc_ids(spark, tmp_path):
     empty string — an empty separator silently truncates every id to
     its first character)."""
     import run_extraction as RX
-    from basicocr_spark import schemas as S
-    from basicocr_spark.plans.checkpoint import SnapshotWriter
 
     ids = [str(100 + i) for i in range(8)]
-    docs = spark.createDataFrame(
-        [(d, [("text", f"<p>hello world number {d} content</p>", None, 1)]) for d in ids],
-        schema=S.DOCUMENTS,
-    )
-    inp = str(tmp_path / "cli_in")
-    out = str(tmp_path / "cli_out")
-    docs.write.mode("overwrite").parquet(inp)
+    inp, out = _cli_input(spark, tmp_path, ids), str(tmp_path / "cli_out")
     stats = RX.run(spark, inp, out, batch_size=5)
     assert stats["docs"] == 8
     got = {r.doc_id for r in SnapshotWriter(spark, out).read_committed().collect()}
     assert got == set(ids)
+
+
+def test_cli_snapshots_are_the_smallest_pending_doc_ids(spark, tmp_path):
+    """A snapshot is the batch_size smallest pending doc_ids, whatever the
+    storage order: s000000 holds exactly the 5 smallest of 8."""
+    import run_extraction as RX
+
+    ids = ["105", "100", "107", "103", "101", "106", "104", "102"]
+    inp, out = _cli_input(spark, tmp_path, ids), str(tmp_path / "cli_out")
+    stats = RX.run(spark, inp, out, batch_size=5)
+    assert stats["snapshots"] == ["s000000", "s000001"]
+    first = spark.read.parquet(os.path.join(out, "data", "snapshot=s000000"))
+    assert sorted(r.doc_id for r in first.collect()) == sorted(ids)[:5]
+
+
+def test_cli_rerun_over_committed_root_commits_nothing(spark, tmp_path):
+    """Idempotent resume: a second run() over a fully committed root
+    processes 0 docs and adds no snapshot (no empty data/docids/manifest
+    commit either)."""
+    import run_extraction as RX
+
+    ids = [str(200 + i) for i in range(6)]
+    inp, out = _cli_input(spark, tmp_path, ids), str(tmp_path / "cli_out")
+    assert RX.run(spark, inp, out, batch_size=4)["docs"] == 6
+    before = committed_snapshots(out)
+    again = RX.run(spark, inp, out, batch_size=4)
+    assert again["docs"] == 0 and again["snapshots"] == []
+    assert committed_snapshots(out) == before
+    assert sorted(os.listdir(os.path.join(out, "data"))) == [f"snapshot={s}" for s in before]
 
 
 def test_iceberg_flag_raises_clearly_without_jars(spark, tmp_path):

@@ -92,8 +92,8 @@ def _big_dict(n=50_000, seed=11):
     return entries
 
 
-def test_bktree_candidates_match_band_join_at_lexicon_scale(spark):
-    """The BK-tree kernel route must produce EXACTLY the broadcast band
+def test_index_candidates_match_band_join_at_lexicon_scale(spark):
+    """The DictionaryIndex route must produce EXACTLY the broadcast band
     join's candidate set and the identical resolved corrections on a
     generated 50k-word lexicon — same per-token effective radius, same
     tie-breaks."""
@@ -131,39 +131,34 @@ def test_bktree_candidates_match_band_join_at_lexicon_scale(spark):
     assert res_idx == res_band
 
 
-def test_bktree_degenerate_charset_lexicon_is_safe(spark):
-    """Review finding: a single-character charset lexicon (all pairwise
-    levenshtein 1 — the reference's own CJK domain) used to chain the
-    BK-tree O(n) deep: cloudpickle of the nested nodes blew the
-    recursion limit at task-serialization time and build was O(n^2).
-    The flat-node + depth-capped layout must pickle fine, divert the
-    chain tail to the overflow bucket, and answer queries identically
-    to a linear scan."""
+def test_index_survives_pickle_on_a_charset_lexicon(spark):
+    """The index rides a mapInPandas closure, so it must pickle — also on
+    a single-character charset lexicon (all pairwise levenshtein 1, the
+    reference's own CJK domain), a shape that degenerates a tree index
+    into an O(n)-deep chain whose recursive pickle overflows the stack.
+    The round-tripped index must answer like a linear scan."""
     import pickle
 
-    from basicocr_spark.operators.correction import BKTree
-    from basicocr_spark.reference import levenshtein
+    from basicocr_spark.operators.correction import DictionaryIndex
 
-    entries = [(chr(0x4E00 + i), float(i % 97), i) for i in range(2000)]
-    tree = BKTree(entries)
-    assert tree.overflow, "depth cap never engaged on the chain lexicon"
-    blob = pickle.dumps(tree)  # the closure-capture path Spark takes
-    tree2 = pickle.loads(blob)
-
+    entries = [R.DictEntry(i, chr(0x4E00 + i), float(i % 97)) for i in range(2000)]
+    index = pickle.loads(pickle.dumps(DictionaryIndex(entries)))
     for term, radius in [("中", 1), ("中文", 2), ("xyz", 3), (chr(0x4E00), 0)]:
-        want = sorted(
-            (e, levenshtein(term, e[0]))
-            for e in entries
-            if levenshtein(term, e[0]) <= radius
-        )
-        assert sorted(tree.query(term, radius)) == want, (term, radius)
-        assert sorted(tree2.query(term, radius)) == want, (term, radius)
+        want = [
+            (i, R.levenshtein(term, e.word))
+            for i, e in enumerate(entries)
+            if R.levenshtein(term, e.word) <= radius
+        ]
+        pos, dist = index.within(term, radius)
+        assert list(zip(pos.tolist(), dist.tolist())) == want, (term, radius)
+        assert index.correct(term, radius) == R.correct_word(term, entries, radius)
 
 
-def test_correct_tokens_routes_large_dicts_through_bktree(spark):
+def test_correct_tokens_routes_large_dicts_through_index(spark):
     """correct_tokens with >= threshold driver-side entries must take the
-    kernel route (MapInPandas in the plan, no levenshtein expression) and
-    still return identity fallbacks for unmatched tokens."""
+    DictionaryIndex route (MapInPandas in the plan, no levenshtein
+    expression) and still return identity fallbacks for unmatched
+    tokens."""
     entries = _big_dict()
     tokens_df = spark.createDataFrame(
         [(entries[7][0],), ("zzzzzzzzzzzzzzzz",)], "token string"
