@@ -57,11 +57,6 @@ STOP_TERMS = [
 ]
 
 
-def gen_alphabet() -> list[tuple[int, str]]:
-    """1-based (idx, ch) rows; 0 is the CTC blank (utils.py:31-34)."""
-    return [(i + 1, ch) for i, ch in enumerate(_ALPHA)]
-
-
 def _label_words(rng: random.Random, n: int) -> list[str]:
     """Deterministic words over the normalized alphabet, length 2-6."""
     return ["".join(rng.choice(_ALPHA_LOWER) for _ in range(rng.randint(2, 6))) for _ in range(n)]

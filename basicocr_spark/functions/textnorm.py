@@ -40,18 +40,6 @@ def segment_runs(col: Column) -> Column:
     return F.filter(F.split(col, OTHER_SPLIT_RE), lambda t: t != "")
 
 
-def is_chinese_char(col: Column) -> Column:
-    return col.rlike("^[一-龥]$")
-
-
-def is_alphabet_char(col: Column) -> Column:
-    return col.rlike("^[A-Za-z]$")
-
-
-def is_number_char(col: Column) -> Column:
-    return col.rlike("^[0-9]$")
-
-
 def string2list_reference_col(col: Column) -> Column:
     """Faithful quirky string2List as one Catalyst expression.
 

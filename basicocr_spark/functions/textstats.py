@@ -16,9 +16,6 @@ from pyspark.sql import functions as F
 MOD = 1_000_000_007  # fingerprint / minhash modulus (fits comfortably in int64)
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1, Mersenne
 
-# Tiny high-frequency English function-word list for quality scoring.
-STOP_RATIO_WORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
-
 # Marker-based language-ID heuristic: char-range + function-word evidence.
 LANG_MARKERS = {
     "zh": r"[一-龥]",
@@ -175,13 +172,6 @@ def punct_ratio(col: Column) -> Column:
     n = F.length(col)
     stripped = F.length(F.regexp_replace(col, r"[^0-9A-Za-z\s一-龥]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise((n - stripped) / n.cast("double"))
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(F.lower(col))
-    n = F.size(toks)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOP_RATIO_WORDS)))
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits / n.cast("double"))
 
 
 def quality_score(col: Column) -> Column:

@@ -51,9 +51,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -23,3 +23,11 @@ def fx(spark):
     for name in ("documents", "media_logits", "dictionary", "stopwords", "boxes", "golden"):
         dfs[name] = dfs[name].cache()
     return dfs
+
+
+@pytest.fixture(scope="module")
+def oracles():
+    """`oracle_sql()` built once per test module, not once per case."""
+    import __spark_entry__ as E
+
+    return E.oracle_sql()

@@ -49,9 +49,9 @@ QUERIES = sorted(E.queries().keys())
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, oracles, name):
     q = E.queries()[name]
-    sql = E.oracle_sql().get(name)
+    sql = oracles.get(name)
     assert sql is not None, f"{name}: no oracle"
     sdf = q(spark, SF_DIR)
     s_cols = sdf.columns

@@ -61,20 +61,8 @@ def _docs_df(spark):
 
 
 def _expr_minhash(df, num_hashes=8, k=2, tokenizer=None):
-    sh = TS.word_shingles(F.col("text"), k=k, tokenizer=tokenizer)
-    sh_hashes = F.transform(sh, lambda s: TS._poly_hash_expr(s))
-    cols = []
-    for j in range(num_hashes):
-        a = 2 * j + 1
-        b = 104729 * (j + 1) % TS.MINHASH_PRIME
-        cols.append(
-            F.array_min(
-                F.transform(
-                    sh_hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(TS.MINHASH_PRIME)
-                )
-            ).alias(f"mh{j}")
-        )
-    return df.select("doc_id", *cols)
+    sig = TS.minhash_signature(F.col("text"), num_hashes, k, tokenizer)
+    return df.select("doc_id", *(sig[j].alias(f"mh{j}") for j in range(num_hashes)))
 
 
 def _expr_simhash(df, tokenizer=None):

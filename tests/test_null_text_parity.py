@@ -46,7 +46,7 @@ def _norm(v):
 
 
 @pytest.mark.parametrize("name", OPS)
-def test_null_text_parity(spark, null_dir, name):
+def test_null_text_parity(spark, null_dir, oracles, name):
     sdf = E.queries()[name](spark, null_dir)
     cols = sorted(sdf.columns)
     order = [sdf.columns.index(c) for c in cols]
@@ -56,7 +56,7 @@ def test_null_text_parity(spark, null_dir, name):
         f"CREATE VIEW documents AS SELECT * FROM "
         f"'{os.path.join(null_dir, 'documents.parquet')}/*.parquet'"
     )
-    rel = con.sql(E.oracle_sql()[name])
+    rel = con.sql(oracles[name])
     d_order = [rel.columns.index(c) for c in cols]
     d_rows = sorted(tuple(_norm(r[i]) for i in d_order) for r in rel.fetchall())
     assert s_rows == d_rows

@@ -151,10 +151,10 @@ def _multiset(cols, rows):
 
 
 @pytest.mark.parametrize("name", DOC_QUERIES + EMB_QUERIES)
-def test_adversarial_parity(spark, adv_dir, adv_duck, name):
+def test_adversarial_parity(spark, adv_dir, adv_duck, oracles, name):
     sdf = E.queries()[name](spark, adv_dir)
     s_rows = [tuple(r) for r in sdf.collect()]
-    rel = adv_duck.sql(E.oracle_sql()[name])
+    rel = adv_duck.sql(oracles[name])
     d_rows = rel.fetchall()
     assert sorted(sdf.columns) == sorted(rel.columns), name
     assert len(s_rows) == len(d_rows), (name, len(s_rows), len(d_rows))
@@ -175,7 +175,7 @@ def test_incremental_dedup_verdicts_fire(spark, adv_dir):
     assert all(v == ("new", 0) for k, v in rows.items() if k != 15)
 
 
-def test_boilerplate_unicode_ws_and_null_parity(spark, tmp_path):
+def test_boilerplate_unicode_ws_and_null_parity(spark, oracles, tmp_path):
     """docs_boilerplate_extract's scorer uses Java's (?U)\\s (to stay
     paired with the reference on NBSP/ideographic spaces) while RE2's
     bare \\s is ASCII-only — the oracle spells the White_Space class
@@ -196,7 +196,7 @@ def test_boilerplate_unicode_ws_and_null_parity(spark, tmp_path):
         f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
     )
     sdf = E.queries()["docs_boilerplate_extract"](spark, d)
-    rel = con.sql(E.oracle_sql()["docs_boilerplate_extract"])
+    rel = con.sql(oracles["docs_boilerplate_extract"])
     ms = _multiset(sdf.columns, [tuple(r) for r in sdf.collect()])
     md = _multiset(rel.columns, rel.fetchall())
     assert ms == md, [(a, b) for a, b in zip(ms, md) if a != b]
@@ -206,7 +206,7 @@ def test_boilerplate_unicode_ws_and_null_parity(spark, tmp_path):
     assert texts[2] == ""
 
 
-def test_overflow_ids_and_empty_vectors_parity(spark, tmp_path):
+def test_overflow_ids_and_empty_vectors_parity(spark, oracles, tmp_path):
     """Edge parity for two review findings: (a) doc_id * 2654435761
     overflows int64 at doc_id >= ~3.5e9 — Spark wraps silently, DuckDB
     raises — so the split/strata bucket hash must reduce doc_id mod MOD
@@ -237,7 +237,7 @@ def test_overflow_ids_and_empty_vectors_parity(spark, tmp_path):
         )
     for name in ("docs_split_sample", "docs_stratified_sample", "emb_scalar_quantize"):
         sdf = E.queries()[name](spark, d)
-        rel = con.sql(E.oracle_sql()[name])
+        rel = con.sql(oracles[name])
         assert sorted(sdf.columns) == sorted(rel.columns), name
         ms = _multiset(sdf.columns, [tuple(r) for r in sdf.collect()])
         md = _multiset(rel.columns, rel.fetchall())

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Regenerate QUERIES.md from the live query catalog: one row per
-`__spark_entry__.queries()` entry (first docstring sentence), flagging
-which carry a DuckDB `oracle_sql()` twin. Run from the repo root:
+"""Regenerate QUERIES.md from the query catalog: one row per
+`__spark_entry__.CATALOG` entry (first docstring sentence). Every row
+carries an oracle by construction. Run from the repo root:
 
     python tools/gen_queries_md.py
 """
@@ -16,6 +16,7 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E  # noqa: E402
 
+QUERIES_MD = os.path.join(ROOT, "QUERIES.md")
 
 # abbreviations whose trailing '. ' is not a sentence boundary
 _ABBREV = ("et al", "i.e", "e.g", "cf", "vs", "etc")
@@ -34,33 +35,32 @@ def first_sentence(doc: str | None) -> str:
     return text if len(text) < 160 else text[:157] + "..."
 
 
-def main() -> None:
+def render() -> str:
     qm = E.queries()
-    om = E.oracle_sql()
     lines = [
         f"# Query catalog — {len(qm)} oracle-checked entries",
         "",
-        "Every entry in `__spark_entry__.queries()` is paired with an ANSI-SQL",
-        "oracle in `oracle_sql()` that DuckDB runs on the identical parquet; the",
-        "driver compares rows + schema + values at sf0.01",
-        "(`tests/test_driver_contract.py` mirrors this gate locally, and",
-        "`tests/test_oracle_adversarial.py` re-runs the text/embedding entries on",
-        "adversarial tables). First docstring sentence per query:",
+        "Every row of `__spark_entry__.CATALOG` pairs a query with an ANSI-SQL",
+        "oracle that DuckDB runs on the identical parquet (`queries()` and",
+        "`oracle_sql()` are the table's two views); the driver compares rows +",
+        "schema + values at sf0.01 (`tests/test_driver_contract.py` mirrors this",
+        "gate locally, and `tests/test_oracle_adversarial.py` re-runs the",
+        "text/embedding entries on adversarial tables). First docstring sentence",
+        "per query:",
         "",
         "| query | what it does |",
         "|---|---|",
     ]
-    missing = [name for name in qm if name not in om]
-    for name, fn in qm.items():
-        lines.append(f"| `{name}` | {first_sentence(fn.__doc__)} |")
-    if missing:
-        lines += ["", f"Entries without a SQL oracle (rows-only check): {missing}"]
-    lines.append("")
-    lines.append("Regenerate with `python tools/gen_queries_md.py`.")
-    lines.append("")
-    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
-        f.write("\n".join(lines))
-    print(f"QUERIES.md: {len(qm)} entries, {len(missing)} without oracle")
+    lines += [f"| `{name}` | {first_sentence(fn.__doc__)} |" for name, fn in qm.items()]
+    lines += ["", "Regenerate with `python tools/gen_queries_md.py`.", ""]
+    return "\n".join(lines)
+
+
+def main() -> None:
+    text = render()
+    with open(QUERIES_MD, "w") as f:
+        f.write(text)
+    print(f"QUERIES.md: {len(E.CATALOG)} entries")
 
 
 if __name__ == "__main__":
