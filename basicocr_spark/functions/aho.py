@@ -7,8 +7,9 @@ strip_stop_content) canonicalizes the same semantics as ONE longest-
 first regexp alternation — correct, but the regex engine re-tries the
 alternation at every position, so cost grows with dictionary size and a
 10k-term dictionary is ~O(dict) per character. This module is the
-automaton path for large dictionaries: build once on the driver, ride a
-Spark broadcast, scan each Arrow batch in a single mapInPandas pass.
+automaton path for large dictionaries: one pure-Python automaton, built
+once on the driver, shipped in the task closure, scanning each Arrow
+batch in a single mapInPandas pass.
 
 Equality contract: strip() == re.sub(reference.stop_term_pattern(terms),
 "", text) for every input — leftmost-longest greedy selection over all
@@ -92,64 +93,15 @@ class AhoCorasick:
     def strip(self, text: str) -> str:
         """Remove every term occurrence, leftmost-longest greedy — the
         exact semantics of the longest-first regex alternation."""
-        return resolve_strip(text, self.find_matches(text))
-
-
-def resolve_strip(text: str, matches: list[tuple[int, int]]) -> str:
-    """Leftmost-longest greedy resolution of (start, length) matches —
-    the ONE strip semantics shared by the pure-Python automaton and the
-    pyahocorasick fast path, so the two can only differ in match
-    enumeration (parity-pinned) never in resolution."""
-    if not matches:
-        return text
-    matches = sorted(matches, key=lambda m: (m[0], -m[1]))
-    parts: list[str] = []
-    end = 0
-    for start, length in matches:
-        if start >= end:
-            parts.append(text[end:start])
-            end = start + length
-    parts.append(text[end:])
-    return "".join(parts)
-
-
-def make_c_automaton(terms: list[str]):
-    """pyahocorasick-backed automaton with the same find_matches/strip
-    contract as AhoCorasick — a C scan loop instead of the per-char
-    Python loop (~50x on the constant, same O(text) asymptotics).
-    Returns None when the C extension is not installed (this container:
-    absent), in which case callers fall back to the pure-Python
-    automaton; parity between the two is pinned by tests/test_aho.py
-    whenever the extension IS present."""
-    try:
-        import ahocorasick
-    except ImportError:
-        return None
-
-    A = ahocorasick.Automaton()
-    for t in sorted({t for t in terms if t}):
-        A.add_word(t, len(t))
-    A.make_automaton()
-
-    class _CAho:
-        __slots__ = ()
-
-        def find_matches(self, text: str) -> list[tuple[int, int]]:
-            return [(end - length + 1, length) for end, length in A.iter(text)]
-
-        def strip(self, text: str) -> str:
-            return resolve_strip(text, self.find_matches(text))
-
-    return _CAho()
-
-
-def c_automaton_available() -> bool:
-    try:
-        import ahocorasick  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+        matches = sorted(self.find_matches(text), key=lambda m: (m[0], -m[1]))
+        parts: list[str] = []
+        end = 0
+        for start, length in matches:
+            if start >= end:
+                parts.append(text[end:start])
+                end = start + length
+        parts.append(text[end:])
+        return "".join(parts)
 
 
 def strip_terms_ac_df(
@@ -165,23 +117,13 @@ def strip_terms_ac_df(
     which breaks on column names needing backticks)."""
     from pyspark.sql import types as T
 
-    # C fast path: each WORKER probes pyahocorasick for itself and
-    # builds the C automaton from the (broadcast-sized) term list —
-    # built per-task rather than pickled (the C object's picklability is
-    # not a stable contract), and probed per-worker rather than on the
-    # driver (a driver-side flag would crash tasks on clusters where the
-    # driver venv has the extension but worker images don't — review
-    # finding). The pure-Python automaton is always built and shipped as
-    # the unconditional fallback. Both share resolve_strip, and their
-    # match enumeration is parity-pinned in tests/test_aho.py.
     ac = AhoCorasick(terms)
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.StringType())])
 
     def gen(batches):
-        auto = make_c_automaton(terms) or ac
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = [auto.strip(t) if t is not None else None for t in pdf[text_col]]
+            pdf[out_col] = [ac.strip(t) if t is not None else None for t in pdf[text_col]]
             yield pdf
 
     return df.mapInPandas(gen, schema=schema)

@@ -98,76 +98,16 @@ def resolve_recognizer(recognizer=None):
     kernel falls back to the broadcast fixture-logits lookup (the
     default implementation — it rides a Spark broadcast rather than
     being captured here, so the corpus-sized side is shipped once per
-    executor, not pickled per task). Unlike resolve_decoder there is no
-    import-probe tier: a recognition forward needs a trained checkpoint
-    — deployment config, not an importable library — so the real-model
-    path is always an explicit injection (see
-    crnn_forward_from_torchscript for the torch adapter factory)."""
+    executor, not pickled per task). A real model (a TorchScript or any
+    other checkpoint) is always an explicit injection: a trained forward
+    is deployment config, not an importable library
+    (run_extraction.py --recognizer module:factory;
+    examples/numpy_crnn.py is one such factory)."""
     if recognizer is not None and not callable(recognizer):
         raise TypeError(
             "recognizer must be a callable list[ref] -> list[logits|None]"
         )
     return recognizer
-
-
-def crnn_forward_from_torchscript(model_path: str, fetch_decode=None):
-    """Adapter factory: a TorchScript CRNN checkpoint -> the
-    resolve_recognizer forward protocol. `fetch_decode(ref) ->
-    (w, h, gray_bytes) | None` supplies pixels for a media_ref (defaults
-    through multimodal.resolve_decoder on the ref treated as a local
-    path — production injects its blob-store fetch). The returned
-    forward loads the model LAZILY once per executor process (the
-    factory itself is pickled into task closures, so nothing heavy may
-    load at construction). Gated on torch being importable; this
-    container ships no torch, so the factory raises at call time there —
-    the protocol contract itself is tested with a fake forward
-    (test_recognizer_protocol.py)."""
-    state: dict = {}
-
-    def forward(refs):
-        import numpy as np
-
-        if "model" not in state:
-            try:
-                import torch
-            except ImportError as e:  # pragma: no cover - no torch here
-                raise RuntimeError(
-                    "crnn_forward_from_torchscript needs torch installed "
-                    "on the executors"
-                ) from e
-            state["torch"] = torch
-            state["model"] = torch.jit.load(model_path).eval()
-            if fetch_decode is None:
-                from .multimodal import resolve_decoder
-
-                dec = resolve_decoder()
-
-                def _fetch(ref):
-                    with open(ref, "rb") as fh:  # no leaked fds on workers
-                        return dec(fh.read())
-
-                state["fetch"] = _fetch
-            else:
-                state["fetch"] = fetch_decode
-        torch, model, fetch = state["torch"], state["model"], state["fetch"]
-        out: list = []
-        for ref in refs:  # pragma: no cover - exercised only with torch
-            px = fetch(ref) if ref is not None else None
-            if px is None:
-                out.append(None)
-                continue
-            w, h, buf = px
-            img = np.frombuffer(buf, dtype=np.uint8).reshape(h, w)
-            x = torch.from_numpy(img.astype(np.float32) / 127.5 - 1.0)[None, None]
-            with torch.no_grad():
-                y = model(x).cpu().numpy()
-            # (T, C) for the decoder: collapse the singleton batch/channel
-            # dims ONLY — a bare squeeze() would also drop T when T == 1
-            # and the decoder's argmax(axis=1) dies on a 1-D array
-            out.append(y.reshape(-1, y.shape[-1]))
-        return out
-
-    return forward
 
 
 def _worker_recognizer(

@@ -68,69 +68,19 @@ def decode_fake_image(buf: bytes):
 # ---------------------------------------------------------------------------
 # A MediaDecoder is any callable `bytes | None -> (width, height,
 # grayscale_payload_row_major_uint8_bytes) | None` (None = invalid blob,
-# P1/P2 skip semantics). decode_fake_image satisfies it; so do the
-# cv2/PIL adapters below when their libraries exist. Every media
-# operator takes `decoder=` and defaults through resolve_decoder, so
-# plugging a real pixel decoder in requires ZERO engine edits — exactly
-# the reference's decode chain boundary (dataset.py:69-80: imageBuf ->
-# cv2.imdecode -> grayscale).
-
-
-def _make_cv2_decoder():
-    try:
-        import cv2
-        import numpy as np
-    except ImportError:
-        return None
-
-    def decode(buf: bytes):
-        if buf is None:
-            return None
-        arr = np.frombuffer(buf, dtype=np.uint8)
-        img = cv2.imdecode(arr, cv2.IMREAD_GRAYSCALE)
-        if img is None or img.size == 0:
-            return None
-        h, w = img.shape
-        return w, h, img.tobytes()
-
-    return decode
-
-
-def _make_pil_decoder():
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError:
-        return None
-
-    def decode(buf: bytes):
-        if buf is None:
-            return None
-        try:
-            img = Image.open(io.BytesIO(buf)).convert("L")
-        except Exception:
-            return None
-        w, h = img.size
-        if w * h == 0:
-            return None
-        return w, h, img.tobytes()
-
-    return decode
+# P1/P2 skip semantics). decode_fake_image satisfies it and is the
+# default on every host; a real pixel decoder (e.g. one wrapping
+# cv2.imdecode) is always an explicit injection. Every media operator
+# takes `decoder=` and defaults through resolve_decoder, so plugging one
+# in requires ZERO engine edits — exactly the reference's decode chain
+# boundary (dataset.py:69-80: imageBuf -> cv2.imdecode -> grayscale).
 
 
 def resolve_decoder(decoder=None):
     """Decoder resolution: an explicitly injected callable wins; else the
-    first importable real adapter (cv2, then PIL); else the deterministic
-    fake codec (this container ships no imaging libs — the fake keeps
-    the full Arrow chain testable bit-stably)."""
-    if decoder is not None:
-        return decoder
-    for maker in (_make_cv2_decoder, _make_pil_decoder):
-        real = maker()
-        if real is not None:
-            return real
-    return decode_fake_image
+    deterministic fake codec, whatever imaging libraries the host has
+    (the blob tables behind the media oracles are fake-encoded)."""
+    return decode_fake_image if decoder is None else decoder
 
 
 def validate_media(blobs: DataFrame, decoder=None) -> DataFrame:

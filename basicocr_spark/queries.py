@@ -96,15 +96,16 @@ def _duck_poly(s: str) -> str:
 # Relational core (TPC-H-style; SURVEY.md §2.3/§2.4/§2.5 operator families)
 # ===========================================================================
 
-def _disc_revenue_cents():
-    """round(sum(l_extendedprice * (1 - l_discount)), 2) summed exactly
-    over DECIMAL(18,2) inputs, then cast back to DOUBLE. A DOUBLE sum
+def _disc_revenue_cents(factor=lambda disc: 1 - disc):
+    """round(sum(l_extendedprice * factor(l_discount)), 2) summed exactly
+    over DECIMAL(18,2) inputs, then cast back to DOUBLE. The factor is
+    1 - l_discount (q1/q3/q5) or l_discount itself (q6). A DOUBLE sum
     leaves a half-cent total to float error (2.01 * (1 - 0.50) is
     1.00499... as a double), so Spark and the DuckDB oracle could round
     it apart by 0.01. The *_SQL oracles use the same decimal form."""
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(18,2)")
-    return F.round(F.sum(price * (1 - disc)), 2).cast("double")
+    return F.round(F.sum(price * factor(disc)), 2).cast("double")
 
 
 def q1_pricing_summary(spark, sf_dir):
@@ -151,13 +152,14 @@ def q6_revenue_band(spark, sf_dir):
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
+        _disc_revenue_cents(lambda disc: disc).alias("revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
 
 Q6_SQL = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
+SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18, 2))
+                      * CAST(l_discount AS DECIMAL(18, 2))), 2) AS DOUBLE) AS revenue,
        count(*) AS n_rows
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
@@ -2068,8 +2070,8 @@ def _duck_correction_sql() -> str:
     return rf"""
 WITH dict(line_id, word, freq) AS (VALUES {dict_rows}),
 toks AS (
-  -- uniform() normalization (Q2B + lower) mirrors correct_tokens'
-  -- normalize=True; empty/space-only docs yield no tokens in Spark
+  -- uniform() normalization (Q2B + lower) mirrors correct_tokens;
+  -- empty/space-only docs yield no tokens in Spark
   SELECT DISTINCT lower(translate(unnest(regexp_split_to_array(trim(text), '\s+')),
          '　！＂＃＄％＆＇（）＊＋，－．／０１２３４５６７８９：；＜＝＞？＠ＡＢＣＤＥＦＧＨＩＪＫＬＭＮＯＰＱＲＳＴＵＶＷＸＹＺ［＼］＾＿｀ａｂｃｄｅｆｇｈｉｊｋｌｍｎｏｐｑｒｓｔｕｖｗｘｙｚ｛｜｝～', ' !"#$%&''()*+,-./0123456789:;<=>?@ABCDEFGHIJKLMNOPQRSTUVWXYZ[\]^_`abcdefghijklmnopqrstuvwxyz{{|}}~')) AS token
   FROM documents WHERE trim(text) <> ''

@@ -441,7 +441,7 @@ def rotated_nms(
 def extract_document(
     spans: list[dict],
     logits_by_ref: dict[str, list[list[float]]],
-    dict_entries: list[DictEntry],
+    entries: list[DictEntry],
     stop_terms: list[str],
     alphabet: str = DEFAULT_ALPHABET,
     max_cost: int = 3,
@@ -465,7 +465,7 @@ def extract_document(
         else:
             raw = ctc_greedy_decode(logits_by_ref[sp["media_ref"]], alphabet)
             corrected = (
-                " ".join(correct_word(tok, dict_entries, max_cost) for tok in raw.split())
+                " ".join(correct_word(tok, entries, max_cost) for tok in raw.split())
                 if raw
                 else raw
             )

@@ -42,20 +42,14 @@ from basicocr_spark.operators.salting import (
 from basicocr_spark.plans.checkpoint import SnapshotWriter
 
 
-def load_recognizer(spec: str | None, model_path: str | None):
-    """CLI resolution of the resolve_recognizer seam. Exactly one of:
-    --recognizer-model <path>: a TorchScript CRNN checkpoint, adapted via
-    crnn_forward_from_torchscript. --recognizer <module>:<attr>: attr is
-    a ZERO-ARG FACTORY returning the forward callable (list[media_ref]
-    -> list[logits|None]); a factory (not the callable itself) so user
-    config rides module state instead of CLI plumbing. Neither: None —
-    the Arrow kernel uses the broadcast fixture-logits default."""
-    if model_path and spec:
-        raise SystemExit("--recognizer and --recognizer-model are exclusive")
-    if model_path:
-        from basicocr_spark.operators.extraction import crnn_forward_from_torchscript
-
-        return crnn_forward_from_torchscript(model_path)
+def load_recognizer(spec: str | None):
+    """CLI resolution of the resolve_recognizer seam. --recognizer
+    <module>:<attr>: attr is a ZERO-ARG FACTORY returning the forward
+    callable (list[media_ref] -> list[logits|None]); a factory (not the
+    callable itself) so user config rides module state instead of CLI
+    plumbing. This is how any real model plugs in (e.g.
+    examples.numpy_crnn:make_recognizer). None: the Arrow kernel uses the
+    broadcast fixture-logits default."""
     if spec is None:
         return None
     import importlib
@@ -142,12 +136,6 @@ def main() -> None:
         "default (see operators.extraction.resolve_recognizer)",
     )
     ap.add_argument(
-        "--recognizer-model",
-        default=None,
-        help="TorchScript CRNN checkpoint path, adapted via "
-        "crnn_forward_from_torchscript (requires torch on executors)",
-    )
-    ap.add_argument(
         "--catalog-table",
         default=None,
         help="Iceberg table name (e.g. cat.db.extracted): snapshots commit "
@@ -172,7 +160,7 @@ def main() -> None:
             args.batch_size,
             args.max_spans,
             catalog_table=args.catalog_table,
-            recognizer=load_recognizer(args.recognizer, args.recognizer_model),
+            recognizer=load_recognizer(args.recognizer),
         )
         print(json.dumps(stats))
     finally:

@@ -103,33 +103,3 @@ def test_routing_picks_automaton_only_at_scale(spark):
     assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in big._jdf.queryExecution().executedPlan().toString()
 
-
-def test_c_automaton_parity_when_available():
-    """pyahocorasick fast-path parity: identical match SETS and strip
-    output vs the pure-Python automaton on adversarial overlap dicts.
-    Skips cleanly where the C extension is absent (this container);
-    the import-guarded routing itself is exercised either way by
-    test_ac_df_equals_regexp_column_path."""
-    import pytest
-
-    from basicocr_spark.functions.aho import c_automaton_available, make_c_automaton
-
-    if not c_automaton_available():
-        assert make_c_automaton(["ab"]) is None
-        pytest.skip("pyahocorasick not installed")
-    import random
-
-    rng = random.Random(99)
-    alphabet = "abc"
-    for _ in range(200):
-        terms = list(
-            {
-                "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 4)))
-                for _ in range(rng.randint(1, 8))
-            }
-        )
-        text = "".join(rng.choice(alphabet + " ") for _ in range(rng.randint(0, 80)))
-        py = AhoCorasick(terms)
-        c = make_c_automaton(terms)
-        assert sorted(c.find_matches(text)) == sorted(py.find_matches(text)), (terms, text)
-        assert c.strip(text) == py.strip(text), (terms, text)

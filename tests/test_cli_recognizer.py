@@ -11,7 +11,7 @@ from run_extraction import load_recognizer  # noqa: E402
 
 
 def test_none_means_fixture_default():
-    assert load_recognizer(None, None) is None
+    assert load_recognizer(None) is None
 
 
 def test_factory_spec_resolves_and_is_called(tmp_path, monkeypatch):
@@ -23,18 +23,12 @@ def test_factory_spec_resolves_and_is_called(tmp_path, monkeypatch):
         "    return forward\n"
     )
     monkeypatch.syspath_prepend(str(tmp_path))
-    fwd = load_recognizer("my_rec:factory", None)
+    fwd = load_recognizer("my_rec:factory")
     assert callable(fwd)
     assert fwd(["a", "b"]) == [None, None]
 
 
-def test_bad_spec_and_exclusive_args_fail_fast():
-    with pytest.raises(SystemExit):
-        load_recognizer("no-colon-here", None)
-    with pytest.raises(SystemExit):
-        load_recognizer("m:f", "/some/model.pt")
-
-
-def test_model_path_routes_to_torchscript_adapter():
-    fwd = load_recognizer(None, "/nonexistent/model.pt")
-    assert callable(fwd)  # lazy: loads torch only at first call
+def test_bad_spec_fails_fast():
+    for spec in ("no-colon-here", "mod:"):
+        with pytest.raises(SystemExit):
+            load_recognizer(spec)

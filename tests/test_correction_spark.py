@@ -93,19 +93,18 @@ def _big_dict(n=50_000, seed=11):
 
 
 def test_index_candidates_match_band_join_at_lexicon_scale(spark):
-    """The DictionaryIndex route must produce EXACTLY the broadcast band
-    join's candidate set and the identical resolved corrections on a
-    generated 50k-word lexicon — same per-token effective radius, same
-    tie-breaks."""
+    """DictionaryIndex.within, cut to the per-token effective radius (3
+    when any candidate is within 3, else 6), must produce EXACTLY the
+    broadcast band join's candidate set on a generated 50k-word lexicon,
+    and DictionaryIndex.correct the band join's resolved corrections
+    (identity where the band join has no candidate) — same tie-breaks."""
     from basicocr_spark.operators.correction import (
-        CORRECTION_INDEX_THRESHOLD,
+        DictionaryIndex,
         correction_candidates,
-        correction_candidates_indexed,
         resolve_candidates,
     )
 
     entries = _big_dict()
-    assert len(entries) >= CORRECTION_INDEX_THRESHOLD
     rng = random.Random(3)
     words = [w for w, _, _ in entries]
     toks = set()
@@ -116,27 +115,38 @@ def test_index_candidates_match_band_join_at_lexicon_scale(spark):
         toks.add(w[:i] + rng.choice("abcdefghz") + w[i + 1 :])  # subst
         toks.add(w + "zz")  # dist 2
     toks.add("zzzzzzzzzzzzzzzz")  # no candidate at any radius
-    tokens_df = spark.createDataFrame([(t,) for t in sorted(toks)], "token string")
+    toks = sorted(toks)
+    tokens_df = spark.createDataFrame([(t,) for t in toks], "token string")
 
     dict_df = spark.createDataFrame(
         [(lid, w, fr) for (w, fr, lid) in entries], "line_id long, word string, freq double"
     )
     band = correction_candidates(tokens_df, dict_df)
-    indexed = correction_candidates_indexed(tokens_df, entries)
     key = lambda r: (r["token"], r["word"], r["dist"], r["freq"], r["line_id"])
-    assert sorted(map(key, indexed.collect())) == sorted(map(key, band.collect()))
 
-    res_band = {(r["token"], r["corrected"]) for r in resolve_candidates(band).collect()}
-    res_idx = {(r["token"], r["corrected"]) for r in resolve_candidates(indexed).collect()}
-    assert res_idx == res_band
+    index = DictionaryIndex(R.DictEntry(lid, w, fr) for w, fr, lid in entries)
+    indexed = []
+    for tok in toks:
+        pos, dist = index.within(tok, 6)
+        if not len(pos):
+            continue
+        keep = dist <= (3 if dist.min() <= 3 else 6)
+        for p, d in zip(pos[keep].tolist(), dist[keep].tolist()):
+            e = index.entries[p]
+            indexed.append((tok, e.word, d, e.freq, e.line_id))
+    assert sorted(indexed) == sorted(map(key, band.collect()))
+
+    res_band = {r["token"]: r["corrected"] for r in resolve_candidates(band).collect()}
+    for tok in toks:
+        assert index.correct(tok, 3) == res_band.get(tok, tok), tok
 
 
 def test_index_survives_pickle_on_a_charset_lexicon(spark):
-    """The index rides a mapInPandas closure, so it must pickle — also on
-    a single-character charset lexicon (all pairwise levenshtein 1, the
-    reference's own CJK domain), a shape that degenerates a tree index
-    into an O(n)-deep chain whose recursive pickle overflows the stack.
-    The round-tripped index must answer like a linear scan."""
+    """The index must survive a pickle round trip on a single-character
+    charset lexicon (all pairwise levenshtein 1, the reference's own CJK
+    domain), a shape that degenerates a tree index into an O(n)-deep
+    chain whose recursive pickle overflows the stack. The round-tripped
+    index must answer like a linear scan."""
     import pickle
 
     from basicocr_spark.operators.correction import DictionaryIndex
@@ -153,20 +163,3 @@ def test_index_survives_pickle_on_a_charset_lexicon(spark):
         assert list(zip(pos.tolist(), dist.tolist())) == want, (term, radius)
         assert index.correct(term, radius) == R.correct_word(term, entries, radius)
 
-
-def test_correct_tokens_routes_large_dicts_through_index(spark):
-    """correct_tokens with >= threshold driver-side entries must take the
-    DictionaryIndex route (MapInPandas in the plan, no levenshtein
-    expression) and still return identity fallbacks for unmatched
-    tokens."""
-    entries = _big_dict()
-    tokens_df = spark.createDataFrame(
-        [(entries[7][0],), ("zzzzzzzzzzzzzzzz",)], "token string"
-    )
-    out = correct_tokens(tokens_df, None, max_cost=3, dict_entries=entries)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "levenshtein" not in plan
-    got = {r.token: r.corrected for r in out.collect()}
-    assert got[entries[7][0]] == entries[7][0]
-    assert got["zzzzzzzzzzzzzzzz"] == "zzzzzzzzzzzzzzzz"

@@ -1,5 +1,8 @@
 """Binary media plumbing: validity filter, feature extraction, stub gate."""
 
+import sys
+import types
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,13 +32,19 @@ def test_media_features_deterministic(spark):
         assert v[2] > 0  # aspect ratio
 
 
-def test_decoder_resolution_defaults_to_fake_codec():
-    """No imaging libs in this container: resolve_decoder must fall back
-    to the fake codec, and an explicitly injected callable must win over
-    everything."""
+def test_decoder_resolution_defaults_to_fake_codec(monkeypatch):
+    """resolve_decoder defaults to the fake codec (the blob tables behind
+    the media oracles are fake-encoded), also when imaging libraries are
+    importable, and an explicitly injected callable wins."""
     assert MM.resolve_decoder() is MM.decode_fake_image
     marker = lambda buf: None
     assert MM.resolve_decoder(marker) is marker
+
+    pil = types.ModuleType("PIL")
+    pil.Image = types.ModuleType("PIL.Image")
+    monkeypatch.setitem(sys.modules, "cv2", types.ModuleType("cv2"))
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    assert MM.resolve_decoder() is MM.decode_fake_image
 
 
 def test_injected_decoder_drives_all_media_operators(spark):

@@ -3,6 +3,7 @@ no row-at-a-time `F.udf`, no `.rdd`, no driver-side collect-and-loop in
 the engine package. Arrow-batched pandas UDFs / mapInPandas are the only
 sanctioned Python compute."""
 
+import ast
 import pathlib
 import re
 
@@ -52,4 +53,24 @@ def test_collect_only_in_sanctioned_sites():
             if SANCTION_MARK in lines[line - 1]:
                 continue
             offenders.append(f"{path.name}:{line}")
+    assert not offenders, offenders
+
+
+IMPORT_PROBES = {"ImportError", "ModuleNotFoundError"}
+
+
+def test_no_import_probes():
+    """No `except ImportError` / `except ModuleNotFoundError` handler in
+    the package: an operator's default must not depend on which optional
+    libraries the host happens to have. A real decoder or recognizer
+    plugs in by explicit injection instead."""
+    offenders = []
+    for path in _py_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ExceptHandler) or node.type is None:
+                continue
+            types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+            names = {t.id for t in types if isinstance(t, ast.Name)}
+            if names & IMPORT_PROBES:
+                offenders.append(f"{path.name}:{node.lineno}")
     assert not offenders, offenders

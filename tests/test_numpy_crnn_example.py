@@ -32,7 +32,7 @@ def test_forward_protocol():
 
 
 def test_cli_spec_resolves_the_example():
-    fwd = load_recognizer("examples.numpy_crnn:make_recognizer", None)
+    fwd = load_recognizer("examples.numpy_crnn:make_recognizer")
     assert callable(fwd)
     assert fwd([None]) == [None]
 
@@ -53,7 +53,7 @@ def test_e2e_extraction_with_real_conv_forward(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     docs_df.write.mode("overwrite").parquet(in_dir)
 
-    recognizer = load_recognizer("examples.numpy_crnn:make_recognizer", None)
+    recognizer = load_recognizer("examples.numpy_crnn:make_recognizer")
     stats = run(spark, in_dir, str(tmp_path / "out"), recognizer=recognizer)
     assert stats["docs"] == len(docs)
 

@@ -1,6 +1,9 @@
 """Discounted-revenue sums round half a cent up in Spark and in the
 DuckDB oracle alike. One lineitem row at 2.01 with a 50% discount is
-exactly 1.005; summed as DOUBLE it is 1.00499..., which rounds to 1.00."""
+exactly 1.005; summed as DOUBLE it is 1.00499..., which rounds to 1.00.
+q6 sums price * discount and filters on a 3-7% discount, so it gets its
+own row: 2.30 at 5% is exactly 0.115, which as DOUBLE Spark rounds to
+0.11 and DuckDB to 0.12."""
 
 import datetime as dt
 
@@ -30,30 +33,28 @@ ONE_ROW = {
 }
 
 
-@pytest.fixture(scope="module")
-def one_row_dir(tmp_path_factory):
-    root = tmp_path_factory.mktemp("one_row_tpch")
-    for name, cols in ONE_ROW.items():
-        pq.write_table(pa.table(cols), str(root / f"{name}.parquet"))
-    return str(root)
+Q6_LINEITEM = {**ONE_ROW["lineitem"], "l_extendedprice": [2.30], "l_discount": [0.05]}
 
 
 @pytest.mark.parametrize(
-    "query, oracle, col",
+    "query, oracle, col, lineitem, want",
     [
-        (Q.q1_pricing_summary, Q.Q1_SQL, "sum_disc_price"),
-        (Q.q3_top_orders, Q.Q3_SQL, "revenue"),
-        (Q.q5_region_revenue, Q.Q5_SQL, "revenue"),
+        (Q.q1_pricing_summary, Q.Q1_SQL, "sum_disc_price", ONE_ROW["lineitem"], 1.01),
+        (Q.q3_top_orders, Q.Q3_SQL, "revenue", ONE_ROW["lineitem"], 1.01),
+        (Q.q5_region_revenue, Q.Q5_SQL, "revenue", ONE_ROW["lineitem"], 1.01),
+        (Q.q6_revenue_band, Q.Q6_SQL, "revenue", Q6_LINEITEM, 0.12),
     ],
-    ids=["q1", "q3", "q5"],
+    ids=["q1", "q3", "q5", "q6"],
 )
-def test_half_cent_revenue_rounds_up(spark, one_row_dir, query, oracle, col):
-    (row,) = query(spark, one_row_dir).collect()
-    assert row[col] == 1.01
+def test_half_cent_revenue_rounds_up(spark, tmp_path, query, oracle, col, lineitem, want):
+    for name, cols in {**ONE_ROW, "lineitem": lineitem}.items():
+        pq.write_table(pa.table(cols), str(tmp_path / f"{name}.parquet"))
+    (row,) = query(spark, str(tmp_path)).collect()
+    assert row[col] == want
 
     con = duckdb.connect()
     for name in ONE_ROW:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{one_row_dir}/{name}.parquet'")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{tmp_path}/{name}.parquet'")
     rel = con.sql(oracle)
     (duck,) = rel.fetchall()
-    assert duck[rel.columns.index(col)] == 1.01
+    assert duck[rel.columns.index(col)] == want
