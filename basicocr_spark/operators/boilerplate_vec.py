@@ -6,8 +6,15 @@ column pipeline in boilerplate.py. A call splits every span on "\\n",
 scores each distinct block once (nav and footer blocks repeat across the
 spans of a batch) and joins the kept blocks per span. Whitespace is
 collapsed with `" ".join(s.split())`: `str.split()` and the reference's
-Unicode `\\s` match the same `str.isspace` code points. Equality with the
-reference is pinned by tests/test_boilerplate_vec.py.
+Unicode `\\s` match the same `str.isspace` code points.
+
+The stop-term strip is gated per batch: each term is looked up once in
+the NUL-joined kept text of all spans, and the longest-first `sub` runs
+only on spans that contain a term found there. This is exact. A term
+absent from the joined batch is absent from every span, a span skipped
+by the gate contains no term at all (so `sub` would leave it unchanged),
+and the separator can only add matches, never hide one. Equality with
+the reference is pinned by tests/test_boilerplate_vec.py.
 """
 
 from __future__ import annotations
@@ -64,14 +71,20 @@ def make_vectorized_extractor(stop_terms: list[str]):
                     text = memo[block] = _kept_text(block)
                 if text:
                     kept.append(text)
-            joined = " ".join(kept)
-            # kept blocks are non-empty and collapsed, so the join is
-            # already normalized unless the stop-term strip removed text
-            if stop_sub is not None and joined:
-                stripped = stop_sub("", joined)
-                if len(stripped) != len(joined):
-                    joined = " ".join(stripped.split())
-            out.append(joined)
+            out.append(" ".join(kept))
+        # batch prefilter: a term absent from the whole batch is absent
+        # from every span, and the strip only runs on spans holding a
+        # term that is present
+        batch = "\x00".join(out) if stop_terms else ""
+        present = [t for t in stop_terms if t in batch]
+        if present:
+            for i, joined in enumerate(out):
+                if any(t in joined for t in present):
+                    stripped = stop_sub("", joined)
+                    # kept blocks are non-empty and collapsed, so the join
+                    # is already normalized unless the strip removed text
+                    if len(stripped) != len(joined):
+                        out[i] = " ".join(stripped.split())
         return pd.Series(out, index=raw.index, dtype=object)
 
     return extract

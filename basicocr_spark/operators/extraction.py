@@ -19,12 +19,16 @@ One production kernel plus two independent oracles, cross-checked
 span-for-span in tests:
 
 1. `extract_documents_fused_arrow` — the production kernel: one
-   zero-shuffle mapInArrow pass. The list<struct> span column is
-   processed as flat Arrow child arrays (numpy repeat/lexsort/cumcount,
-   no per-span Python dicts); recognition + correction happen inside the
-   batch, as they would with a real model forward, and correction is a
-   numpy DictionaryIndex probe per distinct decoded token. Docs never
-   straddle partitions, so scaling efficiency is ~1 by construction.
+   zero-shuffle mapInArrow pass, a loop over `_extract_batch`. The
+   list<struct> span column is processed as flat Arrow child arrays (no
+   per-span Python dicts): `kind` and `media_ref` stay Arrow arrays, and
+   only text spans become Python strings. The stitch sorts on the int
+   key (doc, offset) and reaches for the full composite key only when
+   that key ties; spans stored in offset order are not gathered at all.
+   Recognition + correction happen inside the batch, as they would with
+   a real model forward, and correction is a numpy DictionaryIndex probe
+   per distinct decoded token. Docs never straddle partitions, so
+   scaling efficiency is ~1 by construction.
 
 2. `extract_documents_sql` — the declarative Catalyst oracle:
    explode -> route by kind -> broadcast-join logits -> pure-SQL CTC
@@ -40,7 +44,9 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,6 +58,9 @@ from .correction import DictionaryIndex, correct_tokens
 
 EXTRACTED_SPAN_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,order:int>>"
+)
+_OUT_SPAN = pa.struct(
+    [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("order", pa.int32())]
 )
 
 # Per-Python-worker memo store, keyed by a per-job token closed over by
@@ -171,6 +180,69 @@ def _worker_recognizer(
         return got
 
     return cache["extract"], recognize_batch
+
+
+def _extract_batch(rb: pa.RecordBatch, extract_text, recognize_batch) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, spans) through the kernel, with no
+    Spark: `extract_text` and `recognize_batch` are the pair
+    _worker_recognizer returns. The list<struct> span column is read as
+    flat child arrays; only text spans become Python strings, and
+    `kind`/`media_ref` stay Arrow arrays from input to output."""
+    doc_ids = rb.column(rb.schema.get_field_index("doc_id"))
+    spans = rb.column(rb.schema.get_field_index("spans"))
+    # list offsets are relative to the (possibly sliced) values
+    offs = spans.offsets.to_numpy().astype(np.int64)
+    counts = np.diff(offs)
+    values = spans.values[offs[0] : offs[-1]]  # StructArray of the batch's spans
+    total = len(values)
+    kind = values.field("kind")
+    mref = values.field("media_ref")
+
+    out_text = np.empty(total, dtype=object)
+    text_mask = pc.fill_null(pc.equal(kind, "text"), False).to_numpy(zero_copy_only=False)
+    text_ix = np.flatnonzero(text_mask)
+    if len(text_ix):
+        raw = values.field("text").take(text_ix).to_pandas()
+        out_text[text_ix] = extract_text(raw).to_numpy()
+    media_ix = np.flatnonzero(~text_mask)
+    if len(media_ix):  # ONE forward per Arrow batch, over its distinct refs
+        refs = mref.take(media_ix).dictionary_encode(null_encoding="encode")
+        distinct = refs.dictionary.to_pylist()  # first-appearance order, None kept
+        lookup = recognize_batch(distinct)
+        recognized = np.array([lookup[r] for r in distinct], dtype=object)
+        out_text[media_ix] = recognized[refs.indices.to_numpy()]
+
+    # same composite order as the SQL array_sort and the reference:
+    # (doc, offset, kind-or-'', media_ref-or-'', text, then null-presence
+    # flags breaking null-vs-'' ties, null first; out_text is never
+    # null). Only the int pair is sorted unless some (doc, offset)
+    # repeats: the other keys only break those ties.
+    doc_ix = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    key = (doc_ix << 32) + values.field("offset").to_numpy(zero_copy_only=False)
+    perm = None
+    if np.any(key[1:] <= key[:-1]):
+        perm = np.argsort(key, kind="stable")
+        if np.any(np.diff(key[perm]) == 0):
+            perm = np.lexsort((
+                mref.is_valid().to_numpy(zero_copy_only=False),
+                kind.is_valid().to_numpy(zero_copy_only=False),
+                out_text,
+                pc.fill_null(mref, "").to_numpy(zero_copy_only=False),
+                pc.fill_null(kind, "").to_numpy(zero_copy_only=False),
+                key,
+            ))
+        if np.array_equal(perm, np.arange(total)):
+            perm = None
+    if perm is not None:
+        kind, mref, out_text = kind.take(perm), mref.take(perm), out_text[perm]
+
+    order = np.arange(total) - np.repeat(offs[:-1] - offs[0], counts)
+    struct = pa.StructArray.from_arrays(
+        [kind, pa.array(out_text, type=pa.string()), mref, pa.array(order, type=pa.int32())],
+        fields=list(_OUT_SPAN),
+    )
+    out_spans = pa.ListArray.from_arrays(pa.array(offs - offs[0], type=pa.int32()), struct)
+    return pa.RecordBatch.from_arrays([doc_ids, out_spans], ["doc_id", "spans"])
 
 
 def _stitch_spans(unioned: DataFrame, docs: DataFrame) -> DataFrame:
@@ -330,19 +402,18 @@ def extract_documents_fused_arrow(
     recognizer=None,
 ) -> DataFrame:
     """Zero-shuffle production kernel: one mapInArrow pass over the
-    documents scan. The nested list<struct> span column is decomposed
-    into flat Arrow child arrays — no Python dicts are ever materialized
-    for the spans, flatten/regroup are numpy repeat/lexsort/cumcount, and
-    the output list<struct> is rebuilt from offsets. The logits and
+    documents scan, each Arrow batch through `_extract_batch`. The
+    nested list<struct> span column is decomposed into flat Arrow child
+    arrays — no Python dicts are ever materialized for the spans; the
+    in-doc order comes from the int key (doc, offset), with the full
+    composite key only on ties; `kind`/`media_ref` stay Arrow, and the
+    output list<struct> is rebuilt from the input offsets. The logits and
     dictionary fixtures ride a Spark broadcast; in production the
     recognition model plugs in via `recognizer=` (the resolve_recognizer
     forward protocol — one batched ref->logits call per Arrow batch's
     memo misses). Per-worker memoization makes correction cost
     proportional to the distinct recognized vocabulary."""
     import uuid
-
-    import numpy as np
-    import pyarrow as pa
 
     sc = docs.sparkSession.sparkContext
     # dictionary-sized sides broadcast once; the token keys the
@@ -355,81 +426,12 @@ def extract_documents_fused_arrow(
     )
     fwd = resolve_recognizer(recognizer)
 
-    out_type = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("order", pa.int32())]
-    )
-
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        extract_text_vec, recognize_batch = _worker_recognizer(
+        extract_text, recognize_batch = _worker_recognizer(
             *sides, alphabet, max_cost, forward=fwd
         )
-
         for rb in batches:
-            doc_ids = rb.column(rb.schema.get_field_index("doc_id"))
-            spans = rb.column(rb.schema.get_field_index("spans"))
-            if isinstance(spans, pa.ChunkedArray):  # defensive; batches are single-chunk
-                spans = spans.combine_chunks()
-            n_docs = len(spans)
-            # list offsets are relative to the (possibly sliced) values
-            offs64 = spans.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            start, stop = offs64[0], offs64[-1]
-            counts = np.diff(offs64)
-            values = spans.values[start:stop]  # StructArray of the batch's spans
-            total = len(values)
-
-            if total == 0:
-                empty = pa.ListArray.from_arrays(
-                    pa.array(np.zeros(n_docs + 1, dtype=np.int32)),
-                    pa.array([], type=out_type),
-                )
-                yield pa.RecordBatch.from_arrays([doc_ids, empty], ["doc_id", "spans"])
-                continue
-
-            kind = values.field("kind").to_pandas()
-            text = values.field("text").to_pandas()
-            mref = values.field("media_ref").to_pandas()
-            offset = values.field("offset").to_numpy(zero_copy_only=False).astype(np.int64)
-            doc_ix = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
-
-            out_text = pd.Series([None] * total, dtype=object)
-            text_mask = (kind == "text").to_numpy()
-            if text_mask.any():
-                out_text[text_mask] = extract_text_vec(text[text_mask]).to_numpy()
-            media_mask = ~text_mask
-            if media_mask.any():  # ONE forward per Arrow batch
-                refs = mref[media_mask]
-                lookup = recognize_batch(list(pd.unique(refs)))
-                out_text[media_mask] = refs.map(lookup).to_numpy()
-
-            # same composite order as the SQL array_sort and the reference:
-            # (doc, offset, kind-or-'', media_ref-or-'', text-or-'',
-            #  then null-presence flags breaking null-vs-'' ties, null
-            #  first — keeps the kernel and both oracles in lockstep on
-            #  pathological same-key ties)
-            text_key = out_text.fillna("").to_numpy()
-            mref_key = mref.fillna("").to_numpy()
-            kind_key = kind.fillna("").to_numpy()
-            kind_nn = kind.notna().to_numpy()
-            mref_nn = mref.notna().to_numpy()
-            text_nn = out_text.notna().to_numpy()
-            perm = np.lexsort(
-                (text_nn, mref_nn, kind_nn, text_key, mref_key, kind_key, offset, doc_ix)
-            )
-            doc_starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-            order = (np.arange(total) - np.repeat(doc_starts, counts)).astype(np.int32)
-
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(kind.to_numpy()[perm], type=pa.string()),
-                    pa.array(out_text.to_numpy()[perm], type=pa.string()),
-                    pa.array(mref.to_numpy()[perm], type=pa.string()),
-                    pa.array(order, type=pa.int32()),
-                ],
-                fields=list(out_type),
-            )
-            new_offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]).astype(np.int32))
-            out_spans = pa.ListArray.from_arrays(new_offsets, struct)
-            yield pa.RecordBatch.from_arrays([doc_ids, out_spans], ["doc_id", "spans"])
+            yield _extract_batch(rb, extract_text, recognize_batch)
 
     return docs.mapInArrow(kernel, EXTRACTED_SPAN_SCHEMA)
 

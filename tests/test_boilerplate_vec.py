@@ -32,8 +32,9 @@ FRAGMENTS = [
     "<", ">", "\n", "word", "two words", "a", "ab", "click", " here", "click here",
     "all rights reserved", "　",
 ] + WHITESPACE
-# overlapping terms: which one wins is decided by the longest-first order
-STOP_LISTS = [[], STOP_TERMS, ["a", " ", "ab", "　"]]
+# overlapping terms: which one wins is decided by the longest-first order;
+# disjoint terms: a batch can hold one term in some spans, another in others
+STOP_LISTS = [[], STOP_TERMS, ["a", " ", "ab", "　"], ["two words", "click here", "ab"]]
 spans = st.one_of(st.none(), st.lists(st.sampled_from(FRAGMENTS), max_size=30).map("".join))
 
 
@@ -62,13 +63,29 @@ def test_fast_scalar_extractor_matches_reference():
         assert out == R.extract_main_text(raw, STOP_TERMS)
 
 
-@given(st.lists(spans, max_size=8), st.sampled_from(STOP_LISTS))
+@given(st.lists(spans, max_size=12), st.sampled_from(STOP_LISTS))
 @settings(max_examples=400, deadline=None)
 def test_extract_matches_reference_property(data, terms):
+    """A whole batch of spans per call, so the batch-level stop-term
+    prefilter sees terms present in some spans and absent from others."""
     index = pd.RangeIndex(7, 7 + len(data))
     got = make_vectorized_extractor(terms)(pd.Series(data, index=index, dtype=object))
     assert got.index.equals(index)
     assert got.tolist() == _reference(data, terms)
+
+
+def test_stop_term_straddling_a_block_join_is_stripped():
+    """One kept block ends in `click`, the next starts with `here`: the
+    joined text holds `click here`, which must be stripped, while the
+    batch's other spans hold no term."""
+    straddle = (
+        "<p>the first kept block ends with the word click</p>\n"
+        "<p>here the second kept block goes on</p>"
+    )
+    data = ["<p>a neighbour span with no stop term in it</p>", straddle, "<p>click</p>"]
+    got = make_vectorized_extractor(STOP_TERMS)(pd.Series(data, dtype=object)).tolist()
+    assert got == _reference(data, STOP_TERMS)
+    assert got[1] == "the first kept block ends with the word the second kept block goes on"
 
 
 def test_repeated_blocks_do_not_leak_between_rows():
