@@ -87,20 +87,27 @@ def merge_salted_extraction(extracted_salted: DataFrame) -> DataFrame:
     original offset — carried here inside `order` of each salted slice
     being LOCAL; we therefore require the caller to keep the pre-sorted
     slice layout (salt slices are contiguous offset ranges), so global
-    order = (salt, local order)."""
-    exploded = extracted_salted.select(
-        "doc_id", "salt", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        "salt",
-        F.col("s.order").alias("local_order"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    order = (salt, local order).
+
+    A doc whose spans array is empty keeps its row, with `[]`:
+    `explode_outer` yields one null span for it, which `collect_list`
+    skips."""
+    s = F.col("s")
+    exploded = extracted_salted.select("doc_id", "salt", F.explode_outer("spans").alias("s"))
     agg = exploded.groupBy("doc_id").agg(
         F.array_sort(
-            F.collect_list(F.struct("salt", "local_order", "kind", "text", "media_ref"))
+            F.collect_list(
+                F.when(
+                    s.isNotNull(),
+                    F.struct(
+                        F.col("salt"),
+                        s["order"].alias("local_order"),
+                        s["kind"].alias("kind"),
+                        s["text"].alias("text"),
+                        s["media_ref"].alias("media_ref"),
+                    ),
+                )
+            )
         ).alias("sorted_spans")
     )
     return agg.select(

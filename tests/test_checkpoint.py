@@ -166,6 +166,29 @@ def test_cli_rerun_over_committed_root_commits_nothing(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(out, "data"))) == [f"snapshot={s}" for s in before]
 
 
+def test_cli_commits_zero_span_doc_once(spark, tmp_path):
+    """A doc with an empty spans array is committed exactly once, with
+    `[]` (the kernel, the SQL oracle and the reference all keep it), and
+    a re-run over the committed root commits nothing."""
+    import run_extraction as RX
+    from basicocr_spark import schemas as S
+
+    span = ("text", "<p>hello world content</p>", None, 1)
+    docs = spark.createDataFrame(
+        [("100", []), ("101", [span]), ("102", [span])], schema=S.DOCUMENTS
+    )
+    inp, out = str(tmp_path / "cli_in"), str(tmp_path / "cli_out")
+    docs.write.mode("overwrite").parquet(inp)
+    assert RX.run(spark, inp, out, batch_size=2)["docs"] == 3
+    rows = SnapshotWriter(spark, out).read_committed().collect()
+    assert sorted(r.doc_id for r in rows) == ["100", "101", "102"]
+    assert [r.spans for r in rows if r.doc_id == "100"] == [[]]
+    before = committed_snapshots(out)
+    again = RX.run(spark, inp, out, batch_size=2)
+    assert again["docs"] == 0 and again["snapshots"] == []
+    assert committed_snapshots(out) == before
+
+
 def test_iceberg_flag_raises_clearly_without_jars(spark, tmp_path):
     """The sandbox has no Iceberg runtime: iceberg_available must say so,
     and opting into catalog_table must fail AT CONSTRUCTION with the
