@@ -3,11 +3,17 @@
 Interleaved corpora are heavy-tailed in spans-per-doc (some docs carry
 100× the median). The fused pipeline processes a doc inside one task, so
 one mega-doc can straggle its partition. Salting splits each heavy doc
-into bounded sub-docs (same doc_id + salt, disjoint span slices),
-lets them flow through extraction independently on different partitions,
-then merges and renumbers the per-doc output — semantics-preserving
-because span processing is per-span and `order` is recomputed from the
-global offset sort at merge.
+into bounded sub-docs (same doc_id + salt, disjoint span slices), then
+merges and renumbers the per-doc output — semantics-preserving because
+span processing is per-span and `order` is recomputed from the global
+offset sort at merge.
+
+Salting relieves skew only if the slices can reach other tasks, so salt
+BEFORE the exchange and partition on (doc_id, salt): range bounds then
+count every slice as a row of at most max_spans spans, and a heavy doc's
+slices spread over as many tasks as its share of rows
+(run_extraction.run). Salting after a doc_id-keyed exchange keeps every
+slice in its doc's task.
 
 AQE's skew-join splitting handles *join* skew; this handles *map-side*
 task skew, which AQE cannot see.
@@ -42,21 +48,28 @@ def split_salt_key(key_col):
 def salt_heavy_docs(docs: DataFrame, max_spans: int = DEFAULT_MAX_SPANS) -> DataFrame:
     """(doc_id, spans) -> (doc_id, salt, spans) with every row bounded by
     max_spans spans. Light docs pass through with salt 0; heavy docs are
-    sliced. Pure column ops (sequence + slice), no Python."""
+    sliced. Null spans count as `[]`, so such a doc keeps its one row.
+    Pure column ops (sequence + slice), no Python."""
+    spans = F.coalesce(F.col("spans"), F.array())
+    # slices must be contiguous OFFSET ranges for the merge's
+    # (salt, local_order) key to equal global order — a heavy doc is
+    # sorted by offset first (input contract: offsets strictly increasing
+    # per doc); a light doc's one slice is ordered by the kernel itself
+    docs = docs.select(
+        "doc_id",
+        F.when(F.size(spans) <= max_spans, spans)
+        .otherwise(
+            F.array_sort(
+                spans,
+                lambda a, b: F.when(a["offset"] < b["offset"], -1)
+                .when(a["offset"] > b["offset"], 1)
+                .otherwise(0),
+            )
+        )
+        .alias("spans"),
+    )
     n = F.size("spans")
     n_chunks = F.ceil(n / F.lit(max_spans)).cast("int")
-    # slices must be contiguous OFFSET ranges for the merge's
-    # (salt, local_order) key to equal global order — sort by offset
-    # first (input contract: offsets strictly increasing per doc)
-    docs = docs.withColumn(
-        "spans",
-        F.array_sort(
-            "spans",
-            lambda a, b: F.when(a["offset"] < b["offset"], -1)
-            .when(a["offset"] > b["offset"], 1)
-            .otherwise(0),
-        ),
-    )
     chunked = docs.select(
         "doc_id",
         F.explode(

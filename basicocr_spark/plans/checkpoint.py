@@ -19,6 +19,13 @@ Layout:
     <root>/manifest/snapshot=<id>/part-*.parquet lineage+metrics rows
     <root>/_commits/<id>                         commit marker (atomic)
 
+The committed doc_ids are the `doc_id` column of the data snapshots;
+parquet column pruning reads only that column's bytes, so no side table
+duplicates it. A root written with an older layout may also hold a
+`docids/` directory; nothing reads it. Every read of a file the writer
+wrote passes the schema it wrote, so neither a commit nor a resume runs
+a parquet schema-inference job.
+
 Reference analog: periodic torch.save checkpoints (crnn_main.py:232-235)
 and the LMDB writer's 1000-row buffered txns (tolmdb.py:66-68) — here
 commit granularity is a doc_id range batch.
@@ -150,11 +157,10 @@ class SnapshotWriter:
     """Checkpointed extraction runner: process only not-yet-committed
     documents, write data + manifest, then commit atomically.
 
-    catalog_table: opt-in Iceberg mode — data/docids/manifest land in
-    `<catalog_table>` / `<catalog_table>_docids` /
-    `<catalog_table>_manifest` via DataFrameWriterV2 (all partitioned by
-    snapshot_id). The MANIFEST write is last and is the visibility
-    point, exactly like the directory model's marker file: a snapshot is
+    catalog_table: opt-in Iceberg mode — data/manifest land in
+    `<catalog_table>` / `<catalog_table>_manifest` via DataFrameWriterV2
+    (both partitioned by snapshot_id). The MANIFEST write is last and is
+    the visibility point, exactly like the directory model's marker file: a snapshot is
     committed iff its sid appears in the manifest table, so resume
     (processed_doc_ids/read_committed) filters every read to
     manifest-committed sids and orphan data rows from a mid-commit crash
@@ -228,7 +234,7 @@ class SnapshotWriter:
             self._io.overwrite_snapshot(df, name, sid)
 
     def _commit_iceberg(self, extracted: DataFrame, sid: str) -> dict:
-        """Catalog leg of commit(): data -> docids -> manifest LAST.
+        """Catalog leg of commit(): data, then the manifest LAST.
         Each write replaces only this sid's partition (idempotent retry);
         the manifest append makes the snapshot visible. The manifest is
         computed from a read-back of the just-written data partition
@@ -238,9 +244,6 @@ class SnapshotWriter:
         data = extracted.withColumn("snapshot_id", F.lit(sid))
         self._write_snapshot_table(data, self.catalog_table, sid)
         written = self._io.read(self.catalog_table).filter(F.col("snapshot_id") == sid)
-        self._write_snapshot_table(
-            written.select("doc_id", "snapshot_id"), f"{self.catalog_table}_docids", sid
-        )
         wall = time.perf_counter() - t0
         manifest = (
             partition_manifest(written.drop("snapshot_id"))
@@ -253,27 +256,25 @@ class SnapshotWriter:
     # ---------------------------------------------------------------------
 
     def processed_doc_ids(self) -> DataFrame | None:
-        """Union of doc_ids across committed snapshots (read from the
-        small manifest side, not the data: at 10^12 docs the manifest
-        carries ranges; here doc granularity keeps tests exact)."""
+        """doc_ids of the committed snapshots: the `doc_id` column of
+        their data, which column pruning reads alone. Not de-duplicated:
+        each doc commits once, and the left-anti join in pending() needs
+        no distinct side anyway. At 10^12 docs the manifest's doc_id
+        ranges would replace this; here doc granularity keeps tests
+        exact."""
         if self.catalog_table is not None:
             sids = self._committed_sids_catalog()
             if not sids:
                 return None
             return (
-                self._io.read(f"{self.catalog_table}_docids")
+                self._io.read(self.catalog_table)
                 .filter(F.col("snapshot_id").isin(sids))
                 .select("doc_id")
-                .distinct()
             )
-        snaps = committed_snapshots(self.root)
-        if not snaps:
+        paths = self._committed_paths("data")
+        if not paths:
             return None
-        paths = [os.path.join(self.root, "docids", f"snapshot={s}") for s in snaps]
-        existing = [p for p in paths if os.path.isdir(p)]
-        if not existing:
-            return None
-        return self.spark.read.parquet(*existing).select("doc_id").distinct()
+        return self.spark.read.schema("doc_id string").parquet(*paths)
 
     def pending(self, docs: DataFrame) -> DataFrame:
         """Anti-join against committed doc_ids — the resume predicate.
@@ -288,7 +289,7 @@ class SnapshotWriter:
         return docs.join(done, "doc_id", "left_anti")
 
     def commit(self, extracted: DataFrame, snapshot_id: str | None = None) -> dict:
-        """Write data + docids + manifest for this snapshot, then drop the
+        """Write data + manifest for this snapshot, then drop the
         commit marker LAST (atomic visibility point). Committing an
         already-committed sid is a NO-OP returning the existing stats —
         exactly-once semantics for replayed micro-batch epochs; writing
@@ -317,17 +318,14 @@ class SnapshotWriter:
         t0 = time.perf_counter()
         data_path = os.path.join(self.root, "data", f"snapshot={sid}")
         extracted.write.mode("overwrite").parquet(data_path)
-        written = self.spark.read.parquet(data_path)
-        written.select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(self.root, "docids", f"snapshot={sid}")
-        )
+        # every read-back passes the schema just written: no inference job
+        written = self.spark.read.schema(extracted.schema).parquet(data_path)
         wall = time.perf_counter() - t0
         manifest = partition_manifest(written).withColumn(
             "wall_time_sec", F.lit(round(wall, 3))
         )
-        manifest.write.mode("overwrite").parquet(
-            os.path.join(self.root, "manifest", f"snapshot={sid}")
-        )
+        manifest_path = os.path.join(self.root, "manifest", f"snapshot={sid}")
+        manifest.write.mode("overwrite").parquet(manifest_path)
         os.makedirs(os.path.join(self.root, "_commits"), exist_ok=True)
         marker = os.path.join(self.root, "_commits", sid)
         tmp = marker + ".tmp"
@@ -336,9 +334,7 @@ class SnapshotWriter:
         os.rename(tmp, marker)  # atomic on POSIX
         # stats from the tiny WRITTEN manifest — re-collecting the lazy
         # `manifest` plan would rescan+reaggregate the whole data dir
-        written_manifest = self.spark.read.parquet(
-            os.path.join(self.root, "manifest", f"snapshot={sid}")
-        )
+        written_manifest = self.spark.read.schema(manifest.schema).parquet(manifest_path)
         stats = {
             r["partition_id"]: (r["doc_count"], r["span_count"])
             for r in written_manifest.collect()
@@ -355,15 +351,8 @@ class SnapshotWriter:
                 .filter(F.col("snapshot_id").isin(sids))
                 .drop("snapshot_id")
             )
-        snaps = committed_snapshots(self.root)
-        paths = [
-            os.path.join(self.root, "data", f"snapshot={s}")
-            for s in snaps
-            if os.path.isdir(os.path.join(self.root, "data", f"snapshot={s}"))
-        ]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        paths = self._committed_paths("data")
+        return self.spark.read.parquet(*paths) if paths else None
 
     def read_manifest(self) -> DataFrame | None:
         if self.catalog_table is not None:
@@ -373,12 +362,13 @@ class SnapshotWriter:
             return self._io.read(f"{self.catalog_table}_manifest").filter(
                 F.col("snapshot_id").isin(sids)
             )
-        snaps = committed_snapshots(self.root)
+        paths = self._committed_paths("manifest")
+        return self.spark.read.parquet(*paths) if paths else None
+
+    def _committed_paths(self, kind: str) -> list[str]:
+        """<root>/<kind>/snapshot=<sid> of every committed sid on disk."""
         paths = [
-            os.path.join(self.root, "manifest", f"snapshot={s}")
-            for s in snaps
-            if os.path.isdir(os.path.join(self.root, "manifest", f"snapshot={s}"))
+            os.path.join(self.root, kind, f"snapshot={s}")
+            for s in committed_snapshots(self.root)
         ]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        return [p for p in paths if os.path.isdir(p)]

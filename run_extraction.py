@@ -5,17 +5,21 @@
         run_extraction.py --input <parquet dir of interleaved docs> \
         --output <snapshot root> [--batch-size 100000] [--max-spans 64]
 
-Runs the full north-rule job: ingest -> range-partition by doc_id ->
-salt heavy docs -> fused zero-shuffle extraction -> merge salted slices
--> snapshot-commit (data + per-partition lineage manifest, atomic
-marker) in doc_id-bounded snapshots, resuming idempotently: on restart
-only doc_ids absent from committed snapshots are processed.
+Runs the full north-rule job: ingest -> salt heavy docs ->
+range-partition by (doc_id, salt) -> fused zero-shuffle extraction ->
+merge salted slices -> snapshot-commit (data + per-partition lineage
+manifest, atomic marker) in doc_id-bounded snapshots, resuming
+idempotently: on restart only doc_ids absent from committed snapshots
+are processed.
 
-Each snapshot is the --batch-size smallest pending doc_ids, selected by
-an upper doc_id bound (from a doc_id-only ordered take) that filters
-the pending docs before the range repartition, so every snapshot runs
-in parallel. When nothing is pending the run stops before committing:
-a re-run over a fully committed output commits nothing.
+The pending docs are planned once per run: one anti-join against the
+doc_ids committed before the run started. Each snapshot is the
+--batch-size smallest of them above the previous snapshot's upper bound,
+selected by its own upper doc_id bound (from a doc_id-only ordered take)
+that filters the pending docs before the range repartition, so every
+snapshot runs in parallel. This is exact because the run commits every
+doc it selects. When nothing is pending the run stops before
+committing: a re-run over a fully committed output commits nothing.
 """
 
 from __future__ import annotations
@@ -81,13 +85,16 @@ def run(
 
     stats = {"snapshots": [], "docs": 0, "spans": 0, "wall_sec": 0.0}
     t_start = time.perf_counter()
+    # the committed set is read once: every doc this run selects below
+    # commits, so "pending above the previous bound" stays exact without
+    # re-reading the snapshots it adds
+    pending = writer.pending(docs)
     while True:
         # the batch is the batch_size smallest pending doc_ids: a
         # doc_id-only ordered take yields its count and upper bound, and
         # the bound filters BEFORE the range repartition, so every
         # snapshot runs n_parts tasks (a limit() here would force a
         # single-partition GlobalLimit)
-        pending = writer.pending(docs)
         n_batch, last_id = (
             pending.select("doc_id")
             .orderBy("doc_id")
@@ -97,10 +104,13 @@ def run(
         )
         if n_batch == 0:
             break  # nothing pending: a re-run commits nothing
-        batch = pending.filter(F.col("doc_id") <= last_id).repartitionByRange(
-            n_parts, "doc_id"
+        batch = pending.filter(F.col("doc_id") <= last_id)
+        pending = pending.filter(F.col("doc_id") > last_id)
+        # salt before the exchange, so a heavy doc's slices can land in
+        # other tasks
+        salted = salt_heavy_docs(batch, max_spans=max_spans).repartitionByRange(
+            n_parts, "doc_id", "salt"
         )
-        salted = salt_heavy_docs(batch, max_spans=max_spans)
         keyed = salted.select(
             salt_key(F.col("doc_id"), F.col("salt")).alias("doc_id"), "spans"
         )
@@ -139,7 +149,7 @@ def main() -> None:
         "--catalog-table",
         default=None,
         help="Iceberg table name (e.g. cat.db.extracted): snapshots commit "
-        "via writeTo() to <name>/<name>_docids/<name>_manifest instead of "
+        "via writeTo() to <name>/<name>_manifest instead of "
         "the --output directory model (requires the Iceberg runtime + "
         "configured catalog; fails fast at startup otherwise)",
     )

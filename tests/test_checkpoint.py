@@ -152,7 +152,7 @@ def test_cli_snapshots_are_the_smallest_pending_doc_ids(spark, tmp_path):
 
 def test_cli_rerun_over_committed_root_commits_nothing(spark, tmp_path):
     """Idempotent resume: a second run() over a fully committed root
-    processes 0 docs and adds no snapshot (no empty data/docids/manifest
+    processes 0 docs and adds no snapshot (no empty data/manifest
     commit either)."""
     import run_extraction as RX
 
@@ -167,26 +167,91 @@ def test_cli_rerun_over_committed_root_commits_nothing(spark, tmp_path):
 
 
 def test_cli_commits_zero_span_doc_once(spark, tmp_path):
-    """A doc with an empty spans array is committed exactly once, with
-    `[]` (the kernel, the SQL oracle and the reference all keep it), and
-    a re-run over the committed root commits nothing."""
-    import run_extraction as RX
-    from basicocr_spark import schemas as S
+    """A doc with an empty or a null spans array is committed exactly
+    once, with `[]` (the kernel, the SQL oracle and the reference all
+    keep it), and a re-run over the committed root commits nothing. The
+    input is written with pyarrow: S.DOCUMENTS declares spans non-null,
+    so Spark would refuse the null doc."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    span = ("text", "<p>hello world content</p>", None, 1)
-    docs = spark.createDataFrame(
-        [("100", []), ("101", [span]), ("102", [span])], schema=S.DOCUMENTS
+    import run_extraction as RX
+
+    span = {"kind": "text", "text": "<p>hello world content</p>", "media_ref": None, "offset": 1}
+    span_t = pa.struct(
+        [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()),
+         ("offset", pa.int32())]
     )
     inp, out = str(tmp_path / "cli_in"), str(tmp_path / "cli_out")
-    docs.write.mode("overwrite").parquet(inp)
-    assert RX.run(spark, inp, out, batch_size=2)["docs"] == 3
+    os.makedirs(inp)
+    pq.write_table(
+        pa.table(
+            {"doc_id": ["100", "101", "102", "103"], "spans": [[], [span], [span], None]},
+            schema=pa.schema([("doc_id", pa.string()), ("spans", pa.list_(span_t))]),
+        ),
+        os.path.join(inp, "part-00000.parquet"),
+    )
+    assert RX.run(spark, inp, out, batch_size=2)["docs"] == 4
     rows = SnapshotWriter(spark, out).read_committed().collect()
-    assert sorted(r.doc_id for r in rows) == ["100", "101", "102"]
-    assert [r.spans for r in rows if r.doc_id == "100"] == [[]]
+    assert sorted(r.doc_id for r in rows) == ["100", "101", "102", "103"]
+    assert [r.spans for r in rows if r.doc_id in ("100", "103")] == [[], []]
     before = committed_snapshots(out)
     again = RX.run(spark, inp, out, batch_size=2)
     assert again["docs"] == 0 and again["snapshots"] == []
     assert committed_snapshots(out) == before
+
+
+def test_directory_commit_writes_only_data_manifest_and_marker(spark, tmp_path, fx):
+    """A commit writes data/, manifest/ and the marker: no side table
+    duplicates the data's doc_id column."""
+    root = str(tmp_path / "lean")
+    SnapshotWriter(spark, root).commit(fx["golden"].limit(5))
+    assert sorted(os.listdir(root)) == ["_commits", "data", "manifest"]
+    assert os.listdir(os.path.join(root, "_commits")) == ["s000000"]
+    assert os.listdir(os.path.join(root, "data")) == ["snapshot=s000000"]
+    assert os.listdir(os.path.join(root, "manifest")) == ["snapshot=s000000"]
+
+
+def test_cli_resumes_a_root_with_a_stale_docids_dir(spark, tmp_path):
+    """A root in the older layout (a `docids/` copy of each snapshot's
+    doc_ids, here also a crashed attempt's orphan data and docids)
+    resumes from the data snapshots alone: every doc commits once."""
+    import run_extraction as RX
+
+    ids = [str(300 + i) for i in range(9)]
+    out = str(tmp_path / "cli_out")
+    RX.run(spark, _cli_input(spark, tmp_path / "first", ids[:4]), out, batch_size=4)
+    assert committed_snapshots(out) == ["s000000"]
+    committed = spark.read.parquet(os.path.join(out, "data", "snapshot=s000000"))
+    committed.select("doc_id").write.parquet(os.path.join(out, "docids", "snapshot=s000000"))
+    # a crash after the data and docids writes, before the marker
+    orphan = spark.createDataFrame([(d,) for d in ids[4:6]], "doc_id string")
+    orphan.write.parquet(os.path.join(out, "docids", "snapshot=s000001"))
+    committed.limit(1).write.parquet(os.path.join(out, "data", "snapshot=s000001"))
+
+    stats = RX.run(spark, _cli_input(spark, tmp_path, ids), out, batch_size=3)
+    assert stats["docs"] == 5 and stats["snapshots"] == ["s000001", "s000002"]
+    got = [r.doc_id for r in SnapshotWriter(spark, out).read_committed().collect()]
+    assert sorted(got) == ids
+
+
+def test_cli_snapshots_skip_ids_committed_before_the_run(spark, tmp_path):
+    """With every even id committed beforehand, each snapshot is the
+    batch_size smallest ids still pending, and every doc commits once."""
+    import run_extraction as RX
+
+    ids = [str(400 + i) for i in range(20)]
+    evens, odds = ids[::2], ids[1::2]
+    out = str(tmp_path / "cli_out")
+    RX.run(spark, _cli_input(spark, tmp_path / "evens", evens), out, batch_size=100)
+    stats = RX.run(spark, _cli_input(spark, tmp_path, ids), out, batch_size=3)
+    assert stats["docs"] == 10
+    assert stats["snapshots"] == ["s000001", "s000002", "s000003", "s000004"]
+    for k, sid in enumerate(stats["snapshots"]):
+        snap = spark.read.parquet(os.path.join(out, "data", f"snapshot={sid}"))
+        assert sorted(r.doc_id for r in snap.collect()) == odds[3 * k : 3 * k + 3]
+    got = [r.doc_id for r in SnapshotWriter(spark, out).read_committed().collect()]
+    assert sorted(got) == ids
 
 
 def test_iceberg_flag_raises_clearly_without_jars(spark, tmp_path):
@@ -265,10 +330,9 @@ def test_catalog_commit_protocol_manifest_last_and_distinct_sids(spark):
     s2 = w.commit(_batch(spark, [4, 5]))
     # auto sids advance (manifest-derived, not directory-derived)
     assert (s1["snapshot_id"], s2["snapshot_id"]) == ("s000000", "s000001")
-    # per-commit write order: data, docids, manifest LAST (visibility point)
+    # per-commit write order: data, then the manifest LAST (visibility point)
     names = [n for _, n in io.writes]
-    assert names[:3] == ["cat.db.ext", "cat.db.ext_docids", "cat.db.ext_manifest"]
-    assert names[3:6] == ["cat.db.ext", "cat.db.ext_docids", "cat.db.ext_manifest"]
+    assert names == ["cat.db.ext", "cat.db.ext_manifest"] * 2
     got = {r["doc_id"] for r in w.read_committed().collect()}
     assert got == {"1", "2", "3", "4", "5"}
     assert w.read_manifest().count() >= 2
@@ -287,8 +351,8 @@ def test_catalog_replayed_sid_is_noop(spark):
 
 
 def test_catalog_crash_before_manifest_stays_invisible_and_retry_is_exact(spark):
-    # crash after data+docids writes, BEFORE the manifest (write #3)
-    io = _FakeCatalogIO(spark, fail_after_writes=2)
+    # crash after the data write, BEFORE the manifest (write #2)
+    io = _FakeCatalogIO(spark, fail_after_writes=1)
     w = _mk_writer_catalog(spark, io)
     try:
         w.commit(_batch(spark, [7, 8]), snapshot_id="sX")

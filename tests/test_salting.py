@@ -54,3 +54,52 @@ def test_salted_extraction_matches_golden(spark, fx):
     gold = flatten_extracted(fx["golden"])
     assert got.exceptAll(gold).count() == 0
     assert gold.exceptAll(got).count() == 0
+
+
+def _plan_nodes(node):
+    """Pre-order walk of a JVM SparkPlan tree."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_run_salts_heavy_docs_below_the_range_exchange(spark, tmp_path, monkeypatch):
+    """run_extraction.run salts before it range-partitions on (doc_id,
+    salt), so a heavy doc's slices can reach other tasks: the salting
+    Generate sits below that Exchange in the plan handed to commit()."""
+    import run_extraction as RX
+    from basicocr_spark import schemas as S
+    from basicocr_spark.plans.checkpoint import SnapshotWriter
+
+    heavy = [("text", f"<p>span {i} of a long doc</p>", None, i) for i in range(10)]
+    docs = spark.createDataFrame(
+        [("a", heavy), ("b", heavy[:2]), ("c", heavy[:3])], schema=S.DOCUMENTS
+    )
+    inp = str(tmp_path / "in")
+    docs.write.parquet(inp)
+    committed = []
+    orig = SnapshotWriter.commit
+
+    def capture(writer, extracted, snapshot_id=None):
+        committed.append(extracted)
+        return orig(writer, extracted, snapshot_id)
+
+    monkeypatch.setattr(SnapshotWriter, "commit", capture)
+    stats = RX.run(spark, inp, str(tmp_path / "out"), batch_size=10, max_spans=4)
+    assert stats["docs"] == 3 and len(committed) == 1
+
+    plan = committed[0]._jdf.queryExecution().sparkPlan()
+    exchanges = [
+        n for n in _plan_nodes(plan)
+        if n.nodeName() == "Exchange"
+        and n.outputPartitioning().toString().startswith("rangepartitioning(doc_id")
+    ]
+    assert len(exchanges) == 1
+    keys = exchanges[0].outputPartitioning().toString()
+    assert ", salt#" in keys, keys
+    # under the exchange: the salting Generate; above it: the merge's
+    below = [n.nodeName() for n in _plan_nodes(exchanges[0])]
+    assert below.count("Generate") == 1 and "MapInArrow" not in below
+    everywhere = [n.nodeName() for n in _plan_nodes(plan)]
+    assert everywhere.count("Generate") == 2 and "MapInArrow" in everywhere
