@@ -607,12 +607,12 @@ def _heavy_docs():
 def salted_extraction_fixture(spark, sf_dir):
     """Map-side skew handling end-to-end: salt_heavy_docs bounds every
     row at 64 spans, the arrow kernel extracts each slice independently
-    (composite doc_id#salt key), merge_salted_extraction re-sorts and
-    renumbers globally. Oracle: the pure-Python reference extractor on
+    (doc_id and salt joined by salting.salt_key),
+    merge_salted_extraction re-sorts and renumbers globally. Oracle: the pure-Python reference extractor on
     the UNSALTED docs — the whole salt/extract/merge path must be
     semantics-preserving."""
     from .operators.extraction import extract_documents_fused_arrow, flatten_extracted
-    from .operators.salting import merge_salted_extraction, salt_heavy_docs
+    from .operators.salting import merge_salted_extraction, salt_heavy_docs, salt_key, split_salt_key
 
     docs = _heavy_docs()
     docs_df = spark.createDataFrame(
@@ -626,17 +626,15 @@ def salted_extraction_fixture(spark, sf_dir):
     dict_lines = FX.gen_dictionary(SEED)
     salted = salt_heavy_docs(docs_df, max_spans=64)
     extracted = extract_documents_fused_arrow(
-        salted.select(F.concat_ws("#", "doc_id", "salt").alias("doc_id"), "spans"),
+        salted.select(salt_key(F.col("doc_id"), F.col("salt")).alias("doc_id"), "spans"),
         logits,
         dict_lines,
         FX.STOP_TERMS,
     )
-    parts = extracted.select(
-        F.split("doc_id", "#")[0].alias("doc_id"),
-        F.split("doc_id", "#")[1].cast("int").alias("salt"),
-        "spans",
+    did, salt = split_salt_key(F.col("doc_id"))
+    merged = merge_salted_extraction(
+        extracted.select(did.alias("doc_id"), salt.alias("salt"), "spans")
     )
-    merged = merge_salted_extraction(parts)
     return flatten_extracted(merged).select(
         "doc_id", "order", "kind", "text", F.coalesce("media_ref", F.lit("")).alias("media_ref")
     )

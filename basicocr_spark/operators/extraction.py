@@ -19,16 +19,19 @@ One production kernel plus two independent oracles, cross-checked
 span-for-span in tests:
 
 1. `extract_documents_fused_arrow` — the production kernel: one
-   zero-shuffle mapInArrow pass, a loop over `_extract_batch`. The
+   zero-shuffle mapInArrow pass, a loop over `_extract_batch`, built by
+   `fused_arrow_kernel` once per job (broadcasts, memo token, forward),
+   so a multi-snapshot run or a stream maps one kernel many times. The
    list<struct> span column is processed as flat Arrow child arrays (no
    per-span Python dicts): `kind` and `media_ref` stay Arrow arrays, and
    only text spans become Python strings. The stitch sorts on the int
    key (doc, offset) and reaches for the full composite key only when
    that key ties; spans stored in offset order are not gathered at all.
-   Recognition + correction happen inside the batch, as they would with
-   a real model forward, and correction is a numpy DictionaryIndex probe
-   per distinct decoded token. Docs never straddle partitions, so
-   scaling efficiency is ~1 by construction.
+   Recognition + correction happen inside the batch through one route,
+   a model forward (injected, or the fixture-logits lookup wrapped as
+   one), and correction is a numpy DictionaryIndex probe per distinct
+   decoded token. Docs never straddle partitions, so scaling efficiency
+   is ~1 by construction.
 
 2. `extract_documents_sql` — the declarative Catalyst oracle:
    explode -> route by kind -> broadcast-join logits -> pure-SQL CTC
@@ -63,15 +66,16 @@ _OUT_SPAN = pa.struct(
     [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("order", pa.int32())]
 )
 
-# Per-Python-worker memo store, keyed by a per-job token closed over by
-# the kernel. Spark reuses worker processes across a job's partitions,
-# so decode+correct memos (and the compiled boilerplate extractor)
-# survive partition boundaries — rebuilding them per partition costs
-# ~0.23 s x n_partitions of pure recompute at 128 partitions. Bounded:
-# the whole store is cleared when a new job token first appears (the
-# previous job's cache is then dead weight), and each recognition memo
-# (one entry per distinct media_ref / decoded token) is cleared when it
-# reaches _MEMO_CAP entries.
+# Per-Python-worker memo store, keyed by the job token closed over by
+# the kernel (one per fused_arrow_kernel call: a whole run_extraction
+# run or stream, not one snapshot or micro-batch). Spark reuses worker
+# processes across a job's partitions, so decode+correct memos (and the
+# compiled boilerplate extractor) survive partition boundaries —
+# rebuilding them per partition costs ~0.23 s x n_partitions of pure
+# recompute at 128 partitions. Bounded: the whole store is cleared when
+# a new job token first appears (the previous job's cache is then dead
+# weight), and each recognition memo (one entry per distinct media_ref
+# / decoded token) is cleared when it reaches _MEMO_CAP entries.
 _WORKER_CACHE: dict[str, dict] = {}
 _MEMO_CAP = 2**16
 
@@ -103,13 +107,12 @@ def resolve_recognizer(recognizer=None):
     downstream of the seam, so a production model supplies ONLY the
     forward pass.
 
-    An explicitly injected callable wins; else None, meaning the Arrow
-    kernel falls back to the broadcast fixture-logits lookup (the
-    default implementation — it rides a Spark broadcast rather than
-    being captured here, so the corpus-sized side is shipped once per
-    executor, not pickled per task). A real model (a TorchScript or any
-    other checkpoint) is always an explicit injection: a trained forward
-    is deployment config, not an importable library
+    Returns the injected callable, or None when nothing is injected;
+    a non-callable raises TypeError. fused_arrow_kernel turns None into
+    the fixture-logits forward (`_broadcast_lookup`), so the worker only
+    ever sees a forward. A real model (a TorchScript or any other
+    checkpoint) is always an explicit injection: a trained forward is
+    deployment config, not an importable library
     (run_extraction.py --recognizer module:factory;
     examples/numpy_crnn.py is one such factory)."""
     if recognizer is not None and not callable(recognizer):
@@ -119,15 +122,25 @@ def resolve_recognizer(recognizer=None):
     return recognizer
 
 
-def _worker_recognizer(
-    b_logits, b_dict, b_stop, job_token, alphabet, max_cost, forward=None
-):
+def _broadcast_lookup(b_logits, refs):
+    """The fixture-logits forward: each ref's logits from a broadcast
+    {media_ref: logits} dict, None for an unknown ref. Module-level, so
+    `functools.partial(_broadcast_lookup, b_logits)` pickles by
+    reference and the dict ships once per executor with the broadcast."""
+    logits_by_ref = b_logits.value
+    return [logits_by_ref.get(r) for r in refs]
+
+
+def _worker_recognizer(b_dict, b_stop, job_token, forward):
     """Executor-side: (batch text extractor, memoized batched
-    recognize_batch) for the Arrow kernel. `forward` is the
-    resolve_recognizer seam; None means the broadcast fixture-logits
-    lookup. Correction runs through a correction.DictionaryIndex built
-    once per worker per job (one vectorized Levenshtein DP per distinct
-    decoded token); reference.correct_word is only its oracle."""
+    recognize_batch) for the Arrow kernel. `forward` is the model
+    forward fused_arrow_kernel resolved (an injected recognizer or the
+    fixture-logits lookup). Correction runs through a
+    correction.DictionaryIndex built once per worker per job token —
+    one token per fused_arrow_kernel call, so a run_extraction run
+    builds it once however many snapshots it commits (one vectorized
+    Levenshtein DP per distinct decoded token); reference.correct_word
+    is only its oracle."""
     from .boilerplate_vec import make_vectorized_extractor
 
     cache = _job_cache(
@@ -143,19 +156,13 @@ def _worker_recognizer(
     corr_memo: dict[str, str] = cache["corr"]
     media_memo: dict = cache["media"]
 
-    if forward is None:
-        logits_by_ref = b_logits.value
-
-        def forward(refs):
-            return [logits_by_ref.get(r) for r in refs]
-
     def _decode_correct(lg) -> str:
-        raw = decode_ctc_numpy(lg, alphabet) if lg is not None else ""
+        raw = decode_ctc_numpy(lg, R.DEFAULT_ALPHABET) if lg is not None else ""
         if not raw:
             return ""
         txt = corr_memo.get(raw)
         if txt is None:
-            txt = _remember(corr_memo, raw, index.correct(raw, max_cost))
+            txt = _remember(corr_memo, raw, index.correct(raw, 3))
         return txt
 
     def recognize_batch(refs) -> dict:
@@ -313,8 +320,6 @@ def extract_documents_sql(
     logits_df: DataFrame,
     dict_df: DataFrame,
     stop_terms: list[str],
-    alphabet: str = R.DEFAULT_ALPHABET,
-    max_cost: int = 3,
     pdf_blobs: DataFrame | None = None,
 ) -> DataFrame:
     """Declarative Catalyst implementation. Returns EXTRACTED schema.
@@ -371,7 +376,7 @@ def extract_documents_sql(
         .withColumn(
             "raw_text",
             F.when(F.col("logits").isNull(), F.lit("")).otherwise(
-                ctc_greedy_decode(F.col("logits"), alphabet)
+                ctc_greedy_decode(F.col("logits"), R.DEFAULT_ALPHABET)
             ),
         )
     )
@@ -379,7 +384,7 @@ def extract_documents_sql(
     # broadcast map-join rehydrates occurrences. Decoded text over this
     # alphabet is a single token (no whitespace in the alphabet).
     vocab = recognized.select(F.col("raw_text").alias("token")).filter(F.col("token") != "")
-    corrections = correct_tokens(vocab, dict_df, max_cost=max_cost)
+    corrections = correct_tokens(vocab, dict_df, max_cost=3)
     legs.append(
         recognized.withColumn("token", uniform(F.col("raw_text")))
         .join(F.broadcast(corrections), "token", "left")
@@ -392,13 +397,42 @@ def extract_documents_sql(
     return _stitch_spans(unioned, docs)
 
 
+def fused_arrow_kernel(sc, logits_rows, dict_lines, stop_terms, recognizer=None):
+    """Driver-side, once per job: the production kernel as a
+    `mapInArrow` function, and the broadcasts it reads. Broadcasts the
+    dictionary and the stop terms, draws the token that keys the
+    per-worker memo store (`_WORKER_CACHE`) to this job, and resolves
+    the forward: the injected `recognizer`, or else `logits_rows`
+    broadcast and wrapped as `_broadcast_lookup` (no logits are
+    broadcast when a recognizer is injected). Every mapInArrow that runs
+    the kernel shares the memos, so a caller that extracts in several
+    passes (run_extraction's snapshots, a stream's micro-batches) builds
+    it once and unpersists the broadcasts when done."""
+    import functools
+    import uuid
+
+    b_dict, b_stop = sc.broadcast(dict_lines), sc.broadcast(list(stop_terms))
+    broadcasts = [b_dict, b_stop]
+    forward = resolve_recognizer(recognizer)
+    if forward is None:
+        b_logits = sc.broadcast({ref: lg for ref, lg, *_ in logits_rows})
+        broadcasts.append(b_logits)
+        forward = functools.partial(_broadcast_lookup, b_logits)
+    job_token = uuid.uuid4().hex
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        extract_text, recognize_batch = _worker_recognizer(b_dict, b_stop, job_token, forward)
+        for rb in batches:
+            yield _extract_batch(rb, extract_text, recognize_batch)
+
+    return kernel, broadcasts
+
+
 def extract_documents_fused_arrow(
     docs: DataFrame,
     logits_rows: list[tuple],
     dict_lines: list[str],
     stop_terms: list[str],
-    alphabet: str = R.DEFAULT_ALPHABET,
-    max_cost: int = 3,
     recognizer=None,
 ) -> DataFrame:
     """Zero-shuffle production kernel: one mapInArrow pass over the
@@ -412,27 +446,12 @@ def extract_documents_fused_arrow(
     recognition model plugs in via `recognizer=` (the resolve_recognizer
     forward protocol — one batched ref->logits call per Arrow batch's
     memo misses). Per-worker memoization makes correction cost
-    proportional to the distinct recognized vocabulary."""
-    import uuid
-
-    sc = docs.sparkSession.sparkContext
-    # dictionary-sized sides broadcast once; the token keys the
-    # per-worker memo store to this job
-    sides = (
-        sc.broadcast({ref: lg for ref, lg, *_ in logits_rows}),
-        sc.broadcast(dict_lines),
-        sc.broadcast(list(stop_terms)),
-        uuid.uuid4().hex,
+    proportional to the distinct recognized vocabulary. One-shot form of
+    fused_arrow_kernel: callers that extract repeatedly build the kernel
+    once and map it themselves."""
+    kernel, _ = fused_arrow_kernel(
+        docs.sparkSession.sparkContext, logits_rows, dict_lines, stop_terms, recognizer
     )
-    fwd = resolve_recognizer(recognizer)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        extract_text, recognize_batch = _worker_recognizer(
-            *sides, alphabet, max_cost, forward=fwd
-        )
-        for rb in batches:
-            yield _extract_batch(rb, extract_text, recognize_batch)
-
     return docs.mapInArrow(kernel, EXTRACTED_SPAN_SCHEMA)
 
 

@@ -9,7 +9,8 @@ engine a streaming story without inventing semantics the reference
 doesn't have.
 
 - `streaming_extraction(...)`: file-source stream of interleaved docs ->
-  per-microbatch fused extraction -> snapshot-commit via SnapshotWriter
+  per-microbatch fused extraction (one kernel per stream) ->
+  snapshot-commit via SnapshotWriter
   (exactly-once through idempotent doc_id-anti-join + atomic commit).
 - `windowed_event_counts(...)`: watermark + tumbling-window agg, the
   canonical late-data-tolerant rollup.
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas as S
-from ..operators.extraction import extract_documents_fused_arrow
+from ..operators.extraction import EXTRACTED_SPAN_SCHEMA, fused_arrow_kernel
 from ..plans.checkpoint import SnapshotWriter
 
 
@@ -40,14 +41,17 @@ def streaming_extraction(
     """readStream over a parquet directory of interleaved documents;
     each microbatch runs the fused pipeline and snapshot-commits. The
     doc_id anti-join inside `pending` makes redelivered batches no-ops,
-    so end-to-end semantics stay exactly-once even on replay."""
+    so end-to-end semantics stay exactly-once even on replay. The kernel
+    is built once per stream, so worker memos carry across micro-batches;
+    its broadcasts live as long as the driver."""
     writer = SnapshotWriter(spark, ckpt_root)
+    kernel, _ = fused_arrow_kernel(spark.sparkContext, logits_rows, dict_lines, stop_terms)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         pending = writer.pending(batch_df)
         if pending.isEmpty():
             return
-        out = extract_documents_fused_arrow(pending, logits_rows, dict_lines, stop_terms)
+        out = pending.mapInArrow(kernel, EXTRACTED_SPAN_SCHEMA)
         writer.commit(out, snapshot_id=f"epoch{epoch_id:06d}")
 
     stream = (

@@ -20,6 +20,12 @@ that filters the pending docs before the range repartition, so every
 snapshot runs in parallel. This is exact because the run commits every
 doc it selects. When nothing is pending the run stops before
 committing: a re-run over a fully committed output commits nothing.
+
+The extraction kernel is built once per run (operators.extraction.
+fused_arrow_kernel: its broadcasts, memo token and forward), so each
+Python worker keeps one DictionaryIndex and one set of recognition
+memos across every snapshot, and forwards a media ref at most once per
+run. The broadcasts are unpersisted when the run ends, failed or not.
 """
 
 from __future__ import annotations
@@ -36,7 +42,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from basicocr_spark import fixtures as FX
 from basicocr_spark import schemas as S
-from basicocr_spark.operators.extraction import extract_documents_fused_arrow
+from basicocr_spark.operators.extraction import EXTRACTED_SPAN_SCHEMA, fused_arrow_kernel
 from basicocr_spark.operators.salting import (
     merge_salted_extraction,
     salt_heavy_docs,
@@ -52,8 +58,8 @@ def load_recognizer(spec: str | None):
     callable (list[media_ref] -> list[logits|None]); a factory (not the
     callable itself) so user config rides module state instead of CLI
     plumbing. This is how any real model plugs in (e.g.
-    examples.numpy_crnn:make_recognizer). None: the Arrow kernel uses the
-    broadcast fixture-logits default."""
+    examples.numpy_crnn:make_recognizer). None: the kernel's forward is
+    the fixture-logits lookup."""
     if spec is None:
         return None
     import importlib
@@ -70,63 +76,66 @@ def run(
     output_root: str,
     batch_size: int = 100_000,
     max_spans: int = 64,
-    n_partitions: int | None = None,
     catalog_table: str | None = None,
     recognizer=None,
 ) -> dict:
-    n_parts = n_partitions or spark.sparkContext.defaultParallelism * 2
+    n_parts = spark.sparkContext.defaultParallelism * 2
     docs = spark.read.schema(S.DOCUMENTS).parquet(input_dir)
     writer = SnapshotWriter(spark, output_root, catalog_table=catalog_table)
 
-    # recognition + dictionary sides (fixture-driven in this build; a real
-    # deployment broadcasts model weights the same way)
-    logits_rows = FX.gen_media_logits(64, FX.SEED)
-    dict_lines = FX.gen_dictionary(FX.SEED)
+    # recognition + dictionary sides (fixture-driven in this build; an
+    # injected recognizer replaces the fixture logits), built once per run
+    logits_rows = [] if recognizer is not None else FX.gen_media_logits(64, FX.SEED)
+    kernel, broadcasts = fused_arrow_kernel(
+        spark.sparkContext, logits_rows, FX.gen_dictionary(FX.SEED), FX.STOP_TERMS, recognizer
+    )
 
     stats = {"snapshots": [], "docs": 0, "spans": 0, "wall_sec": 0.0}
     t_start = time.perf_counter()
-    # the committed set is read once: every doc this run selects below
-    # commits, so "pending above the previous bound" stays exact without
-    # re-reading the snapshots it adds
-    pending = writer.pending(docs)
-    while True:
-        # the batch is the batch_size smallest pending doc_ids: a
-        # doc_id-only ordered take yields its count and upper bound, and
-        # the bound filters BEFORE the range repartition, so every
-        # snapshot runs n_parts tasks (a limit() here would force a
-        # single-partition GlobalLimit)
-        n_batch, last_id = (
-            pending.select("doc_id")
-            .orderBy("doc_id")
-            .limit(batch_size)
-            .agg(F.count(F.lit(1)), F.max("doc_id"))
-            .first()
-        )
-        if n_batch == 0:
-            break  # nothing pending: a re-run commits nothing
-        batch = pending.filter(F.col("doc_id") <= last_id)
-        pending = pending.filter(F.col("doc_id") > last_id)
-        # salt before the exchange, so a heavy doc's slices can land in
-        # other tasks
-        salted = salt_heavy_docs(batch, max_spans=max_spans).repartitionByRange(
-            n_parts, "doc_id", "salt"
-        )
-        keyed = salted.select(
-            salt_key(F.col("doc_id"), F.col("salt")).alias("doc_id"), "spans"
-        )
-        extracted = extract_documents_fused_arrow(
-            keyed, logits_rows, dict_lines, FX.STOP_TERMS, recognizer=recognizer
-        )
-        did, salt = split_salt_key(F.col("doc_id"))
-        merged = merge_salted_extraction(
-            extracted.select(did.alias("doc_id"), salt.alias("salt"), "spans")
-        )
-        info = writer.commit(merged)
-        stats["snapshots"].append(info["snapshot_id"])
-        stats["docs"] += sum(d for d, _ in info["partitions"].values())
-        stats["spans"] += sum(sp for _, sp in info["partitions"].values())
-        if n_batch < batch_size:
-            break
+    try:
+        # the committed set is read once: every doc this run selects below
+        # commits, so "pending above the previous bound" stays exact without
+        # re-reading the snapshots it adds
+        pending = writer.pending(docs)
+        while True:
+            # the batch is the batch_size smallest pending doc_ids: a
+            # doc_id-only ordered take yields its count and upper bound, and
+            # the bound filters BEFORE the range repartition, so every
+            # snapshot runs n_parts tasks (a limit() here would force a
+            # single-partition GlobalLimit)
+            n_batch, last_id = (
+                pending.select("doc_id")
+                .orderBy("doc_id")
+                .limit(batch_size)
+                .agg(F.count(F.lit(1)), F.max("doc_id"))
+                .first()
+            )
+            if n_batch == 0:
+                break  # nothing pending: a re-run commits nothing
+            batch = pending.filter(F.col("doc_id") <= last_id)
+            pending = pending.filter(F.col("doc_id") > last_id)
+            # salt before the exchange, so a heavy doc's slices can land in
+            # other tasks
+            salted = salt_heavy_docs(batch, max_spans=max_spans).repartitionByRange(
+                n_parts, "doc_id", "salt"
+            )
+            keyed = salted.select(
+                salt_key(F.col("doc_id"), F.col("salt")).alias("doc_id"), "spans"
+            )
+            extracted = keyed.mapInArrow(kernel, EXTRACTED_SPAN_SCHEMA)
+            did, salt = split_salt_key(F.col("doc_id"))
+            merged = merge_salted_extraction(
+                extracted.select(did.alias("doc_id"), salt.alias("salt"), "spans")
+            )
+            info = writer.commit(merged)
+            stats["snapshots"].append(info["snapshot_id"])
+            stats["docs"] += sum(d for d, _ in info["partitions"].values())
+            stats["spans"] += sum(sp for _, sp in info["partitions"].values())
+            if n_batch < batch_size:
+                break
+    finally:
+        for b in broadcasts:
+            b.unpersist()
     stats["wall_sec"] = round(time.perf_counter() - t_start, 3)
     stats["docs_per_sec"] = round(stats["docs"] / stats["wall_sec"], 1) if stats["wall_sec"] else 0.0
     return stats

@@ -5,6 +5,8 @@ unknown media refs, duplicate and shuffled offsets, zero-span docs,
 stop terms in some spans only) and feeds them, whole or sliced, through
 the production text extractor and recognizer on stub broadcasts."""
 
+import functools
+
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings
@@ -57,8 +59,8 @@ def workers():
         mp.setattr(X, "_WORKER_CACHE", {})
         yield {
             name: X._worker_recognizer(
-                _Broadcast(LOGITS), _Broadcast(DICT_LINES), _Broadcast(terms),
-                f"prop-{name}", R.DEFAULT_ALPHABET, 3,
+                _Broadcast(DICT_LINES), _Broadcast(terms), f"prop-{name}",
+                functools.partial(X._broadcast_lookup, _Broadcast(LOGITS)),
             )
             for name, terms in STOP_LISTS.items()
         }

@@ -8,3 +8,20 @@ def test_every_exported_name_resolves():
     imports that name."""
     for name in basicocr_spark.__all__:
         assert callable(getattr(basicocr_spark, name)), name
+
+
+def test_kernel_signature_is_pinned():
+    """The benchmark and the bench scripts call the kernel positionally:
+    a reordered or added parameter must fail here first."""
+    import inspect
+
+    from basicocr_spark.operators.extraction import extract_documents_fused_arrow
+
+    params = inspect.signature(extract_documents_fused_arrow).parameters.values()
+    assert [(p.name, p.default) for p in params] == [
+        ("docs", inspect.Parameter.empty),
+        ("logits_rows", inspect.Parameter.empty),
+        ("dict_lines", inspect.Parameter.empty),
+        ("stop_terms", inspect.Parameter.empty),
+        ("recognizer", None),
+    ]

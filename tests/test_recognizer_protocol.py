@@ -5,6 +5,8 @@ forward replays fixture logits, visibly custom output when it doesn't,
 batched invocation (one forward per kernel batch, misses only), and
 zero engine edits either way."""
 
+import functools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -138,8 +140,8 @@ def test_recognition_memos_stay_under_the_cap(monkeypatch):
 
     def run(token):
         _, recognize = X._worker_recognizer(
-            _Broadcast(logits_by_ref), _Broadcast(dict_lines), _Broadcast(STOP_TERMS),
-            token, R.DEFAULT_ALPHABET, 3,
+            _Broadcast(dict_lines), _Broadcast(STOP_TERMS), token,
+            functools.partial(X._broadcast_lookup, _Broadcast(logits_by_ref)),
         )
         outs, sizes = [], []
         for batch in batches:
