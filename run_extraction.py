@@ -26,6 +26,21 @@ fused_arrow_kernel: its broadcasts, memo token and forward), so each
 Python worker keeps one DictionaryIndex and one set of recognition
 memos across every snapshot, and forwards a media ref at most once per
 run. The broadcasts are unpersisted when the run ends, failed or not.
+
+Cold start. spark-submit starts the driver JVM before this script runs,
+so the class-data archive that `session.get_spark` maps cannot be added
+here. Pass it on the command line instead, with a `SPARK_CONF_DIR` that
+is empty or holds only `*.template` files (JDK 17 neither dumps nor maps
+an archive whose classpath holds a non-empty directory, and the conf dir
+is on the driver classpath):
+
+    mkdir -p /tmp/empty-conf
+    # once: the archive is written when this job's JVM exits
+    SPARK_CONF_DIR=/tmp/empty-conf spark-submit \
+        --driver-java-options "-XX:ArchiveClassesAtExit=/path/spark.jsa" ...
+    # every later job
+    SPARK_CONF_DIR=/tmp/empty-conf spark-submit \
+        --driver-java-options "-XX:SharedArchiveFile=/path/spark.jsa" ...
 """
 
 from __future__ import annotations

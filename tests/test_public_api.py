@@ -25,3 +25,17 @@ def test_kernel_signature_is_pinned():
         ("stop_terms", inspect.Parameter.empty),
         ("recognizer", None),
     ]
+
+
+def test_session_factory_signature_is_pinned():
+    """The benchmark calls get_spark by keyword."""
+    import inspect
+
+    from basicocr_spark.session import get_spark
+
+    params = inspect.signature(get_spark).parameters.values()
+    assert [(p.name, p.default) for p in params] == [
+        ("parallelism", None),
+        ("app_name", "basicocr_spark"),
+        ("extra_conf", None),
+    ]

@@ -2,8 +2,9 @@
 (operators.extraction.fused_arrow_kernel): every snapshot shares one
 job token, so a Python worker forwards each media ref at most once per
 run, and the run's broadcasts are unpersisted when it ends, failed or
-not. A forward that fails mid-run leaves the committed snapshots
-intact, and a re-run commits every remaining doc exactly once."""
+not. A forward that fails mid-run, or a crash between a snapshot's
+data write and its marker, leaves the committed snapshots intact, and a
+re-run commits every remaining doc exactly once."""
 
 import os
 
@@ -14,6 +15,7 @@ import run_extraction as RE
 from basicocr_spark import fixtures as FX
 from basicocr_spark import schemas as S
 from basicocr_spark.operators import extraction as X
+from basicocr_spark.plans import checkpoint as CK
 from basicocr_spark.plans.checkpoint import SnapshotWriter, committed_snapshots
 
 N_DOCS, N_REFS, SEED = 60, 30, 7
@@ -113,8 +115,60 @@ def test_forward_failing_in_snapshot_two_then_rerun_is_exact(spark, tmp_path, mo
 
     stats = RE.run(spark, inp, out, batch_size=N_DOCS // 2, recognizer=healthy)
     assert stats["docs"] == len(second) and stats["snapshots"] == ["s000001"]
+    _assert_exactly_once_and_golden(spark, out, docs, logits_rows)
+
+
+def test_crash_between_data_write_and_marker_then_rerun_is_exact(spark, tmp_path, monkeypatch):
+    """The directory leg crashes after snapshot 2's data and manifest are
+    written but before its marker is renamed into place: run() raises
+    with its broadcasts unpersisted, snapshot 1 stays committed,
+    snapshot 2 stays invisible, and a re-run commits every remaining doc
+    exactly once, with the committed spans equal to the reference."""
+    docs = FX.gen_documents(N_DOCS, N_REFS, seed=SEED)
+    first = docs[: N_DOCS // 2]
+    rename = CK.os.rename
+
+    def crashing_rename(src, dst, *args, **kwargs):
+        if os.path.basename(dst) == "s000001":
+            raise OSError("crashed before the s000001 marker")
+        return rename(src, dst, *args, **kwargs)
+
+    built, unpersisted = [], []
+    build, unpersist = RE.fused_arrow_kernel, Broadcast.unpersist
+
+    def recording_build(*args, **kwargs):
+        kernel, broadcasts = build(*args, **kwargs)
+        built.extend(broadcasts)
+        return kernel, broadcasts
+
+    def recording_unpersist(self, *args, **kwargs):
+        unpersisted.append(self)
+        return unpersist(self, *args, **kwargs)
+
+    inp = _write_docs(spark, docs, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+    with monkeypatch.context() as m:
+        m.setattr(CK.os, "rename", crashing_rename)
+        m.setattr(RE, "fused_arrow_kernel", recording_build)
+        m.setattr(Broadcast, "unpersist", recording_unpersist)
+        with pytest.raises(OSError, match="crashed before the s000001 marker"):
+            RE.run(spark, inp, out, batch_size=N_DOCS // 2)
+    assert len(built) == 3 and all(any(b is u for u in unpersisted) for b in built)
+    assert committed_snapshots(out) == ["s000000"]
+    # the torn attempt left its data behind, but no reader sees it
+    assert os.path.isdir(os.path.join(out, "data", "snapshot=s000001"))
     committed = SnapshotWriter(spark, out).read_committed()
-    assert committed.count() == committed.select("doc_id").distinct().count() == N_DOCS
+    assert sorted(r.doc_id for r in committed.collect()) == [d for d, _ in first]
+
+    stats = RE.run(spark, inp, out, batch_size=N_DOCS // 2)
+    assert stats["docs"] == N_DOCS - len(first) and stats["snapshots"] == ["s000001"]
+    _assert_exactly_once_and_golden(spark, out, docs, FX.gen_media_logits(64, FX.SEED))
+
+
+def _assert_exactly_once_and_golden(spark, out, docs, logits_rows):
+    """Every input doc is committed once, with the reference's spans."""
+    committed = SnapshotWriter(spark, out).read_committed()
+    assert committed.count() == committed.select("doc_id").distinct().count() == len(docs)
     golden = FX.golden_extraction(docs, logits_rows, FX.gen_dictionary(FX.SEED))
     want = {
         d: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in spans]
