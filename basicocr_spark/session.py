@@ -11,6 +11,10 @@ archive, so it skips most class loading and verification. The archive is
 keyed by the JDK and the Spark jars and lives in
 `$XDG_CACHE_HOME/basicocr_spark/cds/` (default `~/.cache`). The first
 session writes it when its JVM exits; every later session maps it.
+
+Its Python workers import pyspark from the installed, bytecode-cached
+package instead of Spark's source-only `pyspark.zip`: the daemon module
+is `worker_daemon`, which drops the zip and execs `pyspark.daemon`.
 """
 
 from __future__ import annotations
@@ -21,9 +25,11 @@ import glob
 import hashlib
 import os
 import shutil
+import site
 import subprocess
 from typing import NamedTuple
 
+import pyspark
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -35,6 +41,7 @@ _DUMP_WAIT_S = 60.0
 # what puts more on the driver classpath than the conf dir and the jars
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 _CDS_OPTIONS = ("-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit", "-Xshare")
+DAEMON_MODULE = "basicocr_spark.worker_daemon"
 
 
 class ClassDataPlan(NamedTuple):
@@ -156,6 +163,19 @@ def _promote_at_exit(proc: subprocess.Popen, plan: ClassDataPlan) -> None:
     atexit.register(promote)
 
 
+def workers_run_daemon_module(environ, cwd: str) -> bool:
+    """Whether the local Python workers of a JVM launched with `environ`
+    in `cwd` can start `DAEMON_MODULE`: this package must be importable
+    from a worker's starting path (its cwd, `PYTHONPATH` or site-packages;
+    `--py-files` reach a worker only per task), and pyspark must be
+    imported from a directory, not a zip, as the daemon will import it."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    start = [cwd, *environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return os.path.isfile(pyspark.__file__) and any(
+        p and os.path.realpath(p) == root for p in start
+    )
+
+
 @contextlib.contextmanager
 def _conf_dir(path: str | None):
     """SPARK_CONF_DIR set to `path` while the JVM launches, then restored."""
@@ -186,7 +206,10 @@ def get_spark(
 
     A JVM this call launches maps the class-data archive (see
     `class_data_plan`); its option is appended to the caller's
-    `spark.driver.extraJavaOptions`, never in place of it.
+    `spark.driver.extraJavaOptions`, never in place of it. Its Python
+    daemon module is `DAEMON_MODULE` when the workers can import it (see
+    `workers_run_daemon_module`); a caller's `spark.python.daemon.module`
+    wins.
     """
     n = parallelism or DEFAULT_CPUS
     builder = (
@@ -212,6 +235,8 @@ def get_spark(
     # own before Python runs)
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         plan = class_data_plan(_find_spark_home(), os.environ, conf, os.getpid())
+        if workers_run_daemon_module(os.environ, os.getcwd()):
+            conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
     if plan is not None:
         _remove_dead_dumps(os.path.dirname(plan.archive))
         java_opts = conf.get("spark.driver.extraJavaOptions", "")

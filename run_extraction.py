@@ -41,6 +41,19 @@ is on the driver classpath):
     # every later job
     SPARK_CONF_DIR=/tmp/empty-conf spark-submit \
         --driver-java-options "-XX:SharedArchiveFile=/path/spark.jsa" ...
+
+The Python workers import pyspark from Spark's source-only pyspark.zip
+unless their daemon drops it, as `session.get_spark` has it do. Where
+every worker host has the pyspark of the cluster's Spark installed and
+can import this package before any task runs (`--py-files` reach a
+worker only per task, so install it or put it on the executors'
+`PYTHONPATH`), add
+
+    --conf spark.python.daemon.module=basicocr_spark.worker_daemon
+
+A daemon that finds no installed pyspark, or another version, exits
+with both versions on stderr. `main()` builds its own session and does
+not set this, because executors may have no installed pyspark.
 """
 
 from __future__ import annotations

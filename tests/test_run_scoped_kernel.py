@@ -2,9 +2,10 @@
 (operators.extraction.fused_arrow_kernel): every snapshot shares one
 job token, so a Python worker forwards each media ref at most once per
 run, and the run's broadcasts are unpersisted when it ends, failed or
-not. A forward that fails mid-run, or a crash between a snapshot's
-data write and its marker, leaves the committed snapshots intact, and a
-re-run commits every remaining doc exactly once."""
+not. A forward that fails mid-run, a crash between a snapshot's data
+write and its marker, or an input file truncated mid-run leaves the
+committed snapshots intact, and a re-run commits every remaining doc
+exactly once."""
 
 import os
 
@@ -21,12 +22,13 @@ from basicocr_spark.plans.checkpoint import SnapshotWriter, committed_snapshots
 N_DOCS, N_REFS, SEED = 60, 30, 7
 
 
-def _write_docs(spark, docs, path):
-    spark.createDataFrame(
+def _write_docs(spark, docs, path, files=None):
+    df = spark.createDataFrame(
         [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans])
          for d, spans in docs],
         schema=S.DOCUMENTS,
-    ).write.parquet(path)
+    )
+    (df if files is None else df.repartition(files)).write.parquet(path)
     return path
 
 
@@ -162,6 +164,43 @@ def test_crash_between_data_write_and_marker_then_rerun_is_exact(spark, tmp_path
 
     stats = RE.run(spark, inp, out, batch_size=N_DOCS // 2)
     assert stats["docs"] == N_DOCS - len(first) and stats["snapshots"] == ["s000001"]
+    _assert_exactly_once_and_golden(spark, out, docs, FX.gen_media_logits(64, FX.SEED))
+
+
+def test_truncated_input_file_then_rerun_is_exact(spark, tmp_path, monkeypatch):
+    """One of the input's parquet files is truncated (its footer cut off)
+    right after snapshot 1 commits: run() raises, snapshot 1 stays
+    committed and snapshot 2 has no marker. With the file restored, a
+    re-run commits every remaining doc exactly once: the committed
+    doc_ids are the input's, each once, with the reference's spans."""
+    docs = FX.gen_documents(N_DOCS, N_REFS, seed=SEED)
+    inp = _write_docs(spark, docs, str(tmp_path / "in"), files=3)
+    victim = os.path.join(inp, sorted(p for p in os.listdir(inp) if p.endswith(".parquet"))[-1])
+    with open(victim, "rb") as f:
+        intact = f.read()
+    commit = SnapshotWriter.commit
+
+    def commit_then_truncate(self, *args, **kwargs):
+        info = commit(self, *args, **kwargs)
+        with open(victim, "wb") as f:
+            f.write(intact[: len(intact) // 2])
+        return info
+
+    out = str(tmp_path / "out")
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotWriter, "commit", commit_then_truncate)
+        with pytest.raises(Exception, match="FAILED_READ_FILE") as failed:
+            RE.run(spark, inp, out, batch_size=N_DOCS // 2)
+    assert os.path.basename(victim) in str(failed.value)
+    assert committed_snapshots(out) == ["s000000"]
+    assert not os.path.exists(os.path.join(out, "_commits", "s000001"))
+    committed = SnapshotWriter(spark, out).read_committed()
+    assert sorted(r.doc_id for r in committed.collect()) == sorted(d for d, _ in docs)[: N_DOCS // 2]
+
+    with open(victim, "wb") as f:
+        f.write(intact)
+    stats = RE.run(spark, inp, out, batch_size=N_DOCS // 2)
+    assert stats["docs"] == N_DOCS - N_DOCS // 2 and stats["snapshots"] == ["s000001"]
     _assert_exactly_once_and_golden(spark, out, docs, FX.gen_media_logits(64, FX.SEED))
 
 

@@ -1,7 +1,9 @@
 """get_spark maps a class-data archive keyed by the JDK and the Spark jars:
 the first session dumps it when its JVM exits, later sessions map it, the
 caller's JVM options survive, a torn dump never reaches the keyed name,
-and a conf dir with a real file is left alone."""
+and a conf dir with a real file is left alone. Its Python daemon module
+is basicocr_spark.worker_daemon when the workers can import it, and a
+caller's daemon or worker module wins."""
 
 import json
 import os
@@ -50,14 +52,18 @@ def _env(tmp_path, **extra):
     return env | extra
 
 
-def _session(env, java_opts, end="exit"):
+def _run(env, script, *argv):
     out = subprocess.run(
-        [sys.executable, "-c", SESSION, java_opts, end],
+        [sys.executable, "-c", script, *argv],
         env=env, capture_output=True, text=True, timeout=300, check=False,
     )
     lines = [json.loads(ln) for ln in out.stdout.splitlines() if ln.startswith("{")]
     assert lines, out.stderr[-3000:]
     return {k: v for ln in lines for k, v in ln.items()}
+
+
+def _session(env, java_opts, end="exit"):
+    return _run(env, SESSION, java_opts, end)
 
 
 def _cds_dir(env):
@@ -172,3 +178,62 @@ def test_session_with_real_conf_file_keeps_its_conf_dir_and_values(tmp_path):
     assert r["from_defaults"] == "on" and r["conf_dir"] == str(conf)
     assert not any("SharedArchiveFile" in a or "ArchiveClassesAtExit" in a for a in r["args"])
     assert not os.path.exists(_cds_dir(env))
+
+
+# one session in a fresh interpreter, extra_conf in argv[1]: one Python
+# task reports where its pyspark came from, its daemon's command line and
+# the caller's worker modules it holds
+DAEMON_SESSION = r"""
+import json, sys
+from basicocr_spark.session import get_spark
+spark = get_spark(2, extra_conf=json.loads(sys.argv[1]))
+
+def probe(batches):
+    import os, sys
+    import pyarrow as pa
+    import pyspark
+    for _ in batches:
+        pass
+    with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+        daemon = f.read().replace(b"\0", b" ").decode()
+    yield pa.RecordBatch.from_pydict({
+        "pyspark_file": [pyspark.__file__], "daemon": [daemon],
+        "worker_modules": [sorted(m for m in sys.modules if m.startswith("pyspark_bocr"))],
+    })
+
+row = spark.range(1, numPartitions=1).mapInArrow(
+    probe, "pyspark_file string, daemon string, worker_modules array<string>").first()
+print(json.dumps(row.asDict() | {
+    "daemon_module": spark.sparkContext.getConf().get("spark.python.daemon.module", None)}))
+spark.stop()
+"""
+
+
+def _daemon_session(tmp_path, conf):
+    # -Xshare:auto turns the class-data plan off: no archive is dumped
+    conf = {"spark.driver.memory": "1g", "spark.driver.extraJavaOptions": "-Xshare:auto"} | conf
+    (tmp_path / "pyspark_bocr_worker.py").write_text("from pyspark.worker import main  # noqa: F401\n")
+    env = _env(tmp_path)
+    env["PYTHONPATH"] = os.pathsep.join([env["PYTHONPATH"], str(tmp_path)])
+    return _run(env, DAEMON_SESSION, json.dumps(conf))
+
+
+def test_workers_start_the_daemon_module_only_where_they_import_it(tmp_path):
+    env = {"PYTHONPATH": str(tmp_path)}
+    assert not S.workers_run_daemon_module(env, str(tmp_path))
+    assert S.workers_run_daemon_module(env, ROOT)
+    assert S.workers_run_daemon_module({"PYTHONPATH": os.pathsep.join([str(tmp_path), ROOT])}, "/")
+
+
+def test_caller_worker_module_reaches_the_execd_daemon(tmp_path):
+    r = _daemon_session(tmp_path, {"spark.python.worker.module": "pyspark_bocr_worker"})
+    assert r["daemon_module"] == S.DAEMON_MODULE
+    assert "-m pyspark.daemon pyspark_bocr_worker" in r["daemon"]
+    assert r["worker_modules"] == ["pyspark_bocr_worker"]
+    assert ".zip" not in r["pyspark_file"]
+
+
+def test_caller_daemon_module_wins(tmp_path):
+    r = _daemon_session(tmp_path, {"spark.python.daemon.module": "pyspark.daemon"})
+    assert r["daemon_module"] == "pyspark.daemon"
+    assert "pyspark.zip" in r["pyspark_file"]
