@@ -4,27 +4,29 @@
 batch x committed join shape, but recomputes the committed side's
 fingerprints/signatures from the corpus on every run. This module is the
 production loop: each ingest batch commits its dedup SKETCHES
-(fingerprints + banded minhash signatures) as an immutable snapshot with
-the same marker-last atomic visibility as plans/checkpoint.SnapshotWriter,
-and the NEXT batch's verdicts join against the committed sketch tables —
-the corpus text is never re-read or re-hashed for dedup after its batch
-commits. At 10^12 docs the committed store is the (tiny relative to text)
-sketch table, partitioned by snapshot so each crawl round appends one
-partition and reads pruned parquet.
+(fingerprints + banded minhash signatures) as an immutable snapshot
+through plans/checkpoint.SnapshotDir, the store SnapshotWriter commits
+to (marker-last atomic visibility), and the NEXT batch's verdicts join
+against the committed sketch tables — the corpus text is never re-read
+or re-hashed for dedup after its batch commits. At 10^12 docs the
+committed store is the (tiny relative to text) sketch table, partitioned
+by snapshot so each crawl round appends one partition and reads pruned
+parquet.
 
 Reference analog: the crawl/ingest loop around basicOCR's batch jobs
-(docs/yangzhanku/n-gram/language-model.md's batch-counts -> merge cycle);
-the snapshot/commit discipline mirrors plans/checkpoint.py.
+(docs/yangzhanku/n-gram/language-model.md's batch-counts -> merge cycle).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hash_kernels as HK
+from ..plans.checkpoint import SnapshotDir, _markers, next_free_sid, publish
 
 
 def _queries():
@@ -35,68 +37,49 @@ def _queries():
     return Q
 
 
+# the sketch tables a snapshot may hold; readers and compact skip absent ones
+_TABLES = ("fp", "bands", "kmv", "phash")
+
+
 class SketchStore:
     """Directory-model committed store for dedup sketches, one snapshot
-    per ingested batch. Layout under `root`:
+    per ingested batch, committed through a checkpoint.SnapshotDir.
+    Layout under `root`:
 
         fp/snapshot=<sid>/      (doc_id, fp)          parquet
         bands/snapshot=<sid>/   (doc_id, band, sig)   parquet
+        kmv/snapshot=<sid>/     (h)                   parquet
+        phash/snapshot=<sid>/   (media_ref, phash)    parquet
         _commits/<sid>          marker file — visibility point
         _compacted/<sid>        tombstone — sid folded into a compaction
 
-    Both tables write BEFORE the marker lands (atomic rename), so a
-    mid-commit crash leaves orphan files that every read ignores:
-    readers union only marker-committed snapshot dirs. Committing an
-    already-committed sid is an exactly-once no-op, same as
-    SnapshotWriter.commit. Tombstones keep compacted-away sids
-    recognizable as committed (`is_committed`) so a replayed stream
-    epoch whose sketches were folded into a compacted snapshot still
-    skips instead of re-running against a store that already contains
-    its own rows."""
+    Every table writes BEFORE the marker is published, so a mid-commit
+    crash leaves orphan files that every read ignores: readers union only
+    marker-committed snapshot dirs. Committing an already-committed sid
+    is an exactly-once no-op, same as SnapshotWriter.commit. Tombstones
+    keep compacted-away sids recognizable as committed (`is_committed`)
+    so a replayed stream epoch whose sketches were folded into a
+    compacted snapshot still skips instead of re-running against a store
+    that already contains its own rows. The root must be local
+    (checkpoint.local_root): on an hdfs:// or s3a:// root every listing
+    would come back empty and every batch would verdict 'new'."""
 
     def __init__(self, spark: SparkSession, root: str):
-        # the directory model below lists/markers via the LOCAL
-        # filesystem; on an hdfs://, s3a://, ... root every listing
-        # would silently come back empty and every batch would verdict
-        # 'new' — a silent dedup loss. Fail loudly instead; a real
-        # cluster deployment routes the store through an object-store
-        # filesystem abstraction (or Iceberg tables, like
-        # plans/checkpoint.SnapshotWriter's catalog leg).
-        if "://" in root:
-            scheme, _, rest = root.partition("://")
-            if scheme != "file":
-                raise ValueError(
-                    f"SketchStore requires a local filesystem root; got scheme "
-                    f"{scheme!r}. Use an Iceberg/object-store-backed store for "
-                    f"non-local roots."
-                )
-            from urllib.parse import unquote
-
-            root = unquote(rest)
-            if not root.startswith("/"):
-                root = "/" + root
         self.spark = spark
-        self.root = root
+        self.snapshots = SnapshotDir(spark, root)
+        self.root = self.snapshots.root
 
     def committed_snapshots(self) -> list[str]:
-        # reuse checkpoint.committed_snapshots: it excludes "<sid>.tmp"
-        # leftovers from a crash between the tmp write and the rename —
-        # a raw listdir would count the phantom as committed
-        from ..plans.checkpoint import committed_snapshots
-
-        return sorted(committed_snapshots(self.root))
+        return self.snapshots.committed()
 
     def superseded_snapshots(self) -> list[str]:
         """Sids folded into a compacted snapshot (tombstoned). Their data
         and markers are gone but their CONTENT is committed — replay
         guards must treat them as committed."""
-        from ..plans.checkpoint import _fs_ls
+        return _markers(os.path.join(self.root, "_compacted"))
 
-        return sorted(
-            s
-            for s in _fs_ls(os.path.join(self.root, "_compacted"))
-            if not s.endswith(".tmp")
-        )
+    def _taken(self) -> set[str]:
+        return set(self.committed_snapshots()) | set(self.superseded_snapshots())
 
     def is_committed(self, sid: str) -> bool:
         """True iff this sid's sketches are visible in the store — either
@@ -104,20 +87,10 @@ class SketchStore:
         The replay guard for stream epochs: a tombstoned epoch must NOT
         re-run, or it would verdict against a store already containing
         its own sketches and mark every doc a dup."""
-        return (
-            os.path.exists(os.path.join(self.root, "_commits", sid))
-            or os.path.exists(os.path.join(self.root, "_compacted", sid))
-        )
+        return sid in self._taken()
 
     def _read(self, table: str) -> DataFrame | None:
-        paths = [
-            os.path.join(self.root, table, f"snapshot={s}")
-            for s in self.committed_snapshots()
-        ]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        return self.snapshots.read(table, self.committed_snapshots())
 
     def committed_fingerprints(self) -> DataFrame | None:
         """(doc_id, fp) across committed batches, None when empty."""
@@ -132,6 +105,20 @@ class SketchStore:
         sketches (media crawl-dedup), None when no batch committed one."""
         return self._read("phash")
 
+    def _commit(self, tables: dict[str, DataFrame], snapshot_id: str | None) -> dict:
+        """Write each table's snapshot, then publish the marker LAST. Auto
+        sids dodge tombstoned sids too: a collision with a compacted-away
+        sid would read as a replayed epoch and silently discard the new
+        batch's sketches."""
+        taken = self._taken()
+        sid = snapshot_id or next_free_sid(list(taken))
+        if sid in taken:  # replayed epoch: exactly-once no-op
+            return {"snapshot_id": sid, "replayed": True}
+        for table, df in tables.items():
+            self.snapshots.write(table, df, sid)
+        self.snapshots.publish(sid)
+        return {"snapshot_id": sid, "replayed": False}
+
     def commit_media_batch(
         self, phash_df: DataFrame, snapshot_id: str | None = None
     ) -> dict:
@@ -140,24 +127,7 @@ class SketchStore:
         exactly-once replay semantics as commit_batch; media and text
         batches share one sid namespace (a media snapshot simply has no
         fp/bands dirs, which readers skip)."""
-        from ..plans.checkpoint import next_free_sid
-
-        taken = sorted(
-            set(self.committed_snapshots()) | set(self.superseded_snapshots())
-        )
-        sid = snapshot_id or next_free_sid(taken)
-        if sid in taken:  # replayed epoch: exactly-once no-op
-            return {"snapshot_id": sid, "replayed": True}
-        phash_df.select("media_ref", "phash").write.mode("overwrite").parquet(
-            os.path.join(self.root, "phash", f"snapshot={sid}")
-        )
-        os.makedirs(os.path.join(self.root, "_commits"), exist_ok=True)
-        marker = os.path.join(self.root, "_commits", sid)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.rename(tmp, marker)
-        return {"snapshot_id": sid, "replayed": False}
+        return self._commit({"phash": phash_df.select("media_ref", "phash")}, snapshot_id)
 
     def committed_kmv(self) -> DataFrame | None:
         """(h) union of committed per-batch KMV token sketches, None when
@@ -176,47 +146,27 @@ class SketchStore:
         `kmv_df` (optional, column `h`) is the batch's k-minimum-values
         distinct-token sketch — committing it makes cross-crawl distinct
         telemetry incremental too (corpus_distinct_estimate)."""
-        from ..plans.checkpoint import next_free_sid
-
-        sids = self.committed_snapshots()
-        # auto sids must dodge tombstoned sids too: a collision with a
-        # compacted-away sid would read as a replayed epoch below and
-        # silently discard the new batch's sketches
-        taken = sorted(set(sids) | set(self.superseded_snapshots()))
-        sid = snapshot_id or next_free_sid(taken)
-        if sid in taken:  # replayed epoch: exactly-once no-op
-            return {"snapshot_id": sid, "replayed": True}
-        fp_df.select("doc_id", "fp").write.mode("overwrite").parquet(
-            os.path.join(self.root, "fp", f"snapshot={sid}")
-        )
-        banded_df.select("doc_id", "band", "sig").write.mode("overwrite").parquet(
-            os.path.join(self.root, "bands", f"snapshot={sid}")
-        )
+        tables = {
+            "fp": fp_df.select("doc_id", "fp"),
+            "bands": banded_df.select("doc_id", "band", "sig"),
+        }
         if kmv_df is not None:
-            kmv_df.select("h").write.mode("overwrite").parquet(
-                os.path.join(self.root, "kmv", f"snapshot={sid}")
-            )
-        os.makedirs(os.path.join(self.root, "_commits"), exist_ok=True)
-        marker = os.path.join(self.root, "_commits", sid)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.rename(tmp, marker)  # atomic on POSIX
-        return {"snapshot_id": sid, "replayed": False}
+            tables["kmv"] = kmv_df.select("h")
+        return self._commit(tables, snapshot_id)
 
     def compact(self) -> dict:
         """Merge every committed snapshot into ONE (full-row distinct on
-        both tables), for read-amplification control on a long-running
+        every table), for read-amplification control on a long-running
         crawl: a year of hourly epochs is ~9k snapshot dirs per read
         otherwise. Order of operations makes every crash window safe:
 
-          1. write the compacted fp/bands dirs under a fresh sid
+          1. write the compacted tables under a fresh sid
           2. tombstone every superseded sid in _compacted/ (so replay
              guards keep recognizing those epochs as committed — see
              is_committed; without this, a stream epoch replayed after
              compaction would re-run against a store that already holds
              its own sketches and verdict every doc a dup)
-          3. drop the new marker (visibility point, atomic rename)
+          3. publish the new marker (visibility point)
           4. delete superseded markers, then their data dirs
 
         A crash between 3 and 4 leaves old + compacted snapshots BOTH
@@ -230,55 +180,27 @@ class SketchStore:
         old = self.committed_snapshots()
         if len(old) <= 1:
             return {"snapshot_id": old[0] if old else None, "compacted": 0}
-        from ..plans.checkpoint import next_free_sid
-
-        sid = next_free_sid(sorted(set(old) | set(self.superseded_snapshots())))
+        sid = next_free_sid(list(self._taken()))
         # every table is optional: a media-only store has no fp/bands,
         # a pre-kmv store no kmv — fold whatever is present
-        fp = self.committed_fingerprints()
-        if fp is not None:
-            fp.distinct().write.mode("overwrite").parquet(
-                os.path.join(self.root, "fp", f"snapshot={sid}")
-            )
-        bands = self.committed_bands()
-        if bands is not None:
-            bands.distinct().write.mode("overwrite").parquet(
-                os.path.join(self.root, "bands", f"snapshot={sid}")
-            )
-        kmv = self.committed_kmv()
-        if kmv is not None:
-            # KMV union = k smallest of the union — compaction loses nothing
-            Q = _queries()
-            kmv.distinct().orderBy(F.col("h").asc()).limit(Q.KMV_K).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.root, "kmv", f"snapshot={sid}"))
-        ph = self.committed_phash()
-        if ph is not None:
-            ph.distinct().write.mode("overwrite").parquet(
-                os.path.join(self.root, "phash", f"snapshot={sid}")
-            )
-        os.makedirs(os.path.join(self.root, "_compacted"), exist_ok=True)
+        for table in _TABLES:
+            df = self._read(table)
+            if df is None:
+                continue
+            df = df.distinct()
+            if table == "kmv":
+                # KMV union = k smallest of the union — compaction loses nothing
+                df = df.orderBy(F.col("h").asc()).limit(_queries().KMV_K)
+            self.snapshots.write(table, df, sid)
         for s in old:
-            stone = os.path.join(self.root, "_compacted", s)
-            tmp = stone + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(sid)  # tombstone records which snapshot absorbed it
-            os.rename(tmp, stone)
-        marker = os.path.join(self.root, "_commits", sid)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.rename(tmp, marker)
-        import shutil
-
+            # the tombstone records which snapshot absorbed it
+            publish(os.path.join(self.root, "_compacted", s), sid)
+        self.snapshots.publish(sid)
         for s in old:
-            os.remove(os.path.join(self.root, "_commits", s))
+            os.remove(self.snapshots.marker(s))
         for s in old:
-            for table in ("fp", "bands", "kmv", "phash"):
-                shutil.rmtree(
-                    os.path.join(self.root, table, f"snapshot={s}"),
-                    ignore_errors=True,
-                )
+            for table in _TABLES:
+                shutil.rmtree(self.snapshots.path(table, s), ignore_errors=True)
         return {"snapshot_id": sid, "compacted": len(old)}
 
 

@@ -2,29 +2,39 @@
 
 North rule: the job "writes per-partition lineage and span-count/
 throughput metrics to an Iceberg manifest table, and resumes idempotently
-from the last committed snapshot checkpoint". The sandbox image has no
-Iceberg jars, so snapshots default to the directory model below; on a
-cluster with the Iceberg runtime configured, pass
-`SnapshotWriter(..., catalog_table="cat.db.extracted")` to commit via
-the DataFrameWriterV2 `writeTo()` appends instead (gated by
-iceberg_available — the flag raises immediately when the jar is
-missing). Either way snapshots are modeled the way Iceberg models them:
-an append-only set of immutable data files plus a small committed
-manifest that is the source of truth. A snapshot is visible iff its
-manifest commit file exists; data written without a manifest commit is
-invisible and re-done on resume — which is exactly idempotent resume.
+from the last committed snapshot checkpoint". Snapshots are modeled the
+way Iceberg models them: immutable data files plus a small manifest, and
+a snapshot is visible only once published. Data written without its
+publish is invisible and re-done on resume: idempotent resume.
 
-Layout:
-    <root>/data/snapshot=<id>/part-*.parquet     output spans
-    <root>/manifest/snapshot=<id>/part-*.parquet lineage+metrics rows
-    <root>/_commits/<id>                         commit marker (atomic)
+One commit protocol over two stores. `SnapshotWriter.commit` runs the
+replay check (a committed sid is a no-op), the data write, a
+schema-passing read-back, the manifest write, the publish, and the stats
+read from the written manifest. A store has four operations:
+`committed()`, `write(table, df, sid)`, `read(table, sids, schema)`,
+`publish(sid)`.
 
-The committed doc_ids are the `doc_id` column of the data snapshots;
-parquet column pruning reads only that column's bytes, so no side table
-duplicates it. A root written with an older layout may also hold a
-`docids/` directory; nothing reads it. Every read of a file the writer
-wrote passes the schema it wrote, so neither a commit nor a resume runs
-a parquet schema-inference job.
+- `SnapshotDir` (default; the sandbox image has no Iceberg jars), under a
+  local root (`local_root`):
+      <root>/data/snapshot=<sid>/part-*.parquet      output spans
+      <root>/manifest/snapshot=<sid>/part-*.parquet  lineage+metrics rows
+      <root>/_commits/<sid>                          commit marker
+  `publish(sid)` drops the marker via `publish(path, text)` (tmp write,
+  then rename); a snapshot is visible iff its marker exists.
+- `_CatalogSnapshots` (`catalog_table="cat.db.extracted"`, Iceberg
+  runtime configured): DataFrameWriterV2 tables `<name>` and
+  `<name>_manifest`, partitioned by snapshot_id. The manifest write is
+  the visibility point, so `publish` does nothing.
+
+`operators/incremental.SketchStore` commits its sketch tables (fp, bands,
+kmv, phash) through a `SnapshotDir` and writes its compaction tombstones
+with `publish`.
+
+The committed doc_ids are the `doc_id` column of the data snapshots
+(column pruning reads only it; an older root's `docids/` dir is unread).
+The commit's read-backs, the resume's doc_id read and every manifest
+read (MANIFEST_SCHEMA) pass a schema, so no commit, replayed commit or
+resume runs a schema-inference job.
 
 Reference analog: periodic torch.save checkpoints (crnn_main.py:232-235)
 and the LMDB writer's 1000-row buffered txns (tolmdb.py:66-68) — here
@@ -35,16 +45,49 @@ from __future__ import annotations
 
 import os
 import time
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _fs_ls(path: str) -> list[str]:
+def _markers(path: str) -> list[str]:
+    """Sorted names of the marker files under `path`. A crash between the
+    tmp write and the rename in `publish` leaves "<name>.tmp": an
+    uncommitted attempt that must not read as a marker."""
     try:
-        return sorted(os.listdir(path))
+        return sorted(s for s in os.listdir(path) if not s.endswith(".tmp"))
     except FileNotFoundError:
         return []
+
+
+def publish(path: str, text: str) -> None:
+    """Create `path` holding `text` atomically: a reader sees either no
+    file or the whole one. The rename is atomic on POSIX."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
+
+
+def local_root(root: str) -> str:
+    """The local path of a snapshot-store root: a `file://` URI unwrapped
+    and unquoted, a plain path as given. Any other scheme raises: the
+    directory model lists and marks through the local filesystem, so on
+    an hdfs://, s3a://, ... root every listing would come back empty and
+    every run would silently redo (or re-verdict) everything."""
+    if "://" not in root:
+        return root
+    scheme, _, rest = root.partition("://")
+    if scheme != "file":
+        raise ValueError(
+            f"snapshot stores require a local filesystem root; got scheme "
+            f"{scheme!r}. Use an Iceberg/object-store-backed store for "
+            f"non-local roots."
+        )
+    path = unquote(rest)
+    return path if path.startswith("/") else "/" + path
 
 
 def iceberg_available(spark: SparkSession) -> bool | None:
@@ -97,9 +140,7 @@ def next_free_sid(committed: list[str]) -> str:
 
 
 def committed_snapshots(root: str) -> list[str]:
-    # a crash between the tmp write and os.rename leaves "<sid>.tmp" in
-    # _commits — an UNcommitted attempt that must not read as a snapshot
-    return [s for s in _fs_ls(os.path.join(root, "_commits")) if not s.endswith(".tmp")]
+    return _markers(os.path.join(local_root(root), "_commits"))
 
 
 def partition_manifest(extracted: DataFrame) -> DataFrame:
@@ -126,13 +167,55 @@ def partition_manifest(extracted: DataFrame) -> DataFrame:
     )
 
 
+# A committed manifest row: partition_manifest plus the snapshot's write
+# wall time. Every manifest read passes it, so none infers a schema.
+MANIFEST_SCHEMA = (
+    "partition_id int, doc_count bigint, span_count bigint, text_span_count bigint, "
+    "media_span_count bigint, min_doc_id string, max_doc_id string, wall_time_sec double"
+)
+
+
+class SnapshotDir:
+    """Directory-model snapshot store: table `t` of snapshot `sid` is the
+    parquet dir `<root>/t/snapshot=<sid>`, visible iff the marker
+    `<root>/_commits/<sid>` exists."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = local_root(root)
+
+    def path(self, table: str, sid: str) -> str:
+        return os.path.join(self.root, table, f"snapshot={sid}")
+
+    def marker(self, sid: str) -> str:
+        return os.path.join(self.root, "_commits", sid)
+
+    def committed(self) -> list[str]:
+        return committed_snapshots(self.root)
+
+    def write(self, table: str, df: DataFrame, sid: str) -> None:
+        df.write.mode("overwrite").parquet(self.path(table, sid))
+
+    def read(self, table: str, sids: list[str], schema=None) -> DataFrame | None:
+        """Union of `table` over `sids`, None when none of them has it (a
+        snapshot may commit only some tables)."""
+        paths = [p for p in (self.path(table, s) for s in sids) if os.path.isdir(p)]
+        if not paths:
+            return None
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
+
+    def publish(self, sid: str) -> None:
+        publish(self.marker(sid), sid)
+
+
 class _CatalogIO:
-    """Side-effect seam for the Iceberg leg: every catalog read/write the
-    SnapshotWriter performs goes through these five calls, so the commit
-    protocol (ordering, idempotence, resume) is unit-testable with a
-    fake — the sandbox has no Iceberg runtime to run the real thing.
-    All tables are partitioned by snapshot_id, so per-sid reads prune to
-    one partition instead of scanning every historical snapshot."""
+    """Side-effect seam for the Iceberg store: every catalog read/write
+    goes through these four calls, so the commit protocol (ordering,
+    idempotence, resume) is unit-testable with a fake — the sandbox has
+    no Iceberg runtime to run the real thing. All tables are partitioned
+    by snapshot_id, so per-sid reads prune to one partition instead of
+    scanning every historical snapshot."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -153,22 +236,60 @@ class _CatalogIO:
         df.writeTo(name).overwrite(F.col("snapshot_id") == F.lit(sid))
 
 
+class _CatalogSnapshots:
+    """Iceberg-model snapshot store: table "data" is `<table>`, any other
+    is `<table>_<name>`, each partitioned by a snapshot_id column that
+    reads drop. A snapshot is committed iff its sid has manifest rows, so
+    orphan data rows from a mid-commit crash stay invisible and the retry
+    overwrites that sid's partitions."""
+
+    def __init__(self, io: _CatalogIO, table: str):
+        self.io = io
+        self.table = table
+
+    def _name(self, table: str) -> str:
+        return self.table if table == "data" else f"{self.table}_{table}"
+
+    def committed(self) -> list[str]:
+        name = self._name("manifest")
+        if not self.io.exists(name):
+            return []
+        return sorted(
+            r["snapshot_id"]
+            for r in self.io.read(name).select("snapshot_id").distinct().collect()
+        )
+
+    def write(self, table: str, df: DataFrame, sid: str) -> None:
+        name, df = self._name(table), df.withColumn("snapshot_id", F.lit(sid))
+        if not self.io.exists(name):
+            self.io.create_partitioned(df, name)
+        else:
+            self.io.overwrite_snapshot(df, name, sid)
+
+    def read(self, table: str, sids: list[str], schema=None) -> DataFrame | None:
+        """The catalog table carries its own schema; `schema` is unused."""
+        name = self._name(table)
+        if not sids or not self.io.exists(name):
+            return None
+        return (
+            self.io.read(name).filter(F.col("snapshot_id").isin(sids)).drop("snapshot_id")
+        )
+
+    def publish(self, sid: str) -> None:
+        """Nothing to do: the manifest write made `sid` visible."""
+
+
 class SnapshotWriter:
     """Checkpointed extraction runner: process only not-yet-committed
-    documents, write data + manifest, then commit atomically.
+    documents, write data + manifest, then publish the snapshot.
 
     catalog_table: opt-in Iceberg mode — data/manifest land in
     `<catalog_table>` / `<catalog_table>_manifest` via DataFrameWriterV2
-    (both partitioned by snapshot_id). The MANIFEST write is last and is
-    the visibility point, exactly like the directory model's marker file: a snapshot is
-    committed iff its sid appears in the manifest table, so resume
-    (processed_doc_ids/read_committed) filters every read to
-    manifest-committed sids and orphan data rows from a mid-commit crash
-    stay invisible; the retry overwrites that sid's partitions
-    idempotently. Constructing with a catalog_table while the Iceberg
-    jar or the named catalog's spark.sql.catalog config is absent raises
-    immediately with the directory-model fallback named, instead of
-    failing mid-job."""
+    (see _CatalogSnapshots); otherwise they land under `root` (see
+    SnapshotDir), which must be a local path or a file:// URI.
+    Constructing with a catalog_table while the Iceberg jar or the named
+    catalog's spark.sql.catalog config is absent raises immediately with
+    the directory-model fallback named, instead of failing mid-job."""
 
     def __init__(
         self,
@@ -180,7 +301,10 @@ class SnapshotWriter:
         self.spark = spark
         self.root = root
         self.catalog_table = catalog_table
-        if catalog_table is not None and catalog_io is None:
+        if catalog_table is None:
+            self.store = SnapshotDir(spark, root)
+            return
+        if catalog_io is None:
             # a 3-part name's first segment is the catalog; 1/2-part
             # names resolve against the session's default catalog
             # (spark.sql.defaultCatalog, itself defaulting to
@@ -204,56 +328,7 @@ class SnapshotWriter:
                     "catalog_table to use the directory snapshot model "
                     "(same commit semantics, local filesystem)."
                 )
-        self._io = catalog_io or _CatalogIO(spark)
-
-    # -- catalog-mode internals -------------------------------------------
-
-    def _committed_sids_catalog(self) -> list[str]:
-        """Snapshot ids whose manifest append (the visibility point)
-        completed — the catalog twin of committed_snapshots()."""
-        name = f"{self.catalog_table}_manifest"
-        if not self._io.exists(name):
-            return []
-        return sorted(
-            r["snapshot_id"]
-            for r in self._io.read(name).select("snapshot_id").distinct().collect()
-        )
-
-    def _manifest_stats_catalog(self, sid: str) -> dict:
-        rows = (
-            self._io.read(f"{self.catalog_table}_manifest")
-            .filter(F.col("snapshot_id") == sid)
-            .collect()
-        )
-        return {r["partition_id"]: (r["doc_count"], r["span_count"]) for r in rows}
-
-    def _write_snapshot_table(self, df: DataFrame, name: str, sid: str) -> None:
-        if not self._io.exists(name):
-            self._io.create_partitioned(df, name)
-        else:
-            self._io.overwrite_snapshot(df, name, sid)
-
-    def _commit_iceberg(self, extracted: DataFrame, sid: str) -> dict:
-        """Catalog leg of commit(): data, then the manifest LAST.
-        Each write replaces only this sid's partition (idempotent retry);
-        the manifest append makes the snapshot visible. The manifest is
-        computed from a read-back of the just-written data partition
-        (snapshot_id partition pruning — never a scan of prior
-        snapshots), mirroring the directory leg's written-files stats."""
-        t0 = time.perf_counter()
-        data = extracted.withColumn("snapshot_id", F.lit(sid))
-        self._write_snapshot_table(data, self.catalog_table, sid)
-        written = self._io.read(self.catalog_table).filter(F.col("snapshot_id") == sid)
-        wall = time.perf_counter() - t0
-        manifest = (
-            partition_manifest(written.drop("snapshot_id"))
-            .withColumn("wall_time_sec", F.lit(round(wall, 3)))
-            .withColumn("snapshot_id", F.lit(sid))
-        )
-        self._write_snapshot_table(manifest, f"{self.catalog_table}_manifest", sid)
-        return {"snapshot_id": sid, "partitions": self._manifest_stats_catalog(sid)}
-
-    # ---------------------------------------------------------------------
+        self.store = _CatalogSnapshots(catalog_io or _CatalogIO(spark), catalog_table)
 
     def processed_doc_ids(self) -> DataFrame | None:
         """doc_ids of the committed snapshots: the `doc_id` column of
@@ -262,19 +337,8 @@ class SnapshotWriter:
         no distinct side anyway. At 10^12 docs the manifest's doc_id
         ranges would replace this; here doc granularity keeps tests
         exact."""
-        if self.catalog_table is not None:
-            sids = self._committed_sids_catalog()
-            if not sids:
-                return None
-            return (
-                self._io.read(self.catalog_table)
-                .filter(F.col("snapshot_id").isin(sids))
-                .select("doc_id")
-            )
-        paths = self._committed_paths("data")
-        if not paths:
-            return None
-        return self.spark.read.schema("doc_id string").parquet(*paths)
+        done = self.store.read("data", self.store.committed(), "doc_id string")
+        return None if done is None else done.select("doc_id")
 
     def pending(self, docs: DataFrame) -> DataFrame:
         """Anti-join against committed doc_ids — the resume predicate.
@@ -289,86 +353,37 @@ class SnapshotWriter:
         return docs.join(done, "doc_id", "left_anti")
 
     def commit(self, extracted: DataFrame, snapshot_id: str | None = None) -> dict:
-        """Write data + manifest for this snapshot, then drop the
-        commit marker LAST (atomic visibility point). Committing an
-        already-committed sid is a NO-OP returning the existing stats —
-        exactly-once semantics for replayed micro-batch epochs; writing
-        over a visible snapshot's files would break immutability (the
-        marker would remain while the data dir is half-rewritten)."""
-        if self.catalog_table is not None:
-            sids = self._committed_sids_catalog()
-            sid = snapshot_id or next_free_sid(sids)
-            if sid in sids:  # replayed epoch: exactly-once no-op
-                return {
-                    "snapshot_id": sid,
-                    "partitions": self._manifest_stats_catalog(sid),
-                    "replayed": True,
-                }
-            return self._commit_iceberg(extracted, sid)
-        sid = snapshot_id or next_free_sid(committed_snapshots(self.root))
-        if os.path.exists(os.path.join(self.root, "_commits", sid)):
-            existing = self.spark.read.parquet(
-                os.path.join(self.root, "manifest", f"snapshot={sid}")
-            )
-            stats = {
-                r["partition_id"]: (r["doc_count"], r["span_count"])
-                for r in existing.collect()
-            }
-            return {"snapshot_id": sid, "partitions": stats, "replayed": True}
+        """Write data + manifest for this snapshot, then publish it LAST
+        (atomic visibility point). Committing an already-committed sid is
+        a NO-OP returning the existing stats — exactly-once semantics for
+        replayed micro-batch epochs; writing over a visible snapshot's
+        files would break immutability (it would stay visible while its
+        data is half-rewritten)."""
+        sids = self.store.committed()
+        sid = snapshot_id or next_free_sid(sids)
+        if sid in sids:
+            return {"snapshot_id": sid, "partitions": self._stats(sid), "replayed": True}
         t0 = time.perf_counter()
-        data_path = os.path.join(self.root, "data", f"snapshot={sid}")
-        extracted.write.mode("overwrite").parquet(data_path)
-        # every read-back passes the schema just written: no inference job
-        written = self.spark.read.schema(extracted.schema).parquet(data_path)
+        self.store.write("data", extracted, sid)
+        # the manifest aggregates the WRITTEN data (for the catalog store,
+        # one snapshot_id partition — never a scan of prior snapshots)
+        written = self.store.read("data", [sid], extracted.schema)
         wall = time.perf_counter() - t0
         manifest = partition_manifest(written).withColumn(
             "wall_time_sec", F.lit(round(wall, 3))
         )
-        manifest_path = os.path.join(self.root, "manifest", f"snapshot={sid}")
-        manifest.write.mode("overwrite").parquet(manifest_path)
-        os.makedirs(os.path.join(self.root, "_commits"), exist_ok=True)
-        marker = os.path.join(self.root, "_commits", sid)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.rename(tmp, marker)  # atomic on POSIX
-        # stats from the tiny WRITTEN manifest — re-collecting the lazy
-        # `manifest` plan would rescan+reaggregate the whole data dir
-        written_manifest = self.spark.read.schema(manifest.schema).parquet(manifest_path)
-        stats = {
-            r["partition_id"]: (r["doc_count"], r["span_count"])
-            for r in written_manifest.collect()
-        }
-        return {"snapshot_id": sid, "partitions": stats}
+        self.store.write("manifest", manifest, sid)
+        self.store.publish(sid)
+        return {"snapshot_id": sid, "partitions": self._stats(sid)}
+
+    def _stats(self, sid: str) -> dict:
+        # from the tiny WRITTEN manifest — re-collecting a lazy manifest
+        # plan would rescan+reaggregate the whole data snapshot
+        rows = self.store.read("manifest", [sid], MANIFEST_SCHEMA).collect()
+        return {r["partition_id"]: (r["doc_count"], r["span_count"]) for r in rows}
 
     def read_committed(self) -> DataFrame | None:
-        if self.catalog_table is not None:
-            sids = self._committed_sids_catalog()
-            if not sids:
-                return None
-            return (
-                self._io.read(self.catalog_table)
-                .filter(F.col("snapshot_id").isin(sids))
-                .drop("snapshot_id")
-            )
-        paths = self._committed_paths("data")
-        return self.spark.read.parquet(*paths) if paths else None
+        return self.store.read("data", self.store.committed())
 
     def read_manifest(self) -> DataFrame | None:
-        if self.catalog_table is not None:
-            sids = self._committed_sids_catalog()
-            if not sids:
-                return None
-            return self._io.read(f"{self.catalog_table}_manifest").filter(
-                F.col("snapshot_id").isin(sids)
-            )
-        paths = self._committed_paths("manifest")
-        return self.spark.read.parquet(*paths) if paths else None
-
-    def _committed_paths(self, kind: str) -> list[str]:
-        """<root>/<kind>/snapshot=<sid> of every committed sid on disk."""
-        paths = [
-            os.path.join(self.root, kind, f"snapshot={s}")
-            for s in committed_snapshots(self.root)
-        ]
-        return [p for p in paths if os.path.isdir(p)]
+        return self.store.read("manifest", self.store.committed(), MANIFEST_SCHEMA)

@@ -103,18 +103,3 @@ EXTRACTED = T.StructType(
         T.StructField("spans", T.ArrayType(EXTRACTED_SPAN), False),
     ]
 )
-
-# Per-partition lineage/metrics manifest row (north rule: lineage + metrics
-# committed alongside outputs for snapshot-checkpoint resume).
-MANIFEST = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("span_count", T.LongType(), False),
-        T.StructField("text_span_count", T.LongType(), False),
-        T.StructField("media_span_count", T.LongType(), False),
-        T.StructField("min_doc_id", T.StringType(), True),
-        T.StructField("max_doc_id", T.StringType(), True),
-        T.StructField("wall_time_sec", T.DoubleType(), False),
-    ]
-)

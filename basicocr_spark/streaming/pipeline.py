@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .. import schemas as S
 from ..operators.extraction import EXTRACTED_SPAN_SCHEMA, fused_arrow_kernel
-from ..plans.checkpoint import SnapshotWriter
+from ..plans.checkpoint import SnapshotWriter, publish
 
 
 def streaming_extraction(
@@ -270,13 +270,9 @@ def streaming_incremental_dedup(
     )
 
     store = SketchStore(spark, sketch_root)
-    os.makedirs(stream_checkpoint_dir, exist_ok=True)
     lineage_file = os.path.join(stream_checkpoint_dir, "basicocr_lineage")
     if not os.path.exists(lineage_file):
-        tmp = lineage_file + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(uuid.uuid4().hex[:12])
-        os.rename(tmp, lineage_file)
+        publish(lineage_file, uuid.uuid4().hex[:12])
     with open(lineage_file) as f:
         lineage = f.read().strip()
 

@@ -401,3 +401,82 @@ def test_auto_sid_skips_explicitly_committed_ids(spark, tmp_path):
     out = wc.commit(_batch(spark, [2]))
     assert out["snapshot_id"] == "s000001" and "replayed" not in out
     assert {r["doc_id"] for r in wc.read_committed().collect()} == {"1", "2"}
+
+
+def test_file_uri_root_commits_and_resumes(spark, tmp_path):
+    """A file:// root is the local directory it names: a commit lands
+    there, a resume finds 0 pending and no second snapshot, and the docs
+    read back. Any other scheme fails when the writer is constructed,
+    instead of every listing silently coming back empty."""
+    import pytest
+
+    root = f"file://{tmp_path}/file%20root"
+    docs = _batch(spark, [1, 2, 3, 4])
+    w = SnapshotWriter(spark, root)
+    assert w.commit(w.pending(docs))["snapshot_id"] == "s000000"
+    assert committed_snapshots(str(tmp_path / "file root")) == ["s000000"]
+    assert committed_snapshots(root) == ["s000000"]
+
+    again = SnapshotWriter(spark, root)
+    assert again.pending(docs).count() == 0
+    assert {r.doc_id for r in again.read_committed().collect()} == {"1", "2", "3", "4"}
+    assert again.read_manifest().count() >= 1
+    for bad in ("hdfs://nn/warehouse/out", "s3a://bucket/out"):
+        with pytest.raises(ValueError, match="local filesystem root"):
+            SnapshotWriter(spark, bad)
+
+
+def test_manifest_schema_matches_partition_manifest(spark):
+    """MANIFEST_SCHEMA, which every manifest read passes, names and types
+    the columns a commit writes."""
+    from pyspark.sql import functions as F
+
+    from basicocr_spark.plans.checkpoint import MANIFEST_SCHEMA, partition_manifest
+
+    written = partition_manifest(_batch(spark, [1])).withColumn("wall_time_sec", F.lit(0.5))
+    declared = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in declared] == [
+        (f.name, f.dataType) for f in written.schema
+    ]
+
+
+def test_replayed_commit_and_manifest_read_fire_one_job_each(spark, tmp_path):
+    """Neither a replayed commit nor read_manifest() infers the manifest's
+    schema: each runs only the collect of the written manifest."""
+    w = SnapshotWriter(spark, str(tmp_path / "root"))
+    w.commit(_batch(spark, [1, 2]), snapshot_id="e0")
+    replay_arg = _batch(spark, [1, 2])
+    sc = spark.sparkContext
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    jobs = {}
+    try:
+        for name, action in (
+            ("replay", lambda: w.commit(replay_arg, snapshot_id="e0")),
+            ("manifest", lambda: w.read_manifest().collect()),
+        ):
+            sc.setJobGroup(f"ckpt-{name}-{tmp_path.name}", name)
+            action()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"ckpt-{name}-{tmp_path.name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == {"replay": 1, "manifest": 1}
+
+
+def test_both_stores_read_back_the_same_columns(spark, tmp_path):
+    """The directory store and the catalog store return the same data
+    and manifest columns: the catalog's snapshot_id partition column is
+    dropped on read."""
+    from basicocr_spark.plans.checkpoint import MANIFEST_SCHEMA
+
+    batch = _batch(spark, [1, 2, 3])
+    writers = [
+        SnapshotWriter(spark, str(tmp_path / "root")),
+        _mk_writer_catalog(spark, _FakeCatalogIO(spark)),
+    ]
+    for w in writers:
+        w.commit(batch)
+    manifest_cols = spark.createDataFrame([], MANIFEST_SCHEMA).columns
+    for w in writers:
+        assert w.read_manifest().columns == manifest_cols
+        assert w.read_committed().columns == batch.columns

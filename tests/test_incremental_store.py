@@ -387,3 +387,52 @@ def test_sketchstore_rejects_non_local_root(spark, tmp_path):
     # file:// URIs are local: accepted and unquoted
     st = SketchStore(spark, f"file://{tmp_path}/with%20space")
     assert st.root == f"{tmp_path}/with space"
+
+
+def test_crash_before_marker_in_commit_batch_then_retry_commits_once(
+    spark, tmp_path, monkeypatch
+):
+    """commit_batch crashes after writing its tables, right before its
+    marker is renamed into place: the store's readers see none of the
+    batch, the committed snapshots are unchanged, and a retry with the
+    same sid commits the batch once."""
+    import pytest
+
+    from basicocr_spark.operators.incremental import batch_kmv_sketch
+    from basicocr_spark.plans import checkpoint as CK
+
+    store = SketchStore(spark, str(tmp_path / "s"))
+    d = _docs(spark)
+    _, fp0, b0 = incremental_dedup_batch(d.filter(F.col("doc_id") < 50), store)
+    store.commit_batch(fp0, b0, snapshot_id="b0")
+    n_fp, n_bands = store.committed_fingerprints().count(), store.committed_bands().count()
+
+    batch = d.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100))
+    _, fp, bands = incremental_dedup_batch(batch, store)
+    kmv = batch_kmv_sketch(batch)
+    rename = CK.os.rename
+
+    def crashing_rename(src, dst, *args, **kwargs):
+        if os.path.basename(dst) == "b1":
+            raise OSError("crashed before the b1 marker")
+        return rename(src, dst, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(CK.os, "rename", crashing_rename)
+        with pytest.raises(OSError, match="crashed before the b1 marker"):
+            store.commit_batch(fp, bands, snapshot_id="b1", kmv_df=kmv)
+    assert os.path.isdir(tmp_path / "s" / "fp" / "snapshot=b1")  # the orphan
+    assert store.committed_snapshots() == ["b0"]
+    assert not store.is_committed("b1")
+    assert store.committed_fingerprints().count() == n_fp
+    assert store.committed_bands().count() == n_bands
+    assert store.committed_kmv() is None
+
+    assert store.commit_batch(fp, bands, snapshot_id="b1", kmv_df=kmv) == {
+        "snapshot_id": "b1",
+        "replayed": False,
+    }
+    assert store.committed_snapshots() == ["b0", "b1"]
+    assert store.committed_fingerprints().count() == n_fp + batch.count()
+    assert store.committed_kmv().count() == kmv.count()
+    assert store.commit_batch(fp, bands, snapshot_id="b1")["replayed"] is True

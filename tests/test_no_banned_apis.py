@@ -74,3 +74,18 @@ def test_no_import_probes():
             if names & IMPORT_PROBES:
                 offenders.append(f"{path.name}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_marker_rename_only_in_checkpoint():
+    """A snapshot becomes visible through one protocol, plans/checkpoint.py's
+    `publish` (tmp write, then os.rename): no other module renames a
+    marker into place by hand."""
+    owner = PKG / "plans" / "checkpoint.py"
+    offenders = []
+    for path in _py_files():
+        if path == owner:
+            continue
+        text = path.read_text()
+        for m in re.finditer(r"\bos\.rename\s*\(", text):
+            offenders.append(f"{path.relative_to(PKG)}:{text[: m.start()].count(chr(10)) + 1}")
+    assert not offenders, offenders
