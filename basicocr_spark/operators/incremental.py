@@ -89,21 +89,11 @@ class SketchStore:
         its own sketches and mark every doc a dup."""
         return sid in self._taken()
 
-    def _read(self, table: str) -> DataFrame | None:
+    def read(self, table: str) -> DataFrame | None:
+        """Union of one of `_TABLES` across the committed snapshots, None
+        when none has it (a media batch has no fp/bands, an older store
+        no kmv)."""
         return self.snapshots.read(table, self.committed_snapshots())
-
-    def committed_fingerprints(self) -> DataFrame | None:
-        """(doc_id, fp) across committed batches, None when empty."""
-        return self._read("fp")
-
-    def committed_bands(self) -> DataFrame | None:
-        """(doc_id, band, sig) across committed batches, None when empty."""
-        return self._read("bands")
-
-    def committed_phash(self) -> DataFrame | None:
-        """(media_ref, phash) union of committed perceptual-hash
-        sketches (media crawl-dedup), None when no batch committed one."""
-        return self._read("phash")
 
     def _commit(self, tables: dict[str, DataFrame], snapshot_id: str | None) -> dict:
         """Write each table's snapshot, then publish the marker LAST. Auto
@@ -128,12 +118,6 @@ class SketchStore:
         batches share one sid namespace (a media snapshot simply has no
         fp/bands dirs, which readers skip)."""
         return self._commit({"phash": phash_df.select("media_ref", "phash")}, snapshot_id)
-
-    def committed_kmv(self) -> DataFrame | None:
-        """(h) union of committed per-batch KMV token sketches, None when
-        no batch has committed one. Snapshots committed before the KMV
-        table existed simply have no kmv dir — _read skips them."""
-        return self._read("kmv")
 
     def commit_batch(
         self,
@@ -184,7 +168,7 @@ class SketchStore:
         # every table is optional: a media-only store has no fp/bands,
         # a pre-kmv store no kmv — fold whatever is present
         for table in _TABLES:
-            df = self._read(table)
+            df = self.read(table)
             if df is None:
                 continue
             df = df.distinct()
@@ -253,7 +237,7 @@ def corpus_distinct_estimate(
     over batches 1..N equals the single-query estimate over their union
     exactly."""
     Q = _queries()
-    kmv = store.committed_kmv()
+    kmv = store.read("kmv")
     if extra_kmv is not None:
         kmv = extra_kmv if kmv is None else kmv.unionByName(extra_kmv)
     if kmv is None:
@@ -312,7 +296,7 @@ def incremental_media_dedup_batch(
     from .multimodal import MEDIA_PHASH_HAM_MAX, media_dhash
 
     phash_df = media_dhash(blobs).localCheckpoint(eager=False)
-    com = store.committed_phash()
+    com = store.read("phash")
     if com is None:
         verdicts = phash_df.select(
             "media_ref",
@@ -377,8 +361,7 @@ def incremental_dedup_batch(
     self-join); with an empty store every verdict is 'new' with zero
     joins."""
     fp_df, banded_df = batch_sketches(batch_docs)
-    com_fp = store.committed_fingerprints()
-    com_bands = store.committed_bands()
+    com_fp, com_bands = store.read("fp"), store.read("bands")
     incoming = fp_df.select("doc_id")
     if com_fp is None or com_bands is None:
         verdicts = incoming.select(

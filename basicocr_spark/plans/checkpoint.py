@@ -8,11 +8,10 @@ a snapshot is visible only once published. Data written without its
 publish is invisible and re-done on resume: idempotent resume.
 
 One commit protocol over two stores. `SnapshotWriter.commit` runs the
-replay check (a committed sid is a no-op), the data write, a
-schema-passing read-back, the manifest write, the publish, and the stats
-read from the written manifest. A store has four operations:
-`committed()`, `write(table, df, sid)`, `read(table, sids, schema)`,
-`publish(sid)`.
+replay check (a committed sid is a no-op), the data write, the
+read-back, the manifest write, the publish, and the stats read from the
+written manifest. A store has four operations, none taking a schema:
+`committed()`, `write(table, df, sid)`, `read(table, sids)`, `publish(sid)`.
 
 - `SnapshotDir` (default; the sandbox image has no Iceberg jars), under a
   local root (`local_root`):
@@ -20,11 +19,16 @@ read from the written manifest. A store has four operations:
       <root>/manifest/snapshot=<sid>/part-*.parquet  lineage+metrics rows
       <root>/_commits/<sid>                          commit marker
   `publish(sid)` drops the marker via `publish(path, text)` (tmp write,
-  then rename); a snapshot is visible iff its marker exists.
+  then rename); a snapshot is visible iff its marker exists. A table's
+  schema is the one Spark keeps in its parquet footers: `read` takes it
+  from the first snapshot holding the table (no inference job), and
+  `write` rejects a frame whose field names or types differ from the
+  committed snapshots' (an unpublished attempt's files never count).
 - `_CatalogSnapshots` (`catalog_table="cat.db.extracted"`, Iceberg
   runtime configured): DataFrameWriterV2 tables `<name>` and
   `<name>_manifest`, partitioned by snapshot_id. The manifest write is
-  the visibility point, so `publish` does nothing.
+  the visibility point, so `publish` does nothing. Each table enforces
+  its own schema.
 
 `operators/incremental.SketchStore` commits its sketch tables (fp, bands,
 kmv, phash) through a `SnapshotDir` and writes its compaction tombstones
@@ -32,9 +36,6 @@ with `publish`.
 
 The committed doc_ids are the `doc_id` column of the data snapshots
 (column pruning reads only it; an older root's `docids/` dir is unread).
-The commit's read-backs, the resume's doc_id read and every manifest
-read (MANIFEST_SCHEMA) pass a schema, so no commit, replayed commit or
-resume runs a schema-inference job.
 
 Reference analog: periodic torch.save checkpoints (crnn_main.py:232-235)
 and the LMDB writer's 1000-row buffered txns (tolmdb.py:66-68) — here
@@ -43,12 +44,15 @@ commit granularity is a doc_id range batch.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _markers(path: str) -> list[str]:
@@ -167,14 +171,6 @@ def partition_manifest(extracted: DataFrame) -> DataFrame:
     )
 
 
-# A committed manifest row: partition_manifest plus the snapshot's write
-# wall time. Every manifest read passes it, so none infers a schema.
-MANIFEST_SCHEMA = (
-    "partition_id int, doc_count bigint, span_count bigint, text_span_count bigint, "
-    "media_span_count bigint, min_doc_id string, max_doc_id string, wall_time_sec double"
-)
-
-
 class SnapshotDir:
     """Directory-model snapshot store: table `t` of snapshot `sid` is the
     parquet dir `<root>/t/snapshot=<sid>`, visible iff the marker
@@ -193,17 +189,37 @@ class SnapshotDir:
     def committed(self) -> list[str]:
         return committed_snapshots(self.root)
 
+    def _dirs(self, table: str, sids: list[str]) -> list[str]:
+        return [p for p in (self.path(table, s) for s in sids) if os.path.isdir(p)]
+
+    def schema(self, table: str, sids: list[str]) -> T.StructType | None:
+        """The Spark schema `table` was written with, from a parquet footer
+        of the first of `sids` that has it; None when none does. No job."""
+        dirs = self._dirs(table, sids)
+        if not dirs:
+            return None
+        part = next(f for f in sorted(os.listdir(dirs[0])) if f.endswith(".parquet"))
+        meta = pq.read_schema(os.path.join(dirs[0], part)).metadata
+        return T.StructType.fromJson(json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+
     def write(self, table: str, df: DataFrame, sid: str) -> None:
+        """Raises ValueError, before writing, when `df` differs from the
+        committed snapshots of `table` in a field name or type."""
+        have = self.schema(table, self.committed())
+        if have is not None and have.simpleString() != df.schema.simpleString():
+            raise ValueError(
+                f"schema drift in {table!r}: committed {have.simpleString()}, "
+                f"new {df.schema.simpleString()}"
+            )
         df.write.mode("overwrite").parquet(self.path(table, sid))
 
-    def read(self, table: str, sids: list[str], schema=None) -> DataFrame | None:
+    def read(self, table: str, sids: list[str]) -> DataFrame | None:
         """Union of `table` over `sids`, None when none of them has it (a
         snapshot may commit only some tables)."""
-        paths = [p for p in (self.path(table, s) for s in sids) if os.path.isdir(p)]
-        if not paths:
+        schema = self.schema(table, sids)
+        if schema is None:
             return None
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*self._dirs(table, sids))
 
     def publish(self, sid: str) -> None:
         publish(self.marker(sid), sid)
@@ -266,8 +282,7 @@ class _CatalogSnapshots:
         else:
             self.io.overwrite_snapshot(df, name, sid)
 
-    def read(self, table: str, sids: list[str], schema=None) -> DataFrame | None:
-        """The catalog table carries its own schema; `schema` is unused."""
+    def read(self, table: str, sids: list[str]) -> DataFrame | None:
         name = self._name(table)
         if not sids or not self.io.exists(name):
             return None
@@ -337,7 +352,7 @@ class SnapshotWriter:
         no distinct side anyway. At 10^12 docs the manifest's doc_id
         ranges would replace this; here doc granularity keeps tests
         exact."""
-        done = self.store.read("data", self.store.committed(), "doc_id string")
+        done = self.store.read("data", self.store.committed())
         return None if done is None else done.select("doc_id")
 
     def pending(self, docs: DataFrame) -> DataFrame:
@@ -367,7 +382,7 @@ class SnapshotWriter:
         self.store.write("data", extracted, sid)
         # the manifest aggregates the WRITTEN data (for the catalog store,
         # one snapshot_id partition — never a scan of prior snapshots)
-        written = self.store.read("data", [sid], extracted.schema)
+        written = self.store.read("data", [sid])
         wall = time.perf_counter() - t0
         manifest = partition_manifest(written).withColumn(
             "wall_time_sec", F.lit(round(wall, 3))
@@ -379,11 +394,11 @@ class SnapshotWriter:
     def _stats(self, sid: str) -> dict:
         # from the tiny WRITTEN manifest — re-collecting a lazy manifest
         # plan would rescan+reaggregate the whole data snapshot
-        rows = self.store.read("manifest", [sid], MANIFEST_SCHEMA).collect()
+        rows = self.store.read("manifest", [sid]).collect()
         return {r["partition_id"]: (r["doc_count"], r["span_count"]) for r in rows}
 
     def read_committed(self) -> DataFrame | None:
         return self.store.read("data", self.store.committed())
 
     def read_manifest(self) -> DataFrame | None:
-        return self.store.read("manifest", self.store.committed(), MANIFEST_SCHEMA)
+        return self.store.read("manifest", self.store.committed())

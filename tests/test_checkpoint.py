@@ -426,23 +426,10 @@ def test_file_uri_root_commits_and_resumes(spark, tmp_path):
             SnapshotWriter(spark, bad)
 
 
-def test_manifest_schema_matches_partition_manifest(spark):
-    """MANIFEST_SCHEMA, which every manifest read passes, names and types
-    the columns a commit writes."""
-    from pyspark.sql import functions as F
-
-    from basicocr_spark.plans.checkpoint import MANIFEST_SCHEMA, partition_manifest
-
-    written = partition_manifest(_batch(spark, [1])).withColumn("wall_time_sec", F.lit(0.5))
-    declared = spark.createDataFrame([], MANIFEST_SCHEMA).schema
-    assert [(f.name, f.dataType) for f in declared] == [
-        (f.name, f.dataType) for f in written.schema
-    ]
-
-
 def test_replayed_commit_and_manifest_read_fire_one_job_each(spark, tmp_path):
-    """Neither a replayed commit nor read_manifest() infers the manifest's
-    schema: each runs only the collect of the written manifest."""
+    """No store read infers a schema: a replayed commit and
+    read_manifest() each run only the collect of the written manifest,
+    and read_committed() only its collect."""
     w = SnapshotWriter(spark, str(tmp_path / "root"))
     w.commit(_batch(spark, [1, 2]), snapshot_id="e0")
     replay_arg = _batch(spark, [1, 2])
@@ -453,6 +440,7 @@ def test_replayed_commit_and_manifest_read_fire_one_job_each(spark, tmp_path):
         for name, action in (
             ("replay", lambda: w.commit(replay_arg, snapshot_id="e0")),
             ("manifest", lambda: w.read_manifest().collect()),
+            ("committed", lambda: w.read_committed().collect()),
         ):
             sc.setJobGroup(f"ckpt-{name}-{tmp_path.name}", name)
             action()
@@ -460,14 +448,19 @@ def test_replayed_commit_and_manifest_read_fire_one_job_each(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev_group)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs == {"replay": 1, "manifest": 1}
+    assert jobs == {"replay": 1, "manifest": 1, "committed": 1}
 
 
 def test_both_stores_read_back_the_same_columns(spark, tmp_path):
-    """The directory store and the catalog store return the same data
-    and manifest columns: the catalog's snapshot_id partition column is
-    dropped on read."""
-    from basicocr_spark.plans.checkpoint import MANIFEST_SCHEMA
+    """The directory store and the catalog store read back the same data
+    and manifest fields (names and types): the ones a commit writes, with
+    the catalog's snapshot_id partition column dropped on read."""
+    from pyspark.sql import functions as F
+
+    from basicocr_spark.plans.checkpoint import partition_manifest
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
 
     batch = _batch(spark, [1, 2, 3])
     writers = [
@@ -476,7 +469,62 @@ def test_both_stores_read_back_the_same_columns(spark, tmp_path):
     ]
     for w in writers:
         w.commit(batch)
-    manifest_cols = spark.createDataFrame([], MANIFEST_SCHEMA).columns
-    for w in writers:
-        assert w.read_manifest().columns == manifest_cols
-        assert w.read_committed().columns == batch.columns
+    directory, catalog = (
+        (fields(w.read_committed()), fields(w.read_manifest())) for w in writers
+    )
+    assert directory == catalog
+    written = partition_manifest(batch).withColumn("wall_time_sec", F.lit(0.5))
+    assert directory == (fields(batch), fields(written))
+
+
+def test_commit_with_a_drifted_schema_raises_before_writing(spark, tmp_path):
+    """A table keeps the schema its committed snapshots were written
+    with: a commit whose doc_id type differs raises before it writes, and
+    its sid leaves no data directory and no marker. Nullability alone is
+    not drift."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    root = tmp_path / "root"
+    w = SnapshotWriter(spark, str(root))
+    w.commit(_batch(spark, [1, 2]), snapshot_id="e0")
+    drifted = _batch(spark, [3]).withColumn("doc_id", F.col("doc_id").cast("long"))
+    with pytest.raises(ValueError, match="schema drift"):
+        w.commit(drifted, snapshot_id="e1")
+    assert not (root / "data" / "snapshot=e1").exists()
+    assert not (root / "_commits" / "e1").exists()
+    assert committed_snapshots(str(root)) == ["e0"]
+    nullable = _batch(spark, [3]).withColumn(
+        "doc_id", F.when(F.col("doc_id") != "", F.col("doc_id"))
+    )
+    assert nullable.schema["doc_id"].nullable and not _batch(spark, [3]).schema["doc_id"].nullable
+    w.commit(nullable, snapshot_id="e1")
+    assert sorted(r.doc_id for r in w.read_committed().collect()) == ["1", "2", "3"]
+
+
+def test_unpublished_attempt_does_not_pin_the_schema(spark, tmp_path, monkeypatch):
+    """A first attempt that crashes before its marker leaves orphan data
+    of another schema; the retry checks against committed snapshots only,
+    so it commits."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from basicocr_spark.plans import checkpoint as CK
+
+    root = tmp_path / "root"
+    w = SnapshotWriter(spark, str(root))
+    longs = _batch(spark, [1, 2]).withColumn("doc_id", F.col("doc_id").cast("long"))
+
+    def crashing_rename(src, dst):
+        raise OSError("crashed before the marker")
+
+    with monkeypatch.context() as m:
+        m.setattr(CK.os, "rename", crashing_rename)
+        with pytest.raises(OSError, match="crashed before the marker"):
+            w.commit(longs)
+    assert os.path.isdir(root / "data" / "snapshot=s000000")  # the orphan
+    assert w.read_committed() is None
+    assert w.commit(_batch(spark, [1, 2]))["snapshot_id"] == "s000000"
+    got = w.read_committed()
+    assert got.schema["doc_id"].dataType.simpleString() == "string"
+    assert sorted(r.doc_id for r in got.collect()) == ["1", "2"]

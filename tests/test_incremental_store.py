@@ -73,8 +73,8 @@ def test_uncommitted_sketches_are_invisible(spark, tmp_path):
     b1.select("doc_id", "band", "sig").write.mode("overwrite").parquet(
         str(tmp_path / "s" / "bands" / "snapshot=000000")
     )
-    assert store.committed_fingerprints() is None
-    assert store.committed_bands() is None
+    assert store.read("fp") is None
+    assert store.read("bands") is None
     clones = d.filter(F.col("doc_id") < 100).withColumn(
         "doc_id", F.col("doc_id") + F.lit(10_000_000)
     )
@@ -405,7 +405,7 @@ def test_crash_before_marker_in_commit_batch_then_retry_commits_once(
     d = _docs(spark)
     _, fp0, b0 = incremental_dedup_batch(d.filter(F.col("doc_id") < 50), store)
     store.commit_batch(fp0, b0, snapshot_id="b0")
-    n_fp, n_bands = store.committed_fingerprints().count(), store.committed_bands().count()
+    n_fp, n_bands = store.read("fp").count(), store.read("bands").count()
 
     batch = d.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100))
     _, fp, bands = incremental_dedup_batch(batch, store)
@@ -424,15 +424,59 @@ def test_crash_before_marker_in_commit_batch_then_retry_commits_once(
     assert os.path.isdir(tmp_path / "s" / "fp" / "snapshot=b1")  # the orphan
     assert store.committed_snapshots() == ["b0"]
     assert not store.is_committed("b1")
-    assert store.committed_fingerprints().count() == n_fp
-    assert store.committed_bands().count() == n_bands
-    assert store.committed_kmv() is None
+    assert store.read("fp").count() == n_fp
+    assert store.read("bands").count() == n_bands
+    assert store.read("kmv") is None
 
     assert store.commit_batch(fp, bands, snapshot_id="b1", kmv_df=kmv) == {
         "snapshot_id": "b1",
         "replayed": False,
     }
     assert store.committed_snapshots() == ["b0", "b1"]
-    assert store.committed_fingerprints().count() == n_fp + batch.count()
-    assert store.committed_kmv().count() == kmv.count()
+    assert store.read("fp").count() == n_fp + batch.count()
+    assert store.read("kmv").count() == kmv.count()
     assert store.commit_batch(fp, bands, snapshot_id="b1")["replayed"] is True
+
+
+def test_commit_batch_with_a_drifted_doc_id_raises_before_writing(spark, tmp_path):
+    """The sketch tables keep the schema their committed snapshots were
+    written with: a batch whose doc_id type differs raises before any
+    table is written, and its sid leaves no data directory and no marker."""
+    import pytest
+
+    store = SketchStore(spark, str(tmp_path / "s"))
+    d = _docs(spark)
+    _, fp, bands = incremental_dedup_batch(d.filter(F.col("doc_id") < 50), store)
+    store.commit_batch(fp, bands, snapshot_id="b0")
+
+    def as_string(df):
+        return df.withColumn("doc_id", F.col("doc_id").cast("string"))
+
+    with pytest.raises(ValueError, match="schema drift"):
+        store.commit_batch(as_string(fp), as_string(bands), snapshot_id="b1")
+    for table in ("fp", "bands"):
+        assert not os.path.exists(tmp_path / "s" / table / "snapshot=b1")
+    assert not os.path.exists(tmp_path / "s" / "_commits" / "b1")
+    assert store.committed_snapshots() == ["b0"]
+
+
+def test_verdicts_against_a_committed_store_plan_without_a_job(spark, tmp_path):
+    """Building a batch's verdicts against a committed store runs no
+    Spark job: the store reads pass the schema from the parquet footers,
+    so no read infers one."""
+    store = SketchStore(spark, str(tmp_path / "s"))
+    d = _docs(spark)
+    _, fp, bands = incremental_dedup_batch(d.filter(F.col("doc_id") < 50), store)
+    store.commit_batch(fp, bands, snapshot_id="b0")
+    batch = d.filter(F.col("doc_id") >= 50)
+    sc = spark.sparkContext
+    group = f"incr-plan-{tmp_path.name}"
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        sc.setJobGroup(group, "plan")
+        incremental_dedup_batch(batch, store)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == 0

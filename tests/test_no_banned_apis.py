@@ -89,3 +89,40 @@ def test_marker_rename_only_in_checkpoint():
         for m in re.finditer(r"\bos\.rename\s*\(", text):
             offenders.append(f"{path.relative_to(PKG)}:{text[: m.start()].count(chr(10)) + 1}")
     assert not offenders, offenders
+
+
+# (file, function) where a parquet read may leave the schema to inference:
+# the catalog's sf-table scan, where declared schemas saved no wall time.
+SCHEMALESS_READ_ALLOWED = {("queries.py", "_t")}
+
+
+def test_parquet_reads_pass_a_schema():
+    """Every `<x>.read...parquet(...)` chain in the package sets
+    `.schema(...)`, so no read fires a schema-inference job: a snapshot
+    store takes its tables' schema from their parquet footers."""
+    offenders = []
+    for path in _py_files():
+        tree = ast.parse(path.read_text())
+        owner = {}  # node -> innermost enclosing function (walk is outer-first)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for n in ast.walk(fn):
+                    owner[n] = fn.name
+        for node in ast.walk(tree):
+            func = getattr(node, "func", None)
+            if not (isinstance(node, ast.Call) and isinstance(func, ast.Attribute)):
+                continue
+            if func.attr != "parquet":
+                continue
+            chain, cur = set(), func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Call):
+                    cur = cur.func
+                else:
+                    chain.add(cur.attr)
+                    cur = cur.value
+            if "read" not in chain or "schema" in chain:
+                continue
+            if (path.name, owner.get(node)) not in SCHEMALESS_READ_ALLOWED:
+                offenders.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert not offenders, offenders
