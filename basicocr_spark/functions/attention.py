@@ -111,8 +111,7 @@ def attention_greedy_decode_np(mat, alphabet: str = DEFAULT_ALPHABET) -> str:
     import numpy as np
 
     # array<array<float>> arrives as an object-dtype sequence of row
-    # arrays (Arrow list-of-list) — stack rows explicitly, same as
-    # make_ctc_decode_udf
+    # arrays (Arrow list-of-list) — stack rows explicitly
     if mat is None or len(mat) == 0:
         return ""
     arr = np.asarray([np.asarray(r, dtype=np.float64) for r in mat])
@@ -139,8 +138,8 @@ def attention_greedy_decode_np(mat, alphabet: str = DEFAULT_ALPHABET) -> str:
 
 def make_attention_decode_udf(alphabet: str = DEFAULT_ALPHABET):
     """Arrow-batched pandas UDF over a logits column (array<array<float>>)
-    -> decoded string. Same surface as make_ctc_decode_udf — the decode
-    rides whole Arrow batches; per-span work happens in the numpy kernel."""
+    -> decoded string. The decode rides whole Arrow batches; per-span
+    work happens in the numpy kernel."""
 
     @F.pandas_udf(T.StringType())
     def decode(logits_s: pd.Series) -> pd.Series:

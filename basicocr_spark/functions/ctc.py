@@ -3,21 +3,19 @@
 Reference semantics (contrib/crnn/utils.py:25-101, demo.py:35-41):
 - per-timestep argmax over nclass logits (first max on ties);
 - index 0 is the CTC blank; char i of the alphabet maps to index i+1;
-- collapse rule: keep t[i] iff t[i] != 0 and not (i>0 and t[i-1]==t[i]);
-- raw mode maps every index through `alphabet + '-'` (blank renders '-').
+- collapse rule: keep t[i] iff t[i] != 0 and not (i>0 and t[i-1]==t[i]).
 
-The primary implementation is pure Catalyst higher-order functions —
-whole-stage-codegen'd JVM execution, zero Python, no shuffle. A
-vectorized-numpy `pandas_udf` twin exists for cross-checking (SURVEY.md
-§2.9 mandates implementing both and comparing).
+The SQL implementation is pure Catalyst higher-order functions —
+whole-stage-codegen'd JVM execution, zero Python, no shuffle. Its twin
+is `decode_ctc_numpy`, the vectorized decode the fused extraction
+kernel runs; the two are cross-checked (SURVEY.md §2.9 mandates
+implementing both and comparing).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..reference import DEFAULT_ALPHABET
 
@@ -57,55 +55,16 @@ def indices_to_text(indices: Column, alphabet: str = DEFAULT_ALPHABET) -> Column
     return F.array_join(F.transform(indices, lambda x: F.element_at(alpha_arr, x)), "")
 
 
-def raw_decode(indices: Column, alphabet: str = DEFAULT_ALPHABET) -> Column:
-    """Raw (no-collapse) decode: alphabet+'-' with python -1 wraparound,
-    i.e. blank (0) renders the trailing '-' sentinel (utils.py:29, 83)."""
-    alpha_arr = F.split(F.lit(alphabet + "-"), "")
-    n = len(alphabet) + 1
-    return F.array_join(
-        F.transform(
-            indices,
-            lambda x: F.element_at(alpha_arr, F.when(x == 0, F.lit(n)).otherwise(x)),
-        ),
-        "",
-    )
-
-
 def ctc_greedy_decode(logits: Column, alphabet: str = DEFAULT_ALPHABET) -> Column:
     """Full greedy decode: argmax -> collapse -> charmap. Pure JVM."""
     return indices_to_text(ctc_collapse(argmax_indices(logits)), alphabet)
 
 
-def make_ctc_decode_udf(alphabet: str = DEFAULT_ALPHABET):
-    """Vectorized numpy twin of `ctc_greedy_decode` (Arrow-batched).
-
-    Used only to cross-check the SQL expression and as the template for
-    the fused mapInPandas pipeline where logits come from an in-UDF model
-    forward instead of a column.
-    """
-    import numpy as np
-
-    @F.pandas_udf(T.StringType())
-    def decode(logits_s: pd.Series) -> pd.Series:
-        out = []
-        for lg in logits_s:
-            if lg is None or len(lg) == 0:
-                out.append("")
-                continue
-            mat = np.asarray([np.asarray(r) for r in lg])
-            t = mat.argmax(axis=1)
-            keep = (t != 0) & np.concatenate(([True], t[1:] != t[:-1]))
-            out.append("".join(alphabet[i - 1] for i in t[keep]))
-        return pd.Series(out)
-
-    return decode
-
-
 def decode_ctc_numpy(mat, alphabet: str = DEFAULT_ALPHABET) -> str:
     """Batch-kernel used by the fused pipeline: 2-D ndarray -> string.
     Empty logits decode to '' (guard BEFORE argmax: np.asarray([])
-    raises AxisError on axis=1, and the SQL/pandas-UDF twins both emit
-    '' for the empty case)."""
+    raises AxisError on axis=1, and the SQL twin emits '' for the empty
+    case)."""
     import numpy as np
 
     arr = np.asarray(mat)

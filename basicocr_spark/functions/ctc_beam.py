@@ -123,7 +123,7 @@ def make_ctc_beam_decode_udf(
     alphabet: str = DEFAULT_ALPHABET, beam_width: int = BEAM_WIDTH
 ):
     """Arrow-batched pandas UDF over a logits column (array<array<float>>)
-    -> beam-decoded string. Same surface as make_ctc_decode_udf."""
+    -> beam-decoded string; per-span work happens in the numpy kernel."""
 
     @F.pandas_udf(T.StringType())
     def decode(logits_s: pd.Series) -> pd.Series:

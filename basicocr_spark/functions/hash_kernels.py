@@ -178,7 +178,8 @@ def minhash_batch(
     """(n_docs, num_hashes) int64 minhash signatures. Every doc has at
     least one shingle (word_shingles emits the whole text when short),
     so the per-doc minimum reductions are over non-empty segments.
-    Pass `toks` to reuse an existing tokenization (fused kernel)."""
+    Pass `toks` to shingle another tokenizer's tokens (the 'cjk' leg of
+    minhash_signatures_df)."""
     if not texts:
         return np.zeros((0, num_hashes), dtype=np.int64)
     if toks is None:
@@ -215,20 +216,15 @@ def simhash_batch(texts: list[str], tokenizer: str = "ws") -> np.ndarray:
     return ((votes > 0) * weights).sum(axis=1).astype(np.int64)
 
 
-def shingle_hash_sets_batch(
-    texts: list[str], k: int, toks: list[list[str]] | None = None
-) -> list[list[int]]:
+def shingle_hash_sets_batch(texts: list[str], k: int) -> list[list[int]]:
     """Per-doc sorted-unique shingle-hash sets (array_distinct order is
     irrelevant downstream — only intersection/union sizes are used).
     All docs' shingles hash in ONE flat poly_hash_flat call; per-doc
     np.unique runs over segment views (per-doc poly-hash dispatch was
-    the dominant cost for short docs). Pass `toks` to reuse an existing
-    tokenization."""
+    the dominant cost for short docs)."""
     if not texts:
         return []
-    if toks is None:
-        toks = [_tokens(t) for t in texts]
-    sh_per_doc = [_shingles(t, k) for t in toks]
+    sh_per_doc = [_shingles(_tokens(t), k) for t in texts]
     counts = np.fromiter((len(s) for s in sh_per_doc), dtype=np.int64, count=len(sh_per_doc))
     H = poly_hash_flat([s for doc in sh_per_doc for s in doc])
     offsets = _segment_layout(counts)
@@ -312,36 +308,6 @@ def simhash_df(
             )
 
     return df.select(id_col, text_col).mapInPandas(gen, schema=f"{id_col} {id_type}, simhash long")
-
-
-def minhash_and_shingles_df(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    num_hashes: int = 16, k_sig: int = 3, k_verify: int = 2,
-) -> DataFrame:
-    """One Arrow pass emitting BOTH the minhash signature (k_sig
-    shingles) and the sorted-unique k_verify shingle-hash set — the
-    signature table a production near-dup job materializes once and
-    reuses for candidate generation AND verification, instead of
-    re-scanning the corpus per consumer branch."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_type}, "
-        + ", ".join(f"mh{j} long" for j in range(num_hashes))
-        + ", sh array<long>"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            texts = pdf[text_col].tolist()
-            toks = [_tokens(t) for t in texts]  # tokenize ONCE for both
-            sig = minhash_batch(texts, num_hashes, k_sig, toks=toks)
-            out = {id_col: pdf[id_col]}
-            for j in range(num_hashes):
-                out[f"mh{j}"] = sig[:, j]
-            out["sh"] = shingle_hash_sets_batch(texts, k_verify, toks=toks)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
 def shingle_hash_sets_df(

@@ -37,10 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d == 0, F.lit(0.0)).otherwise(dot(a, b) / d)
 
 
-def cosine_rounded(a: Column, b: Column, scale: int = 6) -> Column:
-    return F.round(cosine(a, b), scale)
-
-
 def _cosine_seq_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     """Vectorized cosine whose float64 summation ORDER is the sequential
     left-to-right fold of the expression form (np.cumsum is an inclusive
@@ -70,8 +66,9 @@ def cosine_seq_kernel(a: Column, b: Column) -> Column:
 
 
 def cosine_rounded_fast(a: Column, b: Column, scale: int = 6) -> Column:
-    """Drop-in replacement for cosine_rounded on scoring joins (the
-    rounding stays a Spark-side F.round so tie behavior is unchanged)."""
+    """cosine(a, b) rounded to `scale` places, computed by the vectorized
+    kernel on scoring joins (the rounding stays a Spark-side F.round, so
+    tie behavior matches rounding the expression form)."""
     return F.round(cosine_seq_kernel(a, b), scale)
 
 

@@ -49,12 +49,6 @@ def default_boxes(
     return F.array(*boxes)
 
 
-def filter_boxes_by_score(boxes: Column, alpha: float = ALPHA) -> Column:
-    """P7: confidence threshold over the box array — higher-order filter,
-    no explode, no shuffle."""
-    return F.filter(boxes, lambda b: b["score"] >= alpha)
-
-
 def group_segments_df(
     boxes_df: DataFrame, alpha: float = ALPHA, beta: float = BETA
 ) -> DataFrame:

@@ -50,6 +50,8 @@ def salt_heavy_docs(docs: DataFrame, max_spans: int = DEFAULT_MAX_SPANS) -> Data
     max_spans spans. Light docs pass through with salt 0; heavy docs are
     sliced. Null spans count as `[]`, so such a doc keeps its one row.
     Pure column ops (sequence + slice), no Python."""
+    if max_spans < 1:
+        raise ValueError(f"max_spans must be >= 1, got {max_spans}")
     spans = F.coalesce(F.col("spans"), F.array())
     # slices must be contiguous OFFSET ranges for the merge's
     # (salt, local_order) key to equal global order — a heavy doc is

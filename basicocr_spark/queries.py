@@ -1313,14 +1313,13 @@ def docs_near_dup_verified(spark, sf_dir):
     # the kernel). Non-candidate docs — the overwhelming majority —
     # never pay shingle-set materialization, and the verify joins
     # shuffle candidate-sized tables instead of every doc's shingle set.
-    # (A fused single-pass variant, minhash_and_shingles_df, exists for
-    # persist-once deployments; at sandbox scale its one-scan form is a
-    # few hundred ms faster because stage-launch overhead dominates a
-    # 5k-doc corpus, but at real scale it checkpoints and shuffles every
-    # doc's shingle set — the candidate-pruned shape here is the one
-    # that survives 10^12 docs.) Hashed shingle sets (8-byte longs) also
-    # shuffle ~10x lighter than the shingle strings; the oracle computes
-    # the identical hash so parity is exact.
+    # (A fused single pass that emits signatures and shingle sets
+    # together is a few hundred ms faster on a 5k-doc corpus, where
+    # stage-launch overhead dominates, but at real scale it checkpoints
+    # and shuffles every doc's shingle set — the candidate-pruned shape
+    # here is the one that survives 10^12 docs.) Hashed shingle sets
+    # (8-byte longs) also shuffle ~10x lighter than the shingle strings;
+    # the oracle computes the identical hash so parity is exact.
     # sigs feeds ONLY the band join, so the corpus-wide signature table
     # is never checkpointed; cands (tiny) is the shared node — two
     # consumers (the id prune and the final verify join) — so it is the

@@ -43,13 +43,6 @@ MEDIA_LOGITS = T.StructType(
     ]
 )
 
-ALPHABET = T.StructType(
-    [
-        T.StructField("idx", T.IntegerType(), False),  # 1-based; 0 = CTC blank
-        T.StructField("ch", T.StringType(), False),
-    ]
-)
-
 DICTIONARY = T.StructType(
     [
         T.StructField("line_id", T.LongType(), False),  # file order — pins tie-break

@@ -67,97 +67,6 @@ def streaming_extraction(
     )
 
 
-def advance_session(state, events, gap_us: int):
-    """Pure per-user session fold (unit-testable outside the stream):
-    state = (last_us, start_us, n, v) or None; events = iterable of
-    (ts_us, value) sorted within this batch. Returns (new_state,
-    closed_sessions as [(start, end, n, v)]). A LATER batch can deliver
-    a late event, so continuing a session extends the window with
-    min/max — last_us must never regress (a regressed last_us both
-    emits session_end < session_start and spuriously splits the session
-    at the next on-time event)."""
-    if state is not None:
-        last_us, start_us, n, v = state
-    else:
-        last_us = start_us = None
-        n, v = 0, 0.0
-    closed = []
-    for ts_us, val in events:
-        ts_us = int(ts_us)
-        if last_us is not None and ts_us - last_us > gap_us:
-            closed.append((start_us, last_us, n, v))
-            start_us, last_us, n, v = None, None, 0, 0.0
-        if start_us is None:
-            start_us = last_us = ts_us
-        else:
-            start_us = min(start_us, ts_us)
-            last_us = max(last_us, ts_us)
-        n += 1
-        v += float(val)
-    return (last_us, start_us, n, v), closed
-
-
-def sessionize_stateful(
-    events_stream: DataFrame,
-    gap_seconds: int = 1800,
-):
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user session assembly with an explicit gap timeout. Emits one row
-    per CLOSED session (session_start, session_end, n_events, total_value).
-
-    State per user: (last_ts_us, session_start_us, n_events, total_value).
-    A batch's events extend the open session when within `gap_seconds` of
-    the previous event, else close it (emit) and open a new one; the
-    processing-time timeout closes sessions that stop receiving events.
-    This is the engine's template for custom stateful operators — the
-    reference has none (SURVEY.md §2.8), so semantics mirror the batch
-    sessionization query (events_sessionization) for cross-checking.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id long, session_start long, session_end long, "
-        "n_events long, total_value double"
-    )
-    state_schema = "last_us long, start_us long, n long, v double"
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                last_us, start_us, n, v = state.get
-                closed.append((user_id, start_us, last_us, n, v))
-                state.remove()
-        else:
-            rows = pd.concat(list(pdfs))
-            rows = rows.sort_values(["ts_us", "event_id"])
-            st = state.get if state.exists else None
-            st, batch_closed = advance_session(
-                st, zip(rows["ts_us"], rows["value"]), gap_us
-            )
-            closed.extend((user_id, s, e, n, v) for s, e, n, v in batch_closed)
-            state.update(st)
-            state.setTimeoutDuration(gap_seconds * 1000)
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "session_start", "session_end", "n_events", "total_value"],
-            )
-
-    prepared = events_stream.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "value",
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.ProcessingTimeTimeout
-    )
-
-
 def windowed_event_counts(
     events_stream: DataFrame,
     window: str = "5 minutes",

@@ -107,6 +107,9 @@ def run(
     catalog_table: str | None = None,
     recognizer=None,
 ) -> dict:
+    for name, size in (("batch_size", batch_size), ("max_spans", max_spans)):
+        if size < 1:
+            raise ValueError(f"{name} must be >= 1, got {size}")
     n_parts = spark.sparkContext.defaultParallelism * 2
     docs = spark.read.schema(S.DOCUMENTS).parquet(input_dir)
     writer = SnapshotWriter(spark, output_root, catalog_table=catalog_table)

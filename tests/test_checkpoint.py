@@ -166,6 +166,35 @@ def test_cli_rerun_over_committed_root_commits_nothing(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(out, "data"))) == [f"snapshot={s}" for s in before]
 
 
+def test_cli_rejects_bad_sizes_before_any_job(spark, tmp_path):
+    """run() raises ValueError naming the argument for a batch_size or
+    max_spans below 1, before it fires a Spark job or commits anything;
+    salt_heavy_docs rejects max_spans below 1 the same way."""
+    import pytest
+
+    import run_extraction as RX
+    from basicocr_spark.operators.salting import salt_heavy_docs
+
+    inp, out = _cli_input(spark, tmp_path, ["100", "101"]), str(tmp_path / "cli_out")
+    sc = spark.sparkContext
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        for kw in ({"batch_size": 0}, {"batch_size": -1}, {"max_spans": 0}):
+            (name,) = kw
+            group = f"bad-size-{name}-{kw[name]}-{tmp_path.name}"
+            sc.setJobGroup(group, group)
+            with pytest.raises(ValueError, match=name):
+                RX.run(spark, inp, out, **kw)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], kw
+            assert committed_snapshots(out) == [], kw
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        sc.setLocalProperty("spark.job.description", None)
+    docs = spark.read.parquet(inp)
+    with pytest.raises(ValueError, match="max_spans"):
+        salt_heavy_docs(docs, max_spans=0)
+
+
 def test_cli_commits_zero_span_doc_once(spark, tmp_path):
     """A doc with an empty or a null spans array is committed exactly
     once, with `[]` (the kernel, the SQL oracle and the reference all

@@ -2,10 +2,8 @@
 
 import random
 
-from pyspark.sql import functions as F
-
 from basicocr_spark import reference as R
-from basicocr_spark.operators.detection import group_segments_df, nms_df, filter_boxes_by_score
+from basicocr_spark.operators.detection import group_segments_df, nms_df
 
 
 def test_group_segments_matches_gold(fx):
@@ -27,16 +25,6 @@ def test_combined_boxes_cover_members(fx):
             xs1 = max(r.boxes[i]["x"] + r.boxes[i]["w"] / 2 for i in g)
             assert abs((c["x"] - c["w"] / 2) - xs0) < 1e-6
             assert abs((c["x"] + c["w"] / 2) - xs1) < 1e-6
-
-
-def test_score_filter_hof(fx):
-    out = fx["boxes"].select(
-        "media_ref",
-        F.size(filter_boxes_by_score(F.col("boxes"))).alias("n_keep"),
-        F.col("boxes"),
-    )
-    for r in out.collect():
-        assert r.n_keep == sum(1 for b in r.boxes if b["score"] >= 0.9)
 
 
 def test_nms_matches_reference(spark):

@@ -1,4 +1,4 @@
-"""Column-expression normalization/segmentation vs the pure-Python oracle."""
+"""Column-expression normalization vs the pure-Python oracle."""
 
 import random
 
@@ -32,19 +32,3 @@ def test_uniform_matches_reference(spark):
     rows = df.select("s", TN.uniform(F.col("s")).alias("u")).collect()
     for r in rows:
         assert r.u == R.uniform(r.s), repr(r.s)
-
-
-def test_segment_runs_matches_reference(spark):
-    data = SAMPLES + _mk_random()
-    df = spark.createDataFrame([(s,) for s in data], "s string")
-    rows = df.select("s", TN.segment_runs(F.col("s")).alias("runs")).collect()
-    for r in rows:
-        assert list(r.runs) == R.segment_runs(r.s), repr(r.s)
-
-
-def test_string2list_quirky_column_matches_reference(spark):
-    data = SAMPLES + _mk_random(30, seed=11)
-    df = spark.createDataFrame([(s,) for s in data], "s string")
-    rows = df.select("s", TN.string2list_reference_col(F.col("s")).alias("l")).collect()
-    for r in rows:
-        assert list(r.l) == R.string2list_reference(r.s), repr(r.s)
